@@ -11,7 +11,6 @@ doubles, round floats to 6dp before comparison/thresholding.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -911,8 +910,7 @@ def c20_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether the filter keeps it (band ≤ CE_KEEP_MAX_BAND) — the table a
     pipeline reads to pick its perplexity cutoff before committing to a
     filtered pretraining mix. Banding on the 6dp-rounded score keeps
-    the float boundary identical across engines (registered in
-    plans/registry.py's tail — round-4+ correctness window). One extra
+    the float boundary identical across engines. One extra
     tiny aggregation on top of t11's two scans + vocab broadcast."""
     scored = text.unigram_lm_score(
         _docs(spark, sf_dir), F.col("text"), F.col("doc_id")
@@ -7005,53 +7003,3 @@ def _hamming_topk_oracle() -> str:
 
 _ORACLES["s25_hamming_topk"] = _hamming_topk_oracle()
 
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "t01_token_stats": t01_token_stats,
-        "t02_quality_score": t02_quality_score,
-        "t03_lang_id": t03_lang_id,
-        "t04_fingerprint": t04_fingerprint,
-        "d01_exact_dedup": d01_exact_dedup,
-        "d02_fingerprint_dedup": d02_fingerprint_dedup,
-        "d03_ngram_jaccard_pairs": d03_ngram_jaccard_pairs,
-        "d04_minhash_lsh_pairs": d04_minhash_lsh_pairs,
-        "d05_simhash": d05_simhash,
-        "d09_simhash_band_pairs": d09_simhash_band_pairs,
-        "k01_kmeans_clusters": k01_kmeans_clusters,
-        "c06_token_budget": c06_token_budget,
-        "c07_eval_sample": c07_eval_sample,
-        "t11_unigram_lm": t11_unigram_lm,
-        "d06_embed_cosine_pairs": d06_embed_cosine_pairs,
-        "d07_dup_clusters": d07_dup_clusters,
-        "c01_corpus_clean": c01_corpus_clean,
-        "s01_cosine_topk": s01_cosine_topk,
-        "s02_lsh_topk": s02_lsh_topk,
-        "s03_label_topk_pairs": s03_label_topk_pairs,
-        "s04_norm_zscore": s04_norm_zscore,
-        "s05_ivf_topk": s05_ivf_topk,
-        "s06_vector_norms": s06_vector_norms,
-        "t05_bpe_tokens": t05_bpe_tokens,
-        "t06_pii_scrub": t06_pii_scrub,
-        "t07_vocab_df": t07_vocab_df,
-        "t08_tfidf": t08_tfidf,
-        "t09_repetition": t09_repetition,
-        "t10_tokenize_udtf": t10_tokenize_udtf,
-        "s07_label_median_norm": s07_label_median_norm,
-        "d08_decontaminate": d08_decontaminate,
-        "c02_corpus_mix": c02_corpus_mix,
-        "c03_split_assign": c03_split_assign,
-        "c04_chunk_pack": c04_chunk_pack,
-        "c05_greedy_pack": c05_greedy_pack,
-        "m01_binary_meta": m01_binary_meta,
-        "m02_fake_image_features": m02_fake_image_features,
-        "m03_frame_samples": m03_frame_samples,
-        "m04_fake_resize": m04_fake_resize,
-        "m10_png_decode": m10_png_decode,
-        "m15_jpeg_decode": m15_jpeg_decode,
-        "m11_wav_decode": m11_wav_decode,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLES)

@@ -8691,14 +8691,6 @@ _ORACLES["q64_sorted_neighborhood"] = """
 """
 
 
-# Every entry with a GREEN driver CORRECTNESS row so far (r01 ∪ r02,
-# rows+schema+hash all true). queries() orders never-verified entries
-# FIRST, so the driver's 50-slot correctness window rotates onto fresh
-# entries each round with no manual re-sorting. Maintenance per round:
-# append the newly green names from CORRECTNESS_r{N}.json. Red/errored
-# rows stay OUT of this set so they are automatically re-checked
-# (c04_chunk_pack: r02 hash red from oracle HUGEINT typing, fixed in
-# round 3 — kept out so it leads the r3 window).
 def _roundtrip_fidelity_agg(back: DataFrame) -> DataFrame:
     """Group-level fidelity digest after a format round-trip: counts,
     exact integer sums, and the min md5 of the round-tripped text — any
@@ -12260,529 +12252,31 @@ _ORACLES["v20_freshness_lag"] = """
 """
 
 
-# --- Driver-verified set: DERIVED, not hand-maintained ---------------------
+# --- Entry list: the oracle tables ----------------------------------------
 #
-# Rounds 3, 4, and 5 each ended with the same procedural red: the driver
-# writes CORRECTNESS_r{N}.json AFTER the round's final commit, so a
-# hand-maintained literal of green names was always one window behind and
-# the sentry test failed on the end-of-round tree. The set is therefore
-# derived at import time from the repo-root CORRECTNESS_r*.json files
-# themselves (VERDICT r5 item 1): a name is verified iff its MOST RECENT
-# driver row is all-green. Later rounds win, so a red that was re-run
-# green counts as green, and a green that later regressed red is
-# automatically re-queued for the next window.
+# Each entry is declared once: a builder function and its _ORACLES row in
+# the same module, keyed by the builder's name. queries() resolves the
+# oracle tables (llm_registry's, then this module's) to builders, so a row
+# without a builder raises on the first queries() call.
 #
-# Only the holdout set stays hand-maintained: entries whose semantics or
-# oracle changed since their last green driver row, so the driver must
-# re-verify them even though an old green row exists. (Round 5 used this
-# for the q09a/q24a/r02 composed-oracle re-verification; all three came
-# back green in CORRECTNESS_r05.json. Round 7 held out st04/st05/st06
-# after the DST wall-time rework; CORRECTNESS_r07.json re-verified all
-# three green, so round 8 starts with the holdout set empty.)
-#
-# Round-8 optimization pass held out the 19 plan-changed entries
-# (ts06/j06 bucketed kernels, g07 subtree fold, m10/m15 id-balance,
-# balance_scan substrate users, band-table materialization users);
-# CORRECTNESS_r08.json re-verified every one green (rows + schema +
-# hash), so round 9 starts with the holdout set empty again.  Entries
-# this round's optimizations plan-change are added below as they land.
-#
-# Round-9 optimization pass: balance_scan applied to four more
-# single-task kernels (t04 fingerprint md5 kernel, s14 brute-force
-# scorer, d27 window build, r04 CMS cell kernel) — +1 conditional
-# round-robin exchange each, semantics and oracles untouched,
-# parity-green at sf0.01 AND sf0.1; held out for driver
-# re-verification per the sync_green_shapes discipline.
-_DRIVER_HOLDOUTS: frozenset[str] = frozenset(
-    {
-        "t04_fingerprint",
-        "s14_knn_classify",
-        "d27_dup_span_extents",
-        "r04_cms_rollup",
-    }
-)
-
-
-def _load_driver_verified() -> frozenset[str]:
-    """Union of latest-round all-green driver rows, minus holdouts."""
-    import glob
-    import json
-    import os
-
-    import re
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    status: dict[str, bool] = {}
-
-    def _round_no(path: str) -> int:
-        # sort by PARSED round number, not lexicographically — an
-        # unpadded or 3-digit round file (r6, r100) would otherwise
-        # misorder and let a stale row win the latest-wins merge
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    paths = sorted(
-        glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")), key=_round_no
-    )
-    for path in paths:
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError) as exc:
-            # a CORRECTNESS file that exists but cannot be parsed means
-            # the verification state is UNKNOWN, not absent — skipping
-            # silently would revert every name in it to the previous
-            # round's greens and run the driver window on stale state
-            # (the stricter test-side parser would crash instead, so
-            # the drift would surface only when the suite runs). Warn
-            # loudly but keep importing: a partially-written file
-            # mid-driver-run must not brick the registry import.
-            import warnings
-
-            warnings.warn(
-                f"driver-verification file {path!r} exists but could "
-                f"not be parsed ({exc}); treating its rows as unknown "
-                "— window ordering may run on stale verification state",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle":
-                # historical rows-only gate (retired in round 5): the
-                # driver recorded spark_rows and compared nothing else
-                ok = row.get("spark_rows") is not None
-            else:
-                ok = (
-                    row.get("err") is None
-                    and bool(row.get("rows_match"))
-                    and row.get("schema_match") is not False
-                    and row.get("hash_match") is not False
-                )
-            status[name] = ok  # files sort by round: latest row wins
-    return frozenset(n for n, ok in status.items() if ok) - _DRIVER_HOLDOUTS
-
-
-_DRIVER_VERIFIED = _load_driver_verified()
-
-# Round-8 window stacking (VERDICT r7 item 1): cumulative driver
-# coverage after round 7 is 340/364, every latest row green. Exactly
-# 24 registry entries have NEVER been driver-sampled: the text-audit
-# quartet (round-7's deliberate overflow — ADVICE r7 committed them to
-# lead this round) plus the q59-q99 plain-aggregate relational tail.
-# 24 < 50 slots, so this window clears the backlog and round 8 reaches
-# cumulative 366/366 (the two new http_json faces, appended at the
-# tail below, ride the same window). The quartet leads (richest
-# oracles: banded vocab
-# histograms, template mining, OOV joins, per-source keyword ranks);
-# the relational tail follows in registration order. Names already
-# verified are filtered out harmlessly; any remaining slots fall back
-# to registration order (there are none — the pool IS the backlog).
-_WINDOW_PRIORITY = (
-    # round-7 overflow quartet — leads the round (ADVICE r7 item 1)
-    "t21_vocab_bands", "t22_template_prefixes", "t23_oov_rate",
-    "t30_source_keywords",
-    # never-sampled relational tail, registration order
-    "q59_unpivot", "q61_rfm_segments", "q62_trailing_hour_window",
-    "q65_decile_lift", "q66_mom_growth", "q67_dow_profile",
-    "q68_revenue_concentration", "q69_trade_matrix", "q70_market_share",
-    "q71_shipping_priority", "q72_top5_plus_other",
-    "q74_new_vs_returning", "q77_abc_classification",
-    "q78_discount_revenue", "q79_profit_by_nation", "q80_top_supplier",
-    "q81_disjunctive_filter", "q82_lines_per_order",
-    "q85_churned_customers", "q99_revenue_deciles",
-    # round-8 new faces: S1 as a registered Python DataSource
-    "src13_http_batch_source", "st11_http_source_equiv",
-)
+# The driver's correctness harness checks the FIRST 50 entries of queries()
+# in iteration order. _DRIVER_HOLDOUTS names entries whose plan or oracle
+# changed since their last green driver row; they lead queries() so the
+# driver re-verifies them. Add a name when its plan changes; drop it once
+# its driver row is green again, then rerun scripts/sync_green_shapes.py.
+# tests/test_registry_order.py checks both directions.
+_DRIVER_HOLDOUTS: tuple[str, ...] = ()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from mbta_etl_spark.plans import llm_registry
 
-    # ORDER MATTERS: the driver's differential-correctness harness checks
-    # the first 50 entries in dict iteration order. Entries are registered
-    # in a stable order below, then reordered so every name NOT in
-    # _DRIVER_VERIFIED comes first (preserving registration order within
-    # each group). The front 50 of the unverified pool form this round's
-    # window; tests/test_registry_order.py pins the invariant.
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(llm_registry.queries())
-    out.update(
-        {
-            "j02_range_attribution": j02_range_attribution,
-            "j03_customers_no_orders": j03_customers_no_orders,
-            "j04_big_spenders_semi": j04_big_spenders_semi,
-            "j05_full_outer_reconcile": j05_full_outer_reconcile,
-            # new this round
-            "r01_incremental_rollup": r01_incremental_rollup,
-            "v01_constraint_check": v01_constraint_check,
-            "v02_referential_check": v02_referential_check,
-            "v03_snapshot_diff": v03_snapshot_diff,
-            # oracle-canonicalization fixes this round
-            "q25_pivot_counts": q25_pivot_counts,
-            "q35_order_basket": q35_order_basket,
-            "q44_late_ship_priority": q44_late_ship_priority,
-            # representative r1-proven core slice
-            "q09_percentiles_exact": q09_percentiles_exact,
-            "q11_cardinal_histogram": q11_cardinal_histogram,
-            "q14_upsert_latest": q14_upsert_latest,
-            "q16_pricing_summary": q16_pricing_summary,
-            "q17_top_customers": q17_top_customers,
-            "q30_regional_revenue": q30_regional_revenue,
-            "q33_moving_avg": q33_moving_avg,
-            "q38_salted_agg": q38_salted_agg,
-            "q46_column_profile": q46_column_profile,
-            "j01_asof_attribution": j01_asof_attribution,
-            # r1-proven tail (all green in CORRECTNESS_r01.json)
-            "q01_top10_by_value": q01_top10_by_value,
-            "q02_prefix_classify": q02_prefix_classify,
-            "q03_class_breakdown": q03_class_breakdown,
-            "q04_global_stats": q04_global_stats,
-            "q05_status_counts": q05_status_counts,
-            "q06_share_pct": q06_share_pct,
-            "q07_orderstatus_counts": q07_orderstatus_counts,
-            "q08_threshold_split": q08_threshold_split,
-            "q09a_percentiles_approx": q09a_percentiles_approx,
-            "q10_between_filter": q10_between_filter,
-            "q12_count": q12_count,
-            "q13_point_lookup": q13_point_lookup,
-            "q15_hourly_rollup": q15_hourly_rollup,
-            "q18_sessionization": q18_sessionization,
-            "q19_running_totals": q19_running_totals,
-            "q20_priority_rollup": q20_priority_rollup,
-            "q21_status_set_ops": q21_status_set_ops,
-            "q22_segment_revenue": q22_segment_revenue,
-            "q23_json_extract": q23_json_extract,
-            "q18a_session_windows": q18a_session_windows,
-            "q26_stratified_sample": q26_stratified_sample,
-            "q27_cube_breakdown": q27_cube_breakdown,
-            "q24_distinct_counts": q24_distinct_counts,
-            "q24a_distinct_approx": q24a_distinct_approx,
-            "q28_corr_stats": q28_corr_stats,
-            "q29_value_histogram": q29_value_histogram,
-            "q31_topn_per_group": q31_topn_per_group,
-            "q32_order_max_item": q32_order_max_item,
-            "q34_gap_fill_days": q34_gap_fill_days,
-            "q36_grouping_sets": q36_grouping_sets,
-            "q37_value_quartiles": q37_value_quartiles,
-            "q39_custdist": q39_custdist,
-            "q40_large_orders": q40_large_orders,
-            "q41_union_tag": q41_union_tag,
-            "q42_user_journey": q42_user_journey,
-            "q43_promo_share": q43_promo_share,
-            "q45_idle_rich_customers": q45_idle_rich_customers,
-            "j06_cogroup_funnel": j06_cogroup_funnel,
-            "q47_variant_extract": q47_variant_extract,
-            "v04_apply_changelog": v04_apply_changelog,
-            "ts01_locf": ts01_locf,
-            "ts02_delta_rate": ts02_delta_rate,
-            "ts03_interpolate": ts03_interpolate,
-            "ts04_rolling_zscore": ts04_rolling_zscore,
-            "ts05_bucket_gapfill": ts05_bucket_gapfill,
-            "ts06_ewma": ts06_ewma,
-            "j07_salted_join": j07_salted_join,
-            "q48_analytic_battery": q48_analytic_battery,
-            # registered in the tail, NOT in llm_registry.queries(),
-            # so the r2 correctness window keeps its 50 planned slots
-            "d10_ngram_containment": llm_registry.d10_ngram_containment,
-            "m05_phash_dupes": llm_registry.m05_phash_dupes,
-            "c10_temperature_mix": c10_temperature_mix,
-            "v05_quarantine_split": v05_quarantine_split,
-            "d11_incremental_dedup": llm_registry.d11_incremental_dedup,
-            "j08_interval_overlap": j08_interval_overlap,
-            "t12_boilerplate_frac": llm_registry.t12_boilerplate_frac,
-            "s08_multi_query_topk": llm_registry.s08_multi_query_topk,
-            "r02_sketch_rollup": r02_sketch_rollup,
-            "q49_fuzzy_join": q49_fuzzy_join,
-            "t13_zipf_spectrum": llm_registry.t13_zipf_spectrum,
-            "q50_bag_set_ops": q50_bag_set_ops,
-            "c12_curriculum_shards": llm_registry.c12_curriculum_shards,
-            "ts07_downsample": ts07_downsample,
-            "ts08_minmax_norm": ts08_minmax_norm,
-            "ts09_gap_detect": ts09_gap_detect,
-            "ts10_locf_ttl": ts10_locf_ttl,
-            "j09_nearest_event": j09_nearest_event,
-            "d12_normalized_dedup": llm_registry.d12_normalized_dedup,
-            "q52_topk_with_ties": q52_topk_with_ties,
-            "q53_rolling_distinct": q53_rolling_distinct,
-            "c08_weighted_sample": c08_weighted_sample,
-            "q51_retention_cohorts": q51_retention_cohorts,
-            "q54_pair_cooccurrence": q54_pair_cooccurrence,
-            "q55_transition_matrix": q55_transition_matrix,
-            "q56_funnel_conversion": q56_funnel_conversion,
-            "v06_profile_drift": v06_profile_drift,
-            "t14_bigram_lift": llm_registry.t14_bigram_lift,
-            "q57_mad_outliers": q57_mad_outliers,
-            "j10_scd2_intervals": j10_scd2_intervals,
-            "s09_mmr_rerank": llm_registry.s09_mmr_rerank,
-            "q58_activity_streaks": q58_activity_streaks,
-            "d13_lsh_recall_audit": llm_registry.d13_lsh_recall_audit,
-            "ts11_mase": ts11_mase,
-            "m06_sniff_router": llm_registry.m06_sniff_router,
-            "ts12_ohlc": ts12_ohlc,
-            "v07_benford": v07_benford,
-            "q59_unpivot": q59_unpivot,
-            "t15_js_divergence": llm_registry.t15_js_divergence,
-            "s10_int8_quant": llm_registry.s10_int8_quant,
-            "q60_percentile_battery": q60_percentile_battery,
-            "g01_pagerank": g01_pagerank,
-            "s11_ivf_recall_audit": llm_registry.s11_ivf_recall_audit,
-            "t16_corpus_entropy": llm_registry.t16_corpus_entropy,
-            "t17_langid_confusion": llm_registry.t17_langid_confusion,
-            "v08_fd_audit": v08_fd_audit,
-            "j11_scd2_enrich": j11_scd2_enrich,
-            "q61_rfm_segments": q61_rfm_segments,
-            "m07_audio_features": llm_registry.m07_audio_features,
-            "q62_trailing_hour_window": q62_trailing_hour_window,
-            "k02_cluster_profile": llm_registry.k02_cluster_profile,
-            "c13_pack_efficiency": llm_registry.c13_pack_efficiency,
-            "ts13_cusum": ts13_cusum,
-            "g02_triangles": g02_triangles,
-            "q64_sorted_neighborhood": q64_sorted_neighborhood,
-            "t18_heavy_hitter_tokens": llm_registry.t18_heavy_hitter_tokens,
-            "t19_readability": llm_registry.t19_readability,
-            "s12_dim_stats": llm_registry.s12_dim_stats,
-            "ts14_holt_linear": ts14_holt_linear,
-            "v09_welch_ttest": v09_welch_ttest,
-            "q65_decile_lift": q65_decile_lift,
-            "v10_rule_census": v10_rule_census,
-            "s13_matryoshka_audit": s13_matryoshka_audit,
-            "q66_mom_growth": q66_mom_growth,
-            "j12_linear_attribution": j12_linear_attribution,
-            "q67_dow_profile": q67_dow_profile,
-            "q68_revenue_concentration": q68_revenue_concentration,
-            "c14_dataset_card": c14_dataset_card,
-            "q69_trade_matrix": q69_trade_matrix,
-            "q70_market_share": q70_market_share,
-            "q71_shipping_priority": q71_shipping_priority,
-            "d14_lsh_scurve": d14_lsh_scurve,
-            "ts15_seasonal_decompose": ts15_seasonal_decompose,
-            "v11_warehouse_scorecard": v11_warehouse_scorecard,
-            "d15_dup_by_source": d15_dup_by_source,
-            "ts16_acf": ts16_acf,
-            "c15_split_leakage_audit": llm_registry.c15_split_leakage_audit,
-            "s14_knn_classify": llm_registry.s14_knn_classify,
-            "q72_top5_plus_other": q72_top5_plus_other,
-            "ts17_twap": ts17_twap,
-            "d16_minhash_est_audit": llm_registry.d16_minhash_est_audit,
-            # s15_pca_eigen retired from the registry (VERDICT r4 item
-            # 3): it was the last rows-only entry with no oracle path;
-            # s15a_pca_invariants hash-verifies the same distributed
-            # Gram pass + driver eigh via the spectrum invariants. The
-            # operator and its unit/property tests remain.
-            "s15a_pca_invariants": llm_registry.s15a_pca_invariants,
-            "q73_semi_additive": q73_semi_additive,
-            "q74_new_vs_returning": q74_new_vs_returning,
-            "q75_trimmed_mean": q75_trimmed_mean,
-            "q76_cumulative_uniques": q76_cumulative_uniques,
-            "q77_abc_classification": q77_abc_classification,
-            "d17_dup_size_histogram": d17_dup_size_histogram,
-            "m08_modality_census": llm_registry.m08_modality_census,
-            "v12_header_line_reconcile": v12_header_line_reconcile,
-            "c16_batch_interleave": c16_batch_interleave,
-            "g03_degree_reciprocity": g03_degree_reciprocity,
-            "ts18_uptime_sla": ts18_uptime_sla,
-            "q78_discount_revenue": q78_discount_revenue,
-            "q79_profit_by_nation": q79_profit_by_nation,
-            "q80_top_supplier": q80_top_supplier,
-            "q81_disjunctive_filter": q81_disjunctive_filter,
-            "v13_ks_test": v13_ks_test,
-            "d18_jaccard_threshold_sweep": llm_registry.d18_jaccard_threshold_sweep,
-            "ts19_max_drawdown": ts19_max_drawdown,
-            "d19_cross_source_dups": d19_cross_source_dups,
-            "t20_tokenizer_fertility": llm_registry.t20_tokenizer_fertility,
-            "q82_lines_per_order": q82_lines_per_order,
-            "s16_centroid_separation": llm_registry.s16_centroid_separation,
-            "q83_above_avg_groups": q83_above_avg_groups,
-            "q84_percent_of_parent": q84_percent_of_parent,
-            "d20_hamming_histogram": llm_registry.d20_hamming_histogram,
-            "j13_range_bucket_join": j13_range_bucket_join,
-            "v14_ordering_audit": v14_ordering_audit,
-            "q85_churned_customers": q85_churned_customers,
-            "t21_vocab_bands": llm_registry.t21_vocab_bands,
-            "q86_interpurchase_time": q86_interpurchase_time,
-            "d21_dedup_savings": llm_registry.d21_dedup_savings,
-            "v15_chi2_independence": v15_chi2_independence,
-            "q87_rank_change": q87_rank_change,
-            "ts20_peak_hour": ts20_peak_hour,
-            "d22_band_occupancy": llm_registry.d22_band_occupancy,
-            "t22_template_prefixes": llm_registry.t22_template_prefixes,
-            "ts21_seasonality_strength": ts21_seasonality_strength,
-            "c17_quality_length_corr": llm_registry.c17_quality_length_corr,
-            "v16_volume_anomalies": v16_volume_anomalies,
-            "s17_anisotropy": llm_registry.s17_anisotropy,
-            "c18_mixture_fidelity": llm_registry.c18_mixture_fidelity,
-            "m09_byte_entropy": llm_registry.m09_byte_entropy,
-            "q88_topk_overlap": q88_topk_overlap,
-            "d23_shingle_df_spectrum": llm_registry.d23_shingle_df_spectrum,
-            "s18_metric_agreement": llm_registry.s18_metric_agreement,
-            "v17_table_inventory": v17_table_inventory,
-            "ts22_trend_slope": ts22_trend_slope,
-            "q89_moment_battery": q89_moment_battery,
-            "q90_mean_battery": q90_mean_battery,
-            "t23_oov_rate": llm_registry.t23_oov_rate,
-            "d24_transitivity_audit": llm_registry.d24_transitivity_audit,
-            "q91_cdf_point": q91_cdf_point,
-            "ts23_daily_intensity": ts23_daily_intensity,
-            "v18_categorical_entropy": v18_categorical_entropy,
-            "ts24_wow_change": ts24_wow_change,
-            "q92_gini": q92_gini,
-            "s19_embedding_drift": llm_registry.s19_embedding_drift,
-            "c19_pipeline_funnel": llm_registry.c19_pipeline_funnel,
-            "q93_cohort_ltv": q93_cohort_ltv,
-            "q94_shuffle_balance": q94_shuffle_balance,
-            "q95_nested_topn": q95_nested_topn,
-            # round-3 additions — registered at the pool tail so the
-            # in-flight correctness window keeps its planned slots
-            "src01_jsonl_roundtrip": src01_jsonl_roundtrip,
-            "src02_partition_pruned_scan": src02_partition_pruned_scan,
-            "src03_csv_roundtrip": src03_csv_roundtrip,
-            "c20_perplexity_bands": llm_registry.c20_perplexity_bands,
-            "g04_dup_chain_depth": llm_registry.g04_dup_chain_depth,
-            "q96_sql_udf_pipeline": q96_sql_udf_pipeline,
-            "t24_bm25": llm_registry.t24_bm25,
-            "s20_hybrid_rrf": llm_registry.s20_hybrid_rrf,
-            "c21_adaptive_quality_filter": llm_registry.c21_adaptive_quality_filter,
-            "t25_ngram_novelty": llm_registry.t25_ngram_novelty,
-            "v19_vector_validity": llm_registry.v19_vector_validity,
-            "src04_zorder_layout": src04_zorder_layout,
-            "d26_semantic_dedup": llm_registry.d26_semantic_dedup,
-            "src05_bloom_runtime_filter": src05_bloom_runtime_filter,
-            "src06_bucketed_join": src06_bucketed_join,
-            "d27_dup_span_extents": llm_registry.d27_dup_span_extents,
-            "src07_compacted_layout": src07_compacted_layout,
-            "d28_canonical_selection": llm_registry.d28_canonical_selection,
-            "c22_epoch_plan": llm_registry.c22_epoch_plan,
-            "c23_shuffle_shards": llm_registry.c23_shuffle_shards,
-            "src08_schema_evolution": src08_schema_evolution,
-            "c24_epoch_materialize": llm_registry.c24_epoch_materialize,
-            "ts26_subseq_search": ts26_subseq_search,
-            "s21_ivf_persist": llm_registry.s21_ivf_persist,
-            "c25_overlap_chunks": llm_registry.c25_overlap_chunks,
-            "d29_chunk_dedup": llm_registry.d29_chunk_dedup,
-            "m12_media_shards": llm_registry.m12_media_shards,
-            "t26_bpe_merge_candidates": llm_registry.t26_bpe_merge_candidates,
-            "c26_pad_waste": llm_registry.c26_pad_waste,
-            "s22_random_projection": llm_registry.s22_random_projection,
-            "src09_incremental_manifest": src09_incremental_manifest,
-            "ts25_holt_winters": ts25_holt_winters,
-            "r03_histogram_quantile": r03_histogram_quantile,
-            "r04_cms_rollup": llm_registry.r04_cms_rollup,
-            "ts27_seasonal_anomaly": ts27_seasonal_anomaly,
-            "d30_bloom_decontam": llm_registry.d30_bloom_decontam,
-            "ts28_changepoint": ts28_changepoint,
-            "k03_silhouette": llm_registry.k03_silhouette,
-            "ts29_acf": ts29_acf,
-            "q97_retry_suppression": q97_retry_suppression,
-            "c27_dsir_importance": llm_registry.c27_dsir_importance,
-            "t27_gopher_rules": llm_registry.t27_gopher_rules,
-            "c28_doremi_weights": llm_registry.c28_doremi_weights,
-            "d31_embed_decontam": llm_registry.d31_embed_decontam,
-            "ts30_stl_decompose": ts30_stl_decompose,
-            "q98_cumulative_distinct": q98_cumulative_distinct,
-            "v20_freshness_lag": v20_freshness_lag,
-            "d32_soft_dedup": llm_registry.d32_soft_dedup,
-            "ts31_forecast_backtest": ts31_forecast_backtest,
-            "s23_pq_codebook": llm_registry.s23_pq_codebook,
-            "src10_txn_log": src10_txn_log,
-            "v21_benford_audit": v21_benford_audit,
-            "q99_revenue_deciles": q99_revenue_deciles,
-            "t28_bigram_lm": llm_registry.t28_bigram_lm,
-            "g05_co_engagement": g05_co_engagement,
-            "j14_interval_coalesce": j14_interval_coalesce,
-            "q100_mode_per_group": q100_mode_per_group,
-            "ts32_seasonality_strength": ts32_seasonality_strength,
-            "s24_pq_adc_topk": llm_registry.s24_pq_adc_topk,
-            "ts33_stl_anomaly": ts33_stl_anomaly,
-            "v22_duplicate_rows": v22_duplicate_rows,
-            "d33_method_agreement": llm_registry.d33_method_agreement,
-            "c29_length_buckets": llm_registry.c29_length_buckets,
-            "d34_dup_aware_sample": llm_registry.d34_dup_aware_sample,
-            "j15_asof_forward": j15_asof_forward,
-            "ts34_burstiness": ts34_burstiness,
-            "ts35_theil_sen": ts35_theil_sen,
-            "t30_source_keywords": llm_registry.t30_source_keywords,
-            "q101_global_running_total": q101_global_running_total,
-            "d35_pointer_doubling": llm_registry.d35_pointer_doubling,
-            "s25_hamming_topk": llm_registry.s25_hamming_topk,
-            "ts36_timedecay_smooth": ts36_timedecay_smooth,
-            "g06_kcore_census": g06_kcore_census,
-            "m13_patch_grid": llm_registry.m13_patch_grid,
-            "c30_multimodal_budget": llm_registry.c30_multimodal_budget,
-            "d36_bbit_minhash": llm_registry.d36_bbit_minhash,
-            "ts37_m4_downsample": ts37_m4_downsample,
-            "j16_orphan_conversions": j16_orphan_conversions,
-            "s26_ndcg_audit": llm_registry.s26_ndcg_audit,
-            "d37_lsh_planner": llm_registry.d37_lsh_planner,
-            "c31_pack_attention_waste": llm_registry.c31_pack_attention_waste,
-            "q102_equidepth_histogram": q102_equidepth_histogram,
-            "src11_footer_stats": src11_footer_stats,
-            "q103_price_volume_mix": q103_price_volume_mix,
-            "j17_window_funnel": j17_window_funnel,
-            "d38_removal_budget": llm_registry.d38_removal_budget,
-            "m14_arrow_byte_stats": llm_registry.m14_arrow_byte_stats,
-            "v23_observed_metrics": v23_observed_metrics,
-            "s27_filtered_ann": llm_registry.s27_filtered_ann,
-            "g07_assortativity": g07_assortativity,
-            "j18_markov_attribution": j18_markov_attribution,
-            "d39_cdc_chunking": llm_registry.d39_cdc_chunking,
-            "d40_chunker_comparison": llm_registry.d40_chunker_comparison,
-            # round-4 additions
-            "ts38_rolling_median": ts38_rolling_median,
-            "q104_compress_consecutive": q104_compress_consecutive,
-            "t31_feature_hashing": llm_registry.t31_feature_hashing,
-            "src12_orc_roundtrip": src12_orc_roundtrip,
-            "d41_winnowing_pairs": llm_registry.d41_winnowing_pairs,
-            "q105_pipe_syntax": q105_pipe_syntax,
-            # round-5 additions
-            "d42_substring_dedup": llm_registry.d42_substring_dedup,
-            "st01_stream_batch_equiv": llm_registry.st01_stream_batch_equiv,
-            "st02_stream_rollup_equiv": st02_stream_rollup_equiv,
-            "st03_stream_heavy_hitters": llm_registry.st03_stream_heavy_hitters,
-            "st04_stream_session_equiv": st04_stream_session_equiv,
-            # round-6 additions
-            "st05_stream_stream_join_equiv": st05_stream_stream_join_equiv,
-            "st06_stream_outer_join_equiv": st06_stream_outer_join_equiv,
-            # round-7 additions: custom-stateful, dedup-within-
-            # watermark, and stream-static-enrich faces
-            "st07_stateful_profile_equiv": st07_stateful_profile_equiv,
-            "st08_stream_dedup_equiv": st08_stream_dedup_equiv,
-            "st09_stream_enrich_equiv": st09_stream_enrich_equiv,
-            "st10_transform_with_state_equiv":
-                st10_transform_with_state_equiv,
-            # round-8 additions: S1 as a registered Spark 4 Python
-            # DataSource (batch + streaming faces)
-            "src13_http_batch_source": src13_http_batch_source,
-            "st11_http_source_equiv": st11_http_source_equiv,
-        }
-    )
-    # Rotate: never-driver-verified entries first (window-priority names
-    # ahead, then stable registration order), so the driver's first-50
-    # window always lands on entries that still need an independent row —
-    # and, within those, on the riskiest ones first.
-    prio = [
-        k for k in _WINDOW_PRIORITY
-        if k in out and k not in _DRIVER_VERIFIED
-    ]
-    prio_set = set(prio)
-    ordered = [
-        *prio,
-        *(k for k in out
-          if k not in _DRIVER_VERIFIED and k not in prio_set),
-        *(k for k in out if k in _DRIVER_VERIFIED),
-    ]
-    return {k: out[k] for k in ordered}
+    out = {name: getattr(llm_registry, name) for name in llm_registry._ORACLES}
+    out.update((name, globals()[name]) for name in _ORACLES)
+    return {**{name: out[name] for name in _DRIVER_HOLDOUTS}, **out}
 
 
 def oracle_sql() -> dict[str, str]:
     from mbta_etl_spark.plans import llm_registry
 
-    out = dict(_ORACLES)
-    out.update(llm_registry.oracle_sql())
-    return out
+    return {**_ORACLES, **llm_registry._ORACLES}

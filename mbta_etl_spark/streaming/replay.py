@@ -188,19 +188,19 @@ def open_replay_stream(
     )
 
 
-def _dir_bytes(*paths: str) -> int:
-    """Total file bytes under the given directories (driver-side
-    metadata walk — the landed replay logs are O(n_batches) files)."""
-    import os
-
+def _dir_bytes(spark, *paths: str) -> int:
+    """Total file bytes under the given paths, through the session's
+    Hadoop FileSystem so ``file:``, ``hdfs:`` and bare paths take one
+    code path (``os.walk`` reads 0 bytes on a URI). A missing path
+    counts 0."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
     total = 0
     for p in paths:
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
+        path = jvm.org.apache.hadoop.fs.Path(p)
+        fs = path.getFileSystem(conf)
+        if fs.exists(path):
+            total += fs.getContentSummary(path).getLength()
     return total
 
 
@@ -270,7 +270,7 @@ def pinned_stream_parallelism(spark, n: int = 8, input_dirs=None):
 
     if input_dirs:
         session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        derived = -(-_dir_bytes(*input_dirs) // _PIN_ADVISORY_BYTES)
+        derived = -(-_dir_bytes(spark, *input_dirs) // _PIN_ADVISORY_BYTES)
         n = max(n, min(derived, session_n))
     n = int(os.environ.get("SPARK_GRAFT_STREAM_PIN", n))
     old = spark.conf.get("spark.sql.shuffle.partitions")

@@ -1,32 +1,24 @@
 #!/usr/bin/env python3
-"""Record the plan-shape fingerprint each DRIVER-VERIFIED entry had
-when its verification was current, into driver_green_shapes.json.
+"""Record the plan-shape fingerprint of every registered entry that is
+not held out (``registry._DRIVER_HOLDOUTS``) into driver_green_shapes.json.
 
-This mechanizes the `_DRIVER_HOLDOUTS` invariant (VERDICT r6 item 4):
 tests/test_registry_order.py::test_verified_entries_plan_shapes_frozen
-fails whenever a driver-verified entry's live fingerprint in
-plans_snapshot.json no longer matches its recorded green shape —
-forcing the developer to either revert the plan change or move the
-name into registry._DRIVER_HOLDOUTS so the driver re-verifies it.
-Previously that move was pure discipline; now forgetting it is a red
-suite.
+fails whenever such an entry's live fingerprint in plans_snapshot.json no
+longer matches its recorded shape — forcing the developer to either
+revert the plan change or move the name into _DRIVER_HOLDOUTS so the
+driver re-verifies it.
 
-WHEN to run this script — only at the two moments the live tree is
-known to be plan-identical to what the driver verified:
-
-1. Round start, right after the driver writes CORRECTNESS_r{N}.json
-   (the tree is exactly what it ran), typically together with removing
-   re-verified names from _DRIVER_HOLDOUTS.
-2. Never mid-round after editing a verified entry's plan: that would
-   launder the change past the gate. The gate exists to make that
-   mistake loud, not to be re-synced around.
+Run this script only right after a driver run has written
+CORRECTNESS_r{N}.json, when the live tree is exactly what the driver
+verified, typically together with clearing re-verified names from
+_DRIVER_HOLDOUTS. Never run it after editing a verified entry's plan:
+that would launder the change past the gate.
 
 Known limitation (inherited from the fingerprint itself): streaming
 equivalence entries execute their replay inside the entry, so their
 fingerprint is only the standing-table read-back — a semantic change
 there does not move the fingerprint, and holding those out stays a
-review-discipline matter (the round-7 st05/st06 holdout was added by
-hand for exactly that reason).
+review-discipline matter.
 
 Review the diff before committing: every row change should correspond
 to a name that just gained (or refreshed) a green driver row.
@@ -44,41 +36,22 @@ SNAPSHOT_PATH = os.path.join(REPO, "plans_snapshot.json")
 GREEN_PATH = os.path.join(REPO, "driver_green_shapes.json")
 
 
-def _latest_correctness_round() -> int:
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for fn in os.listdir(REPO)
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json$", fn))
-    ]
-    return max(rounds) if rounds else -1
-
-
 def main() -> None:
-    from mbta_etl_spark.plans.registry import _DRIVER_VERIFIED
+    from mbta_etl_spark.plans.registry import _DRIVER_HOLDOUTS, queries
 
     with open(SNAPSHOT_PATH) as f:
         snapshot = json.load(f)
-    missing = sorted(n for n in _DRIVER_VERIFIED if n not in snapshot)
+    names = sorted(set(queries()) - set(_DRIVER_HOLDOUTS))
+    missing = [n for n in names if n not in snapshot]
     if missing:
         raise SystemExit(
-            f"verified entries missing from plans_snapshot.json: {missing} "
+            f"registered entries missing from plans_snapshot.json: {missing} "
             "— run scripts/plan_snapshot.py first"
         )
-    green = {n: snapshot[n] for n in sorted(_DRIVER_VERIFIED)}
-    # Record which driver round this sync has folded in, so the freeze
-    # gate's missing-row tolerance stays scoped to rounds NEWER than the
-    # sync instead of blanket-exempting every name first verified by the
-    # latest file for the whole following round (ADVICE r7 item 4).
-    green["_synced_through"] = _latest_correctness_round()
     with open(GREEN_PATH, "w") as f:
-        json.dump(green, f, indent=1, sort_keys=True)
+        json.dump({n: snapshot[n] for n in names}, f, indent=1, sort_keys=True)
         f.write("\n")
-    print(
-        f"recorded {len(green) - 1} green plan shapes to {GREEN_PATH} "
-        f"(synced through round {green['_synced_through']})"
-    )
+    print(f"recorded {len(names)} green plan shapes to {GREEN_PATH}")
 
 
 if __name__ == "__main__":

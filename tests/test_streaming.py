@@ -1152,3 +1152,30 @@ def test_stream_exact_dedup_equiv_split_invariant(spark, tmp_path):
             ).collect()
         }
         assert got == batch, f"divergence at n_batches={n}"
+
+
+def test_dir_bytes_reads_uri_paths(spark, tmp_path, monkeypatch):
+    """The data-derived stream pin sizes from the landed bytes through
+    Hadoop's FileSystem: a ``file://`` URI (the shape a DFS scratch dir
+    takes) reads the same bytes as a bare path, where an ``os.walk``
+    read 0 and left the pin at its floor. A missing path counts 0."""
+    from mbta_etl_spark.streaming import replay
+
+    sizes = {"a/part-0.json": 1000, "a/part-1.json": 234, "b/x.json": 66}
+    for rel, n in sizes.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"x" * n)
+    uri = "file://" + str(tmp_path)
+    assert replay._dir_bytes(spark, uri) == sum(sizes.values())
+    assert replay._dir_bytes(spark, str(tmp_path / "a"), uri + "/b") == 1300
+    assert replay._dir_bytes(spark, uri + "/missing") == 0
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PIN", raising=False)
+    monkeypatch.setattr(replay, "_PIN_ADVISORY_BYTES", 100)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        with replay.pinned_stream_parallelism(spark, 2, input_dirs=[uri]):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
