@@ -2450,7 +2450,7 @@ def src13_http_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 as a REGISTERED Spark 4 Python DataSource, batch face
     (VERDICT r7 item 7): ``spark.read.format("http_json")`` over 4
     snapshot URLs — one InputPartition per URL, each fetched ON an
-    executor (sources/http_datasource.py), schema-projected like
+    executor (sources/http_json.py), schema-projected like
     json.Unmarshal (unknown envelope/attribute fields in the landed
     documents must vanish), flattened through the S1 cast boundary.
     The plan is a clean ``BatchScan http_json (Python)`` under a
@@ -2458,7 +2458,7 @@ def src13_http_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     this face IS the archive backfill: N snapshot URLs scan
     N-way-parallel with no driver bottleneck. Oracle: the same
     every-50th slice of events."""
-    from mbta_etl_spark.sources.http_datasource import register_http_json
+    from mbta_etl_spark.sources.http_json import register_http_json
 
     register_http_json(spark)
     urls, _ = _land_event_snapshots(spark, sf_dir, 4, "src13")
@@ -2475,7 +2475,7 @@ def st11_http_source_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 as a registered Python DataSource, STREAMING face — the
     eleventh streaming equivalence: ``spark.readStream.format(
     "http_json")`` in deterministic replay mode polls one landed
-    snapshot URL per micro-batch (sources/http_datasource.py's
+    snapshot URL per micro-batch (sources/http_json.py's
     SimpleDataSourceStreamReader — driver-side read, the variant built
     for exactly this snapshot-sized input rate), flattens through the
     same S1 cast boundary, and appends via the per-batch_id overwrite
@@ -2492,7 +2492,7 @@ def st11_http_source_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_http_datasource.py."""
     import os
 
-    from mbta_etl_spark.sources.http_datasource import (
+    from mbta_etl_spark.sources.http_json import (
         drain_poll_replay,
         register_http_json,
     )

@@ -1,6 +1,6 @@
 """A custom SINK via the Python DataSource API (Spark 4) — the write
-side of the connector surface (``sources/vehicles_source.py`` covers
-the read + streaming-offsets side).
+side of the connector surface (``sources/http_json.py`` covers the
+read + streaming-offsets side).
 
 Protocol demonstrated end-to-end: each task's ``write(iterator)``
 streams its partition to a uniquely-named JSONL shard and returns a

@@ -1,5 +1,5 @@
 """S1 as a registered Spark 4 Python DataSource
-(mbta_etl_spark/sources/http_datasource.py) — batch + streaming faces,
+(mbta_etl_spark/sources/http_json.py) — batch + streaming faces,
 json.Unmarshal projection semantics, and the reference's abort-the-run
 error contract (pipeline/extract.go:18-30, main_test.go:72-108) over a
 REAL localhost HTTP server."""
@@ -12,9 +12,11 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 
-from mbta_etl_spark.sources.http_datasource import (
+from mbta_etl_spark.pipeline.transform import transform
+from mbta_etl_spark.sources.http_json import (
+    ExtractError,
     HttpJsonDataSource,
-    _project,
+    _projector,
     drain_poll_replay,
     register_http_json,
 )
@@ -95,7 +97,7 @@ def http_server():
     server.shutdown()
 
 
-# --- _project: json.Unmarshal semantics --------------------------------
+# --- _projector: json.Unmarshal semantics ------------------------------
 
 
 def test_project_drops_unknown_and_nulls_missing():
@@ -108,34 +110,34 @@ def test_project_drops_unknown_and_nulls_missing():
             ),
         ]
     )
-    row = _project({"a": 7, "unknown": 1, "nest": {"x": 2, "y": 3}}, schema)
+    row = _projector(schema)({"a": 7, "unknown": 1, "nest": {"x": 2, "y": 3}})
     assert row == (7, None, (2.0,))
 
 
 def test_project_numeric_coercion_and_conflicts():
     from pyspark.sql.types import IntegerType, MapType
 
-    assert _project(3, DoubleType()) == 3.0
-    assert _project(3.0, LongType()) == 3
-    assert _project([1, 2], ArrayType(LongType())) == [1, 2]
-    assert _project({"k": 1}, MapType(StringType(), LongType())) == {"k": 1}
-    with pytest.raises(ValueError):
-        _project(3.5, LongType())  # non-integral into integer
-    with pytest.raises(ValueError):
-        _project(True, LongType())  # JSON bool is not a number
-    with pytest.raises(ValueError):
-        _project("7", LongType())  # no silent string->int
-    with pytest.raises(ValueError):
-        _project(7, StringType())
+    assert _projector(DoubleType())(3) == 3.0
+    assert _projector(LongType())(3.0) == 3
+    assert _projector(ArrayType(LongType()))([1, 2]) == [1, 2]
+    assert _projector(MapType(StringType(), LongType()))({"k": 1}) == {"k": 1}
+    with pytest.raises(ExtractError):
+        _projector(LongType())(3.5)  # non-integral into integer
+    with pytest.raises(ExtractError):
+        _projector(LongType())(True)  # JSON bool is not a number
+    with pytest.raises(ExtractError):
+        _projector(LongType())("7")  # no silent string->int
+    with pytest.raises(ExtractError):
+        _projector(StringType())(7)
     # declared-width overflow aborts like Go json.Unmarshal
-    assert _project(2**31 - 1, IntegerType()) == 2**31 - 1
-    with pytest.raises(ValueError, match="overflow"):
-        _project(2**40, IntegerType())
-    with pytest.raises(ValueError, match="overflow"):
-        _project(-(2**31) - 1, IntegerType())
+    assert _projector(IntegerType())(2**31 - 1) == 2**31 - 1
+    with pytest.raises(ExtractError, match="overflow"):
+        _projector(IntegerType())(2**40)
+    with pytest.raises(ExtractError, match="overflow"):
+        _projector(IntegerType())(-(2**31) - 1)
     # JSON keys are strings: a non-string keyType is unsatisfiable
-    with pytest.raises(ValueError, match="map keys"):
-        _project({"1": 2}, MapType(LongType(), LongType()))
+    with pytest.raises(ExtractError, match="map keys"):
+        _projector(MapType(LongType(), LongType()))({"1": 2})
 
 
 # --- batch face ---------------------------------------------------------
@@ -166,18 +168,39 @@ def test_batch_default_schema_is_vehicle_envelope(spark, tmp_path):
                 "id": "v1",
                 "type": "vehicle",
                 "attributes": {"label": "1822", "speed": 4.5},
-            }
+            },
+            {
+                "id": "v2",
+                "type": "vehicle",
+                "attributes": {
+                    "updated_at": "2024-01-15T10:31:00-05:00",
+                    "speed": None,
+                    "occupancy_status": "",
+                    "longitude": -71.0,
+                    "latitude": 42.0,
+                    "label": "77",
+                    "direction_id": 1,
+                    "current_status": "STOPPED_AT",
+                    "bearing": None,
+                },
+            },
         ]
     }
     p = tmp_path / "veh.json"
     p.write_text(json.dumps(doc))
-    df = (
+    raw = (
         spark.read.format("http_json").option("url", f"file://{p}").load()
     )
-    row = df.collect()[0]
-    assert row.id == "v1" and row.attributes.label == "1822"
+    row = next(r for r in raw.collect() if r.id == "v1")
+    assert row.attributes.label == "1822"
     assert row.attributes.speed == 4.5
     assert row.attributes.bearing is None  # missing -> nil, like Go
+
+    # the source composes with the reference transform chain (T1-T7)
+    out = {r["id"]: r for r in transform(raw).collect()}
+    assert out["v2"]["speed"] == 0.0  # null-default (T3)
+    assert out["v2"]["bearing"] == 0  # null-default (T4)
+    assert out["v2"]["occupancy_status"] == "UNKNOWN"  # ''->UNKNOWN (T5)
 
 
 def test_null_data_element_decodes_to_all_null_row(spark, tmp_path):
@@ -220,16 +243,18 @@ def test_batch_real_http_and_abort_on_500(spark, http_server):
 
 def test_batch_abort_on_malformed_json(spark, http_server):
     register_http_json(spark)
-    _CannedHandler.script = [(200, "{not json")]
-    _CannedHandler.hits = []
     df = (
         spark.read.format("http_json")
         .schema(DDL)
         .option("url", http_server)
         .load()
     )
-    with pytest.raises(Exception, match="(?i)json"):
-        df.collect()
+    # malformed JSON, then a well-formed body with no JSON:API envelope
+    for body, match in (("{not json", "parse JSON"), ('{"nope": []}', "missing 'data'")):
+        _CannedHandler.script = [(200, body)]
+        _CannedHandler.hits = []
+        with pytest.raises(Exception, match=match):
+            df.collect()
 
 
 # --- streaming face -----------------------------------------------------
@@ -337,7 +362,7 @@ def test_projection_roundtrip_property(tmp_path):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from mbta_etl_spark.sources.http_datasource import _fetch_rows
+    from mbta_etl_spark.sources.http_json import _fetch_rows
     from pyspark.sql.types import StructType
 
     schema = StructType(

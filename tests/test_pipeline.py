@@ -201,6 +201,60 @@ def test_run_polling_reingests_with_upsert(spark, tmp_path):
     assert rows == {"a": 11.0, "b": 25.0, "c": 30.0}
 
 
+def _payload_with(overrides, extra=()):
+    """One vehicle per ``{vid: {attr: value}}`` entry, attributes patched
+    over the canonical vehicle, then the raw ``extra`` data elements."""
+    doc = json.loads(_payload([(vid, 1.0) for vid in overrides]))
+    for item in doc["data"]:
+        item["attributes"].update(overrides[item["id"]])
+    doc["data"].extend(extra)
+    return json.dumps(doc)
+
+
+def test_run_coerces_json_numbers_and_drops_null_element(spark, tmp_path):
+    """json.Unmarshal fills a float64 from an integral number and an int
+    from an integral float; a null data[] element is a zero-value row
+    that T1 drops. None of them aborts the pass."""
+    from mbta_etl_spark.pipeline import etl
+
+    path = str(tmp_path / "vehicles")
+    body = _payload_with(
+        {"s": {"speed": 10}, "l": {"latitude": 42}, "b": {"bearing": 180.0}},
+        extra=[None],
+    )
+    assert etl.run(spark, path, body=body) == 3
+    rows = {r["id"]: r for r in spark.read.parquet(path).collect()}
+    assert set(rows) == {"s", "l", "b"}
+    assert rows["s"]["speed"] == 10.0
+    assert rows["l"]["latitude"] == 42.0
+    assert rows["b"]["bearing"] == 180
+
+
+@pytest.mark.parametrize(
+    "attrs",
+    [{"speed": "fast"}, {"bearing": 2**40}],
+    ids=["string_speed", "bearing_overflow"],
+)
+def test_ingest_type_conflict_aborts_before_write(spark, tmp_path, attrs):
+    """A type conflict or width overflow aborts the pass with ExtractError
+    before anything is written: the published version is untouched."""
+    import os
+
+    from mbta_etl_spark.pipeline import etl
+
+    path = str(tmp_path / "vehicles")
+    etl.run(spark, path, body=_payload([("a", 5.0)]))
+    published = os.path.realpath(path)
+    bad = _payload_with({"a": {}, "x": attrs})
+    with pytest.raises(http_json.ExtractError):
+        http_json.ingest_payload(spark, bad)
+    with pytest.raises(http_json.ExtractError):
+        etl.run(spark, path, body=bad)
+    assert os.path.realpath(path) == published
+    assert sorted(os.listdir(tmp_path)) == ["vehicles", os.path.basename(published)]
+    assert [r["id"] for r in spark.read.parquet(path).collect()] == ["a"]
+
+
 # --- vehicle queries ------------------------------------------------------
 
 def test_top10_fastest(spark):
