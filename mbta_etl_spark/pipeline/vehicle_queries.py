@@ -97,17 +97,11 @@ def summary_stats(vehicles: DataFrame) -> DataFrame:
         vehicles.filter(F.col("speed") > 0), F.col("speed")
     )
     # pivot the 3-row percentile frame to 3 columns and cross-join onto
-    # the single stats row (both sides are 1 row — trivial join)
+    # the single stats row. Both sides are 1 row: a global aggregate over
+    # empty input still yields one row, here with null double p-columns.
     pct_wide = pct.groupBy().pivot("pct", ["p50", "p90", "p95"]).agg(
         F.first("value")
     )
-    if pct_wide.isEmpty():
-        stats = (
-            stats.withColumn("p50", F.lit(None).cast("double"))
-            .withColumn("p90", F.lit(None).cast("double"))
-            .withColumn("p95", F.lit(None).cast("double"))
-        )
-        return stats
     return stats.crossJoin(pct_wide)
 
 

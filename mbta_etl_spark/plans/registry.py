@@ -2489,7 +2489,7 @@ def st11_http_source_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is one SELECT. Live mode (a real polling endpoint,
     continuous trigger) is the production shape; error semantics
     (non-2xx / malformed JSON abort) are pinned in
-    tests/test_http_datasource.py."""
+    tests/test_http_json.py."""
     import os
 
     from mbta_etl_spark.sources.http_json import (

@@ -17,8 +17,11 @@ Two faces share the one decoder:
 
 - **Driver** (``ingest_payload``): the paper's ``etl.run`` path. One API
   snapshot is driver-resident by construction (reference README reports
-  373-522 vehicles), so the projected tuples go straight into
-  ``createDataFrame``.
+  373-522 vehicles), so the projected tuples become one ``pyarrow.Table``
+  (one Arrow array per top-level field) that ``createDataFrame`` hands to
+  the JVM whole. A Python list would instead be parallelized as a
+  pickled RDD and re-shipped through Python workers by every job that
+  scans it, the upsert's shuffle included.
 - **Registered source** (``HttpJsonDataSource``)::
 
     spark.dataSource.register(HttpJsonDataSource)
@@ -58,6 +61,7 @@ import time
 from typing import Any, Callable, Iterator, Sequence, Tuple
 from urllib.request import urlopen
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
@@ -65,6 +69,7 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -81,6 +86,8 @@ from pyspark.sql.types import (
 )
 
 from mbta_etl_spark.pipeline.schema import RAW_VEHICLE_SCHEMA
+
+_RAW_ARROW_SCHEMA = to_arrow_schema(RAW_VEHICLE_SCHEMA)
 
 
 class ExtractError(RuntimeError):
@@ -194,11 +201,20 @@ def _project_rows(items: list[Any], schema: StructType) -> list[Tuple]:
 def ingest_payload(spark: SparkSession, body: str) -> DataFrame:
     """Raw JSON body → DataFrame with the declared nested schema.
 
-    The projector already makes every check ``verifySchema`` would
-    (types, integer widths; the raw schema is all-nullable), so the
-    engine's second per-value pass is skipped."""
+    The projected rows go to the JVM as one Arrow table: one array per
+    top-level field (the ``attributes`` struct built from its tuples),
+    decoded JVM-side by ``createDataFrame(pyarrow.Table)``. The plan's
+    scan is then a JVM relation, so neither the upsert nor any later job
+    starts a Python worker to re-read the batch, as a pickled-list RDD
+    would. The projector has already made every type and width check,
+    so the Arrow build cannot fail on a value."""
     rows = _project_rows(parse_payload(body), RAW_VEHICLE_SCHEMA)
-    return spark.createDataFrame(rows, RAW_VEHICLE_SCHEMA, verifySchema=False)
+    columns = list(zip(*rows)) or [()] * len(_RAW_ARROW_SCHEMA)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, _RAW_ARROW_SCHEMA)],
+        schema=_RAW_ARROW_SCHEMA,
+    )
+    return spark.createDataFrame(table, RAW_VEHICLE_SCHEMA)
 
 
 def _fetch_rows(url: str, schema: StructType, timeout: float) -> list[Tuple]:

@@ -255,6 +255,58 @@ def test_ingest_type_conflict_aborts_before_write(spark, tmp_path, attrs):
     assert [r["id"] for r in spark.read.parquet(path).collect()] == ["a"]
 
 
+def test_ingest_lineage_has_no_python_rdd(spark):
+    """The snapshot reaches the JVM as an Arrow table: the executed plan's
+    RDD lineage has no PythonRDD, so no job on the batch (the upsert's
+    shuffle-map stage included) ships its rows through Python workers."""
+    df = http_json.ingest_payload(spark, _payload([("a", 1.0), ("b", 2.0)]))
+    lineage = df._jdf.queryExecution().executedPlan().execute().toDebugString()
+    assert "PythonRDD" not in lineage
+    assert df.count() == 2
+
+
+@pytest.mark.parametrize(
+    "body, expect",
+    [
+        (_payload_with({"n": {}}, extra=[None]), {"n": {}}),
+        (
+            _payload_with({"hi": {"bearing": 2**31 - 1}, "lo": {"bearing": -(2**31)}}),
+            {"hi": {"bearing": 2**31 - 1}, "lo": {"bearing": -(2**31)}},
+        ),
+        (
+            _payload_with({"u": {"label": "Ünïcødé 🚋 東京"}}),
+            {"u": {"label": "Ünïcødé 🚋 東京"}},
+        ),
+        (json.dumps({"data": []}), {}),
+        (json.dumps({"data": [{"id": "bare", "type": "vehicle"}]}), {}),
+        (
+            json.dumps({"data": [{"id": "v", "attributes": {"label": "v"}}]}),
+            {"v": {"speed": 0.0, "bearing": 0, "current_status": "UNKNOWN"}},
+        ),
+    ],
+    ids=["null_element", "bearing_int32_edges", "non_ascii_label",
+         "empty_data", "no_attributes", "sparse_attributes"],
+)
+def test_ingest_arrow_rows_match_row_conversion(spark, body, expect):
+    """Edge payloads give the declared raw schema, and the same transformed
+    rows through the Arrow hand-off as through createDataFrame(list) of
+    the projected tuples, with the values expected."""
+    from mbta_etl_spark.pipeline.schema import RAW_VEHICLE_SCHEMA
+    from mbta_etl_spark.pipeline.transform import transform
+
+    raw = http_json.ingest_payload(spark, body)
+    assert raw.schema == RAW_VEHICLE_SCHEMA
+    tuples = http_json._project_rows(http_json.parse_payload(body), RAW_VEHICLE_SCHEMA)
+    now = F.lit("2024-01-15 12:00:00").cast("timestamp")
+    got = transform(raw, now).collect()
+    want = transform(spark.createDataFrame(tuples, RAW_VEHICLE_SCHEMA), now).collect()
+    assert sorted(got) == sorted(want)
+    by_id = {r["id"]: r for r in got}
+    assert set(by_id) == set(expect)
+    for vid, values in expect.items():
+        assert {k: by_id[vid][k] for k in values} == values
+
+
 # --- vehicle queries ------------------------------------------------------
 
 def test_top10_fastest(spark):
@@ -304,9 +356,12 @@ def test_summary_stats_occupancy_pcts(spark):
 
 def test_summary_stats_no_moving(spark):
     df = _vehicles_df(spark, [_vehicle(i, speed=0) for i in range(3)])
-    row = vq.summary_stats(df).collect()[0]
+    stats = vq.summary_stats(df)
+    row = stats.collect()[0]
     assert row["moving_vehicles"] == 0
     assert row["p50"] is None and row["p90"] is None and row["p95"] is None
+    types = dict(stats.dtypes)
+    assert [types[c] for c in ("p50", "p90", "p95")] == ["double"] * 3
 
 
 def test_route_breakdown_dead_arm(spark):
