@@ -19,23 +19,51 @@ crashed writers are swept on the next successful upsert. (The previous
 implementation renamed the live directory away before renaming staging in
 — leaving a window with no table at all; VERDICT r1 "what's wrong" #4.)
 
-Scale shape: the merge is one shuffle keyed on ``id``. At 100 TB you would
-(a) partition the table (e.g. by route/day) and rewrite only partitions
-containing incoming keys (the batch's key→partition map is small and
-driver-computable), or (b) use a format with merge-on-read. The version-
-dir + atomic-link scheme is exactly a poor-man's snapshot manifest — the
-same mechanism those formats use, minus the per-partition granularity.
+Scale shape: the merge is one shuffle keyed on ``id``. A poll pass merges
+a ~10k-row batch into a ~12k-row table, where fixed costs outweigh the
+data work, so the merge is shaped for that:
+
+- the stored version is read with the batch's schema, because
+  ``spark.read.parquet`` without one launches a footer job to infer a
+  schema this code wrote. The Spark schema recorded in one part file's
+  footer, read with pyarrow, keeps a stored version whose column names
+  or types differ failing loudly, before any write;
+- when the merge input is estimated to be no larger than the session's
+  broadcast threshold, the union is hash-partitioned on the key into one
+  partition, which the keyed window reuses, instead of the session's 32
+  shuffle partitions sized for the registry: at poll scale the 32
+  map-side buckets cost more than the data. The estimate needs no job:
+  the stored rows (part-file footers) times the row width, plus the
+  batch plan's size statistic. A larger merge, such as a streaming
+  backfill of many snapshots, keeps the session's shuffle, so AQE still
+  coalesces and splits it and the write stays parallel;
+- each batch row carries its position (``monotonically_increasing_id``),
+  so of two rows with one id in one ordered payload the later wins, as
+  in the reference's ordered ``INSERT OR REPLACE`` loop.
+
+At 100 TB you would (a) partition the table (e.g. by route/day) and
+rewrite only partitions containing incoming keys (the batch's
+key→partition map is small and driver-computable), or (b) use a format
+with merge-on-read. The version-dir + atomic-link scheme is exactly a
+poor-man's snapshot manifest — the same mechanism those formats use,
+minus the per-partition granularity.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mbta_etl_spark.operators.core import latest_by_key
+
+# where Spark's parquet writer records the table's Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _current_version(path: str) -> str | None:
@@ -181,6 +209,50 @@ def compact_parquet(
     return after
 
 
+def _part_files(version_dir: str) -> list[str]:
+    """The data files of a version dir: everything a parquet reader would
+    scan, i.e. not ``_``/``.``-prefixed (``_SUCCESS``, markers, ``.crc``)."""
+    return [
+        e.path for e in os.scandir(version_dir)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    ]
+
+
+def _check_stored_schema(
+    version_dir: str, parts: list[str], batch: DataFrame
+) -> None:
+    """Raise ``ValueError`` unless the stored version holds the batch's
+    columns with the batch's types, as recorded by Spark in one part
+    file's footer (nullability and column order aside)."""
+    meta = (pq.read_schema(parts[0]).metadata or {}) if parts else {}
+    recorded = meta.get(_SPARK_SCHEMA_KEY)
+    stored = StructType.fromJson(json.loads(recorded)) if recorded else StructType()
+    have = {f.name: f.dataType.simpleString() for f in stored}
+    want = {f.name: f.dataType.simpleString() for f in batch.schema}
+    if have != want:
+        raise ValueError(
+            f"stored version {version_dir} has columns {sorted(have.items())}, "
+            f"the batch has {sorted(want.items())}"
+        )
+
+
+def _fits_one_partition(
+    spark: SparkSession, batch: DataFrame, parts: list[str]
+) -> bool:
+    """Whether the merge input is small enough for one task: no larger
+    than the session's broadcast threshold (``autoBroadcastJoinThreshold``,
+    -1 turns this off). Estimated without a job in Spark's in-memory row
+    size: the stored rows (footer counts) times the row width, plus the
+    batch plan's size statistic (a source with no size reports
+    Long.MaxValue)."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    budget = limit - batch._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    if budget < 0 or sum(os.path.getsize(p) for p in parts) > budget:
+        return False  # the files alone exceed it; their rows are larger
+    rows = sum(pq.read_metadata(p).num_rows for p in parts)
+    return rows * batch._jdf.schema().defaultSize() <= budget
+
+
 def upsert_parquet(
     spark: SparkSession,
     batch: DataFrame,
@@ -190,19 +262,40 @@ def upsert_parquet(
 ) -> None:
     """Last-write-wins merge of ``batch`` into the parquet table at
     ``path``. Ties on ``version_col`` prefer the incoming batch (the
-    reference's REPLACE always wins, load.go:14). Publishing goes
-    through :func:`atomic_publish`, so readers never observe a missing
-    table."""
+    reference's REPLACE always wins, load.go:14), and among batch rows
+    the later one in the batch's partition order. For one ordered payload
+    (``etl.run``) that is the reference's ordered ``INSERT OR REPLACE``
+    loop, load.go:23-32, which leaves the last occurrence of an id; a
+    batch read from several files has no such order between them.
+    Publishing goes through :func:`atomic_publish`, so readers never
+    observe a missing table.
+
+    The stored version is read with ``batch.schema``, so no footer job
+    runs. It must hold the batch's column names and types, checked on
+    the Spark schema in one part file's footer; a mismatch raises
+    ``ValueError`` before anything is written. A merge estimated to be no
+    larger than ``autoBroadcastJoinThreshold`` is hash-partitioned on
+    ``key`` into one partition; a larger one, and the first pass with
+    nothing stored, shuffle as the session's defaults decide."""
     base = path.rstrip("/")
     current = _current_version(base)
 
-    new = batch.withColumn("_src", F.lit(1))
-    if current is not None:
-        old = spark.read.parquet(current).withColumn("_src", F.lit(0))
-        merged = new.unionByName(old)
-    else:
+    # batch order, so the last in-batch occurrence of a key wins
+    new = batch.withColumns(
+        {"_src": F.lit(1), "_ord": F.monotonically_increasing_id()}
+    )
+    if current is None:
         merged = new
+    else:
+        parts = _part_files(current)
+        _check_stored_schema(current, parts, batch)
+        old = spark.read.schema(batch.schema).parquet(current).withColumns(
+            {"_src": F.lit(0), "_ord": F.lit(0)}
+        )
+        merged = new.unionByName(old)
+        if _fits_one_partition(spark, batch, parts):
+            merged = merged.repartition(1, key)
     winner = latest_by_key(
-        merged, [key], [F.desc(version_col), F.desc("_src")]
-    ).drop("_src")
+        merged, [key], [F.desc(version_col), F.desc("_src"), F.desc("_ord")]
+    ).drop("_src", "_ord")
     atomic_publish(winner, base)

