@@ -10,7 +10,6 @@ from mbta_etl_spark.functions.texthash import (
     md5_32,
     regex_tokens,
     token_count_bpe,
-    universal_hash,
 )
 from mbta_etl_spark.functions.vector import (
     cosine,
@@ -29,5 +28,4 @@ __all__ = [
     "regex_tokens",
     "token_count_bpe",
     "unit",
-    "universal_hash",
 ]

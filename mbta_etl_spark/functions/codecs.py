@@ -412,24 +412,6 @@ def encode_jpeg_gray(pixels: np.ndarray) -> bytes:
     return _encode_jpeg([plane], h, w)
 
 
-def encode_jpeg_rgb(pixels: np.ndarray) -> bytes:
-    """Baseline color JPEG writer: RGB -> JFIF YCbCr (BT.601 full
-    range), 4:4:4 (no subsampling — the subset the decoder supports),
-    interleaved 3-component MCUs with independent DC predictors."""
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("encode_jpeg_rgb expects a (H, W, 3) RGB array")
-    h, w = arr.shape[:2]
-    r = arr[:, :, 0].astype(np.float64)
-    g = arr[:, :, 1].astype(np.float64)
-    b = arr[:, :, 2].astype(np.float64)
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    planes = [_pad8(p - 128.0) for p in (y, cb, cr)]
-    return _encode_jpeg(planes, h, w)
-
-
 class _BitReader:
     """Entropy-segment bit reader: unstuffs 0xFF00 once, then serves
     bits from a single big-int buffer — each read is one shift+mask

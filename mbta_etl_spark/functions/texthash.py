@@ -18,14 +18,6 @@ def md5_32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def universal_hash(x: Column, a: int, b: int, prime: int = 4294967311) -> Column:
-    """Carter-Wegman (a·x + b) mod p over 32-bit inputs. Keep a < 2^24 so
-    a·x stays under 2^56 — no 64-bit overflow in any engine."""
-    if a >= 1 << 24:
-        raise ValueError("a must stay below 2^24 to avoid 64-bit overflow")
-    return (F.lit(a) * x + F.lit(b)) % F.lit(prime)
-
-
 def regex_tokens(text: Column, pattern: str = BPE_SPLIT_PATTERN) -> Column:
     """All pattern matches as an array — a BPE-style pre-tokenization."""
     return F.regexp_extract_all(text, F.lit(pattern), 0)

@@ -291,23 +291,6 @@ def _minhash_wide(sh: DataFrame, n_hashes: int = NUM_HASHES) -> DataFrame:
     return sh.groupBy("doc_id").agg(*mins)
 
 
-def _minhash_from_shingles(sh: DataFrame, n_hashes: int = NUM_HASHES) -> DataFrame:
-    wide = _minhash_wide(sh, n_hashes)
-    pairs = ", ".join(f"{s}, mh{s}" for s in range(n_hashes))
-    return wide.select(
-        "doc_id", F.expr(f"stack({n_hashes}, {pairs}) AS (seed, mh)")
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, text: Column, id_col: Column, k: int = 3, n_hashes: int = NUM_HASHES
-) -> DataFrame:
-    """(doc_id, seed, mh): per-seed MinHash where permutation s is the
-    universal hash (a_s·md5_32(shingle) + b_s) mod p — engine-portable and
-    deterministic. One explode + one doc-keyed min aggregation."""
-    return _minhash_from_shingles(_shingle_table(df, text, id_col, k), n_hashes)
-
-
 def _band_table_from_shingles(
     sh: DataFrame, n_hashes: int = NUM_HASHES, band_size: int = BAND_SIZE
 ) -> DataFrame:
@@ -328,23 +311,6 @@ def _band_table_from_shingles(
     stack_args = ", ".join(f"{b}, bk{b}" for b in range(n_bands))
     return wide.select("doc_id", *band_keys).select(
         "doc_id", F.expr(f"stack({n_bands}, {stack_args}) AS (band, band_key)")
-    )
-
-
-def lsh_band_table(
-    df: DataFrame,
-    text: Column,
-    id_col: Column,
-    k: int = 3,
-    n_hashes: int = NUM_HASHES,
-    band_size: int = BAND_SIZE,
-) -> DataFrame:
-    """Public band-table kernel: documents → (doc_id, band, band_key).
-    Two docs sharing ANY (band, band_key) row are LSH near-dup
-    candidates; the table is the standing index of an ingest-time
-    near-dedup (see streaming/dedup_stream.py)."""
-    return _band_table_from_shingles(
-        _shingle_table(df, text, id_col, k), n_hashes, band_size
     )
 
 

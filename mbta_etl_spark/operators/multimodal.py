@@ -10,8 +10,9 @@ are REAL decoders built on the dependency-free codecs in
 inflate, unfilter / frame deinterleave, oracle-verified end-to-end via
 synthetic payloads whose content is an integer function of the row id.
 Formats that genuinely need external codecs (JPEG → Pillow, compressed
-audio, video → ffmpeg/PyAV) raise NotImplementedError naming the
-dependency; the ``fake_*`` kernels keep that plumbing exercised.
+audio) raise NotImplementedError naming the dependency; video frame
+sampling (ffmpeg/PyAV) is not implemented. The ``fake_*`` kernels keep
+that plumbing exercised.
 """
 
 from __future__ import annotations
@@ -42,15 +43,6 @@ BINARY_META_SCHEMA = StructType(
         StructField("checksum", StringType()),
         StructField("first_byte", LongType()),
         StructField("last_byte", LongType()),
-    ]
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("meta", StringType()),  # JSON sidecar metadata
     ]
 )
 
@@ -343,11 +335,6 @@ def synthetic_wav_table(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ]
         ),
     )
-
-
-def sample_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """STUB — requires ffmpeg/av for video frame sampling."""
-    raise NotImplementedError("sample_frames needs ffmpeg/PyAV.")
 
 
 def fake_image_features(df: DataFrame) -> DataFrame:

@@ -800,9 +800,6 @@ def int8_quant_distortion(
     )
 
 
-PCA_TOP_K = 8
-
-
 def sample_covariance(df: DataFrame, vec_col: str):
     """Distributed sample-covariance build: ONE pass reducing the corpus
     to O(d^2) driver state; returns ``(cov ndarray, n_rows)``.
@@ -854,21 +851,6 @@ def sample_covariance(df: DataFrame, vec_col: str):
     mu = s / n
     cov = (g - n * np.outer(mu, mu)) / (n - 1.0)
     return cov, int(n)
-
-
-def pca_eigen(df: DataFrame, vec_col: str, top_k: int = PCA_TOP_K):
-    """Distributed PCA eigenvalues: the ``sample_covariance`` pass, then
-    a driver-side eigh of the O(d^2) matrix.
-
-    Returns (eigenvalues_desc ndarray[:top_k], n_rows, trace). Eigensum
-    == trace(cov) == sum of per-dimension sample variances (s12), which
-    is what the tests pin. Real deployments persist the rotation for
-    reuse; serving the projection is a broadcast matmul (s03's tier)."""
-    import numpy as np
-
-    cov, n = sample_covariance(df, vec_col)
-    eig = np.linalg.eigvalsh(cov)[::-1]  # descending
-    return eig[:top_k], n, float(np.trace(cov))
 
 
 def pca_spectrum_moments(df, vec_col: str):

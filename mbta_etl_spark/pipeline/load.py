@@ -93,16 +93,18 @@ def atomic_publish(df: DataFrame, path: str, marker: str | None = None) -> None:
     the publish.
 
     ``marker`` (optional, must start with ``_`` so parquet readers skip
-    it) is landed INSIDE the version dir before the symlink swap, so it
+    it; any other name raises ``ValueError`` before anything is written)
+    is landed INSIDE the version dir before the symlink swap, so it
     commits atomically WITH the data — the mechanism the streaming
     merges use to record the last merged batch id and make at-least-once
     foreachBatch redelivery exactly-once (``published_marker`` reads it
     back)."""
+    if marker is not None and not marker.startswith("_"):
+        raise ValueError(f"marker {marker!r} must start with '_' (reader-invisible)")
     base = path.rstrip("/")
     version_dir = _next_version_dir(base)
     df.write.mode("overwrite").parquet(version_dir)
     if marker is not None:
-        assert marker.startswith("_"), "marker must be reader-invisible"
         with open(os.path.join(version_dir, marker), "w"):
             pass
 
@@ -189,26 +191,6 @@ def claim_batch(table_path: str, batch_id: int) -> bool:
     return True
 
 
-def compact_parquet(
-    spark: SparkSession, path: str, target_files: int = 1
-) -> int:
-    """Small-files maintenance: rewrite the table into ``target_files``
-    right-sized files and atomically republish. Frequent small upserts
-    accrete one file-set per merge; on object stores the per-file open
-    cost eventually dominates scans, so periodic compaction is part of
-    owning a parquet table (table formats schedule this as OPTIMIZE).
-    Returns the row count (the rewrite is verified count-neutral before
-    publishing — a compaction must never change data)."""
-    df = spark.read.parquet(path)
-    before = df.count()
-    compacted = df.coalesce(target_files)
-    atomic_publish(compacted, path)
-    after = spark.read.parquet(path).count()
-    if after != before:  # pragma: no cover - safety net
-        raise RuntimeError(f"compaction changed row count: {before} -> {after}")
-    return after
-
-
 def _part_files(version_dir: str) -> list[str]:
     """The data files of a version dir: everything a parquet reader would
     scan, i.e. not ``_``/``.``-prefixed (``_SUCCESS``, markers, ``.crc``)."""
@@ -253,20 +235,15 @@ def _fits_one_partition(
     return rows * batch._jdf.schema().defaultSize() <= budget
 
 
-def upsert_parquet(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    key: str = "id",
-    version_col: str = "ingested_at",
-) -> None:
+def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:
     """Last-write-wins merge of ``batch`` into the parquet table at
-    ``path``. Ties on ``version_col`` prefer the incoming batch (the
-    reference's REPLACE always wins, load.go:14), and among batch rows
-    the later one in the batch's partition order. For one ordered payload
-    (``etl.run``) that is the reference's ordered ``INSERT OR REPLACE``
-    loop, load.go:23-32, which leaves the last occurrence of an id; a
-    batch read from several files has no such order between them.
+    ``path``, keyed on ``id``: the newest ``ingested_at`` wins. Ties on
+    it prefer the incoming batch (the reference's REPLACE always wins,
+    load.go:14), and among batch rows the later one in the batch's
+    partition order. For one ordered payload (``etl.run``) that is the
+    reference's ordered ``INSERT OR REPLACE`` loop, load.go:23-32, which
+    leaves the last occurrence of an id; a batch read from several files
+    has no such order between them.
     Publishing goes through :func:`atomic_publish`, so readers never
     observe a missing table.
 
@@ -275,7 +252,7 @@ def upsert_parquet(
     the Spark schema in one part file's footer; a mismatch raises
     ``ValueError`` before anything is written. A merge estimated to be no
     larger than ``autoBroadcastJoinThreshold`` is hash-partitioned on
-    ``key`` into one partition; a larger one, and the first pass with
+    ``id`` into one partition; a larger one, and the first pass with
     nothing stored, shuffle as the session's defaults decide."""
     base = path.rstrip("/")
     current = _current_version(base)
@@ -294,8 +271,8 @@ def upsert_parquet(
         )
         merged = new.unionByName(old)
         if _fits_one_partition(spark, batch, parts):
-            merged = merged.repartition(1, key)
+            merged = merged.repartition(1, "id")
     winner = latest_by_key(
-        merged, [key], [F.desc(version_col), F.desc("_src"), F.desc("_ord")]
+        merged, ["id"], [F.desc("ingested_at"), F.desc("_src"), F.desc("_ord")]
     ).drop("_src", "_ord")
     atomic_publish(winner, base)

@@ -1456,41 +1456,9 @@ def d16_minhash_est_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def s15_pca_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-8 PCA eigenvalues + explained-variance fractions of the
-    embedding covariance (similarity.pca_eigen: one distributed Gram
-    pass reducing the corpus to O(d^2) cells, driver-side eigh).
-    Rows-only by design — no SQL engine exposes an eigensolver — but
-    the invariant trace(cov) == sum of s12's per-dimension sample
-    variances ties it to an oracle-checked entry, and the property
-    tests pin exactly that. Output is built JVM-side from literals
-    (no Python-RDD scan)."""
-    eig, n, trace = similarity.pca_eigen(_emb(spark, sf_dir), "embedding")
-
-    def r6(v: float) -> float:
-        import math
-
-        return math.floor(v * 1e6 + 0.5) / 1e6
-
-    structs = [
-        F.struct(
-            F.lit(i + 1).alias("component"),
-            F.lit(r6(float(v))).alias("eigenvalue"),
-            F.lit(r6(float(v) / trace)).alias("explained_frac"),
-            F.lit(n).alias("n_rows"),
-        )
-        for i, v in enumerate(eig)
-    ]
-    return (
-        spark.range(1)
-        .select(F.explode(F.array(*structs)).alias("s"))
-        .select("s.*")
-    )
-
-
 def s15a_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked spectrum invariants for s15's eigensolver
-    (similarity.pca_spectrum_moments): Σλ == trace(cov) and
+    """Oracle-checked spectrum invariants of the embedding covariance's
+    PCA eigenvalues (similarity.pca_spectrum_moments): Σλ == trace(cov) and
     Σλ² == ‖cov‖_F², both computable in plain SQL from pairwise sample
     covariances — so the DuckDB oracle hash-verifies the distributed
     Gram pass AND the driver eigh without owning an eigensolver
@@ -7002,4 +6970,3 @@ def _hamming_topk_oracle() -> str:
 
 
 _ORACLES["s25_hamming_topk"] = _hamming_topk_oracle()
-

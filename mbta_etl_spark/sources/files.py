@@ -1,5 +1,5 @@
-"""File-format sources: schema-enforced CSV / JSONL / parquet readers
-and layout-aware writers.
+"""File-format sources: schema-enforced CSV / JSONL readers and parquet
+footer introspection.
 
 The reference's only persistent format is its SQLite file (reference
 pipeline/load.go:6-39); a Spark engine instead meets data as files on
@@ -63,49 +63,6 @@ def read_jsonl(
     else:
         reader = reader.option("mode", "FAILFAST")
     return reader.schema(schema).json(path)
-
-
-def write_parquet_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Partitioned-directory parquet — the layout that turns partition-key
-    predicates into directory pruning (see sources/layout.py for the
-    pruning assertions)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_jsonl_shards(
-    df: DataFrame, path: str, key, n_shards: int, mode: str = "overwrite"
-):
-    """Sharded JSONL corpus export — the delivery format downstream
-    training jobs consume. Shard assignment is the portable content hash
-    (md5_32(key) mod n_shards), NOT round-robin: a doc lands in the same
-    shard on any cluster/partitioning/rerun, so incremental re-exports
-    only touch changed shards. One repartition co-locates each shard
-    into one task before the partitioned write (otherwise every task
-    writes a sliver of every shard — tiny-file explosion at scale).
-
-    Returns the post-write manifest (shard -> row count) read back from
-    disk, so it certifies what actually landed rather than what the
-    plan intended.
-    """
-    from mbta_etl_spark.functions import md5_32
-
-    sharded = df.withColumn(
-        "shard", F.pmod(md5_32(key.cast("string")), F.lit(n_shards))
-    )
-    (
-        sharded.repartition(n_shards, "shard")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .json(path)
-    )
-    spark = SparkSession.getActiveSession()
-    return (
-        spark.read.json(path)
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
 
 
 def footer_stats(

@@ -1,5 +1,5 @@
-"""Physical data layout for scale: partitioned writes, bucketed tables,
-and salting — the mechanics that decide whether a 100 TB job shuffles.
+"""Physical data layout for scale: bucketed tables and salting — the
+mechanics that decide whether a 100 TB job shuffles.
 
 The reference's analog is its B-tree indexes (SURVEY §2.1 S4,
 reference pipeline/pipeline.go:56-57): in Spark land the stand-ins are
@@ -9,23 +9,8 @@ within-file ordering (row-group min/max pruning).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: Sequence[str], sort_cols: Sequence[str] = ()
-) -> None:
-    """Hive-style partitioned parquet: queries filtering on
-    ``partition_cols`` prune whole directories before any I/O, and
-    ``sort_cols`` ordering inside files tightens row-group min/max stats
-    (the parquet answer to the reference's secondary indexes)."""
-    out = df
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed(
@@ -58,17 +43,6 @@ def salted_key(key: Column, n_salts: int) -> tuple[Column, Column]:
     pathological keys (one key = double-digit % of rows)."""
     salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))
     return F.concat(key.cast("string"), F.lit("#"), salt.cast("string")), salt
-
-
-def explode_salts(df: DataFrame, key: Column, n_salts: int) -> DataFrame:
-    """Light-side counterpart: replicate each row across all salt values
-    with the matching salted key attached."""
-    return df.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    ).withColumn(
-        "_salted_key",
-        F.concat(key.cast("string"), F.lit("#"), F.col("_salt").cast("string")),
-    )
 
 
 def salted_count(

@@ -18,19 +18,6 @@ from pyspark.sql import functions as F
 
 from mbta_etl_spark.session import tune_session
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table. Never collects; callers keep the plan lazy.
@@ -50,23 +37,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"),
         )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view so arbitrary SQL runs
-    against them — the engine-level analog of the reference's generic SQL
-    cursor (S2, queries.go:164-186: any SQL string in, rows out). With
-    the views registered, ``spark.sql(query)`` IS that surface, with
-    Catalyst planning instead of SQLite's VDBE."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
-    """Arbitrary-SQL entry point over the registered testdata views."""
-    register_views(spark, sf_dir)
-    return spark.sql(query)

@@ -1,117 +1,14 @@
-"""Streaming NEAR-duplicate dedup on ingest: each micro-batch's MinHash
-LSH band table is joined against a standing on-disk band index; docs
-that collide with the index (or with an earlier doc in the same batch)
-are dropped, survivors land in the output and their bands extend the
-index.
-
-This is the ingest-time form of d04/d11: `dropDuplicatesWithinWatermark`
-(streaming/ingest.py) handles EXACT dups with engine-managed state; here
-the state is the band index TABLE, so it is unbounded-horizon (a near
-copy of a doc ingested months ago is still caught) while the stream
-engine holds no dedup state at all.
-
-Exactly-once: both sinks write `batch_id=N` hive partitions with
-per-batch overwrite, so a replayed micro-batch (foreachBatch redelivery
-after failure) rewrites its own partition idempotently; the index read
-excludes the current batch id, so a replay never collides with its own
-partial output.
-
-Scale: per-batch cost is O(batch bands) joined against the index via a
-(band, band_key) equi-join — at 100 TB the index is a table bucketed by
-band_key so the probe co-locates, and the only growing artifact is
-on-disk (compact it like any table; ~n_bands rows of (long, int, 32-char
-key) per surviving doc — a few hundred bytes per document, orders of
-magnitude smaller than the corpus). Greedy bucket semantics: within a
-batch only the smallest doc_id in each colliding bucket survives (the
-standard greedy choice; transitive chains collapse to the bucket
-minimum).
+"""Streaming/batch equivalence for exact dedup: ``stream_exact_dedup_equiv``
+replays documents as micro-batches through a real file source and a
+stateful streaming groupBy, and returns the final standing table, which
+equals the one-shot batch ``operators/dedup.exact_dedup_groups`` result
+however the replay splits into batches.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
-
-from mbta_etl_spark.operators.dedup import lsh_band_table
-
-_BAND_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("band", IntegerType()),
-        StructField("band_key", StringType()),
-    ]
-)
-
-
-def _standing_index(spark, store_path: str, current_batch: int) -> DataFrame:
-    """Band index accumulated by all PRIOR batches. Excluding the current
-    batch id makes a failure-replayed batch idempotent: its own partial
-    partition (if any) is never probed against itself."""
-    try:
-        # StructType.add mutates in place — build the partitioned schema
-        # fresh instead of growing the module-level one
-        stored = StructType(
-            list(_BAND_SCHEMA.fields) + [StructField("batch_id", LongType())]
-        )
-        idx = spark.read.schema(stored).parquet(store_path)
-        return idx.filter(F.col("batch_id") < current_batch).drop("batch_id")
-    except Exception:
-        return spark.createDataFrame([], _BAND_SCHEMA)
-
-
-def start_near_dup_ingest_stream(
-    docs: DataFrame,
-    store_path: str,
-    out_path: str,
-    checkpoint: str,
-    k: int = 3,
-):
-    """docs stream (doc_id, text) → near-dup-filtered corpus at
-    ``out_path`` plus band index at ``store_path`` (both hive-partitioned
-    by batch_id). Returns the StreamingQuery."""
-
-    def _dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bands = lsh_band_table(
-            batch_df, F.col("text"), F.col("doc_id"), k=k
-        ).persist()
-        try:
-            standing = _standing_index(spark, store_path, batch_id)
-            # cross-batch hits: any band collision with the standing index
-            hits = (
-                bands.join(standing, ["band", "band_key"], "left_semi")
-                .select("doc_id")
-                .distinct()
-            )
-            # intra-batch: per colliding bucket, only the min doc_id stays
-            first = bands.groupBy("band", "band_key").agg(
-                F.min("doc_id").alias("_first")
-            )
-            intra = (
-                bands.join(first, ["band", "band_key"])
-                .filter(F.col("doc_id") > F.col("_first"))
-                .select("doc_id")
-                .distinct()
-            )
-            dropped = hits.union(intra).distinct()
-            survivors = batch_df.join(dropped, "doc_id", "left_anti")
-            surv_bands = bands.join(dropped, "doc_id", "left_anti")
-            surv_bands.write.mode("overwrite").parquet(
-                f"{store_path}/batch_id={batch_id}"
-            )
-            survivors.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            )
-        finally:
-            bands.unpersist()
-
-    return (
-        docs.writeStream.foreachBatch(_dedup_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_exact_dedup_equiv(

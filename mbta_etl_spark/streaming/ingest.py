@@ -6,17 +6,13 @@ run continuously:
 
 - **source**: a file-stream of JSON snapshots (the landing pattern for a
   polled HTTP API at scale — pollers write snapshots to object storage,
-  the stream picks them up; ``maxFilesPerTrigger`` bounds micro-batch
-  size).
+  the stream picks them up).
 - **transform**: the exact batch ``transform()`` — Structured Streaming
   reuses unmodified batch expressions.
 - **sink**: ``foreachBatch`` → the same upsert merge, giving the
   reference's last-write-wins semantics per micro-batch; or a
   watermarked ``dropDuplicates`` for at-most-once per key within the
   lateness horizon.
-
-Also here: the streaming analog of the hourly rollup (q15) — watermarked
-tumbling-window aggregation, the canonical late-data-tolerant shape.
 """
 
 from __future__ import annotations
@@ -30,15 +26,10 @@ from mbta_etl_spark.pipeline.schema import RAW_VEHICLE_SCHEMA
 from mbta_etl_spark.pipeline.transform import transform
 
 
-def stream_vehicle_snapshots(
-    spark: SparkSession, snapshot_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def stream_vehicle_snapshots(spark: SparkSession, snapshot_dir: str) -> DataFrame:
     """File-stream of JSONL vehicle snapshots with the declared raw
     schema (schema must be explicit for streaming reads)."""
-    reader = spark.readStream.schema(RAW_VEHICLE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(snapshot_dir)
+    return spark.readStream.schema(RAW_VEHICLE_SCHEMA).json(snapshot_dir)
 
 
 def run_upsert_stream(
@@ -73,30 +64,6 @@ def run_upsert_stream(
     return writer.start()
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window rollup (streaming analog of q15):
-    late rows within ``watermark_delay`` still update their window; older
-    state is evicted, which is what bounds memory on an unbounded stream.
-    Works on any DataFrame with (ts, value) — batch or streaming."""
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(F.window(F.col("ts"), window_duration).alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("cnt"),
-            F.col("sum_value"),
-        )
-    )
-
-
 def dedup_stream_by_key(
     events: DataFrame,
     key_cols: list[str],
@@ -118,32 +85,6 @@ def dedup_stream_by_key(
     """
     return events.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
         key_cols
-    )
-
-
-def sliding_window_rates(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window rollup: each row lands in duration/slide overlapping
-    windows (here 4), so the state store carries that factor — the cost
-    of smooth rates vs tumbling windows. Emitted per window: count, mean.
-    Works on any DataFrame with (ts, value) — batch or streaming."""
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(F.window(F.col("ts"), window_duration, slide).alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.avg("value"), 6).alias("avg_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            F.col("cnt"),
-            F.col("avg_value"),
-        )
     )
 
 
@@ -235,31 +176,3 @@ def enrich_stream(
     broadcasts the static side when it's small; this is the streaming
     analog of the dimension joins in q17/q30."""
     return events.join(F.broadcast(dim), on, how)
-
-
-def session_window_counts(
-    events: DataFrame,
-    key: str = "event_type",
-    gap: str = "30 minutes",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
-    """Per-key session windows with a merge gap: rows closer than ``gap``
-    within a key fuse into one session whose bounds grow dynamically —
-    the streaming twin of the batch q18a operator (identical expression;
-    the watermark bounds state by closing sessions older than the delay,
-    so open-session state ~ #keys with activity inside the horizon, not
-    history). Streaming output mode must be append/update — sessions
-    emit when the watermark passes their end."""
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(
-            F.col(key), F.session_window(F.col("ts"), gap).alias("sess")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key,
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "n_events",
-        )
-    )

@@ -1,6 +1,12 @@
-"""Custom stateful streaming operator via applyInPandasWithState: a
-per-user running profile (event count, value sum, last-seen timestamp)
-maintained across micro-batches with explicit GroupState.
+"""Custom stateful streaming operators, one per Python state tier.
+
+- ``user_profile_stream`` / ``start_profile_stream``: a per-user running
+  profile (event count, value sum, last-seen timestamp) maintained across
+  micro-batches with applyInPandasWithState's explicit GroupState.
+- ``running_extrema_stream``: a per-user running (count, max) held in a
+  named ValueState by transformWithStateInPandas, Spark 4's typed-state
+  successor; ``ensure_protobuf_runtime`` makes it runnable in a vanilla
+  session.
 
 This is the escape hatch for stateful semantics Spark's built-in
 streaming aggregations can't express (per-key custom accumulators,
@@ -21,7 +27,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampNTZType,
@@ -290,278 +295,5 @@ def running_extrema_stream(events: DataFrame) -> DataFrame:
         statefulProcessor=_Extrema(),
         outputStructType=COUNTER_OUTPUT_SCHEMA,
         outputMode="Update",
-        timeMode="None",
-    )
-
-
-TYPE_COUNT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def per_type_counts_stream(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas with MAP state: per-user running count
-    per event type, held in one MapState(event_type → n) rather than a
-    wide tuple — the composable-state surface ValueState can't express
-    (the key set grows with the data; a tuple schema is fixed).  Emits
-    the full per-type table for each updated user every micro-batch.
-
-    Scale shape: state per key is O(#distinct event types for that
-    user), RocksDB-backed so the hot-key map spills to disk; the update
-    is one point-read + point-write per (user, type) touched in the
-    batch, not a rewrite of the whole map."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    key_schema = StructType([StructField("event_type", StringType())])
-    val_schema = StructType([StructField("n", LongType())])
-
-    class _PerType(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState("counts", key_schema, val_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            for pdf in rows:
-                for et, cnt in pdf["event_type"].value_counts().items():
-                    k = (et,)
-                    prev = (
-                        int(self._counts.getValue(k)[0])
-                        if self._counts.containsKey(k)
-                        else 0
-                    )
-                    self._counts.updateValue(k, (prev + int(cnt),))
-            types, ns = [], []
-            for k, v in self._counts.iterator():
-                types.append(k[0])
-                ns.append(int(v[0]))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(types),
-                    "event_type": types,
-                    "n": ns,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_PerType(),
-        outputStructType=TYPE_COUNT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-LAST_K_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_kept", LongType()),
-        StructField("sum_kept", DoubleType()),
-    ]
-)
-
-
-def last_k_values_stream(events: DataFrame, k: int = 3) -> DataFrame:
-    """transformWithStateInPandas with LIST state: the last ``k`` values
-    seen per user, appended per micro-batch and trimmed to the window —
-    the bounded-buffer shape (recent-events features, fraud windows,
-    dedup-within-last-N) that MapState/ValueState don't model. Emits the
-    kept-window count and sum each time a user updates.
-
-    Scale: state is O(k) per key by construction — the trim happens
-    inside the processor, so the store never grows past k rows per key
-    regardless of stream length."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    val_schema = StructType([StructField("v", DoubleType())])
-
-    class _LastK(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._recent = handle.getListState("recent", val_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            vals = [float(v[0]) for v in self._recent.get()]
-            for pdf in rows:
-                vals.extend(float(x) for x in pdf["value"])
-            vals = vals[-k:]
-            self._recent.put([(v,) for v in vals])
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_kept": [len(vals)],
-                    "sum_kept": [float(sum(vals))],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_LastK(),
-        outputStructType=LAST_K_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("closed", StringType()),
-    ]
-)
-
-
-def session_expiry_stream(events: DataFrame, idle_ms: int = 1000) -> DataFrame:
-    """transformWithStateInPandas with TIMERS: per-user session counts
-    that auto-close after ``idle_ms`` of processing-time inactivity.
-    Every input batch refreshes the user's single timer; when it fires,
-    handleExpiredTimer emits the final count flagged ``closed`` and
-    clears state — the session-window / TTL-state pattern the old
-    applyInPandasWithState timeout conf could only approximate with one
-    global timeout mode. State per key: one ValueState + one timer.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    state_schema = StructType([StructField("cnt", LongType())])
-
-    class _Session(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._cnt = handle.getValueState("cnt", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            cnt = int(self._cnt.get()[0]) if self._cnt.exists() else 0
-            for pdf in rows:
-                cnt += len(pdf)
-            self._cnt.update((cnt,))
-            # one live timer per key: drop the stale one, arm the new TTL
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                timerValues.getCurrentProcessingTimeInMs() + idle_ms
-            )
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [cnt], "closed": ["open"]}
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            cnt = int(self._cnt.get()[0]) if self._cnt.exists() else 0
-            self._cnt.clear()
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [cnt], "closed": ["closed"]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Session(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )
-
-
-RUN_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("band", LongType()),
-        StructField("run_len", LongType()),
-        StructField("start_ts", TimestampNTZType()),
-    ]
-)
-
-
-def run_length_stream(
-    events: DataFrame, band_width: float = 20.0
-) -> DataFrame:
-    """Streaming form of q104's run-length state compression
-    (operators/timeseries.compress_consecutive): per-key ValueState
-    holds the OPEN run (band, length, start); each micro-batch folds its
-    rows in event-time order, emitting a row per run it CLOSES — the
-    transition-only stream a telemetry pipeline persists instead of the
-    raw feed (LOCF reconstructs it; a steady signal emits ~nothing).
-
-    State is O(1) per key (three longs), RocksDB-backed, checkpointed —
-    the same recovery story as the other transformWithState operators.
-    Output mode Append: closed runs are immutable facts. The open run
-    is never emitted; a production variant adds a timer that flushes
-    runs idle past a horizon (session_expiry_stream shows the timer
-    plumbing)."""
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_schema = StructType(
-        [
-            StructField("band", LongType()),
-            StructField("run_len", LongType()),
-            StructField("start_us", LongType()),
-        ]
-    )
-
-    class _RunLength(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState("open_run", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            open_band = open_len = open_start = None
-            if self._open.exists():
-                prev = self._open.get()
-                open_band, open_len, open_start = (
-                    int(prev[0]),
-                    int(prev[1]),
-                    int(prev[2]),
-                )
-            closed: list[tuple[int, int, int]] = []
-            import math
-
-            # a key's micro-batch may arrive as SEVERAL Arrow chunks;
-            # event-time order only exists across the concatenation, so
-            # collect all chunks and sort ONCE (stable mergesort keeps
-            # equal-ts rows in arrival order as the tiebreak)
-            batch = pd.concat(list(rows), ignore_index=True)
-            if not batch.empty:
-                batch = batch.sort_values("ts", kind="mergesort")
-                ts_us = (
-                    pd.to_datetime(batch["ts"]).astype("int64") // 1000
-                ).tolist()
-                for v, t_us in zip(batch["value"].tolist(), ts_us):
-                    band = int(math.floor(float(v) / band_width))
-                    if open_band is None:
-                        open_band, open_len, open_start = band, 1, t_us
-                    elif band == open_band:
-                        open_len += 1
-                    else:
-                        closed.append((open_band, open_len, open_start))
-                        open_band, open_len, open_start = band, 1, t_us
-            if open_band is not None:
-                self._open.update((open_band, open_len, open_start))
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(closed),
-                        "band": [c[0] for c in closed],
-                        "run_len": [c[1] for c in closed],
-                        "start_ts": [
-                            pd.Timestamp(c[2] * 1000) for c in closed
-                        ],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunLength(),
-        outputStructType=RUN_OUTPUT_SCHEMA,
-        outputMode="Append",
         timeMode="None",
     )

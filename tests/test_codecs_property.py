@@ -52,9 +52,30 @@ def test_wav_roundtrip_any_length(n, ch, rate, seed):
 
 from mbta_etl_spark.functions.codecs import (  # noqa: E402
     _JPEG_QTABLE,
+    _encode_jpeg,
+    _pad8,
     decode_jpeg,
     encode_jpeg_gray,
 )
+
+
+def encode_jpeg_rgb(pixels: np.ndarray) -> bytes:
+    """Baseline color JPEG writer (the decoder's color-path fixture):
+    RGB -> JFIF YCbCr (BT.601 full range), 4:4:4 (no subsampling — the
+    subset the decoder supports), interleaved 3-component MCUs with
+    independent DC predictors."""
+    arr = np.asarray(pixels, dtype=np.uint8)
+    if arr.ndim != 3 or arr.shape[2] != 3:
+        raise ValueError("encode_jpeg_rgb expects a (H, W, 3) RGB array")
+    h, w = arr.shape[:2]
+    r = arr[:, :, 0].astype(np.float64)
+    g = arr[:, :, 1].astype(np.float64)
+    b = arr[:, :, 2].astype(np.float64)
+    y = 0.299 * r + 0.587 * g + 0.114 * b
+    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
+    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
+    planes = [_pad8(p - 128.0) for p in (y, cb, cr)]
+    return _encode_jpeg(planes, h, w)
 
 
 @settings(max_examples=30, deadline=None)
@@ -149,8 +170,6 @@ def test_jpeg_color_roundtrip_bounded_and_solid_near_exact():
     """Color (3-component 4:4:4) path: the decoder's YCbCr->RGB branch
     gets a real producer. Solid colors survive within chroma-rounding
     (±2/channel); smooth gradients reconstruct closely."""
-    from mbta_etl_spark.functions.codecs import encode_jpeg_rgb
-
     solid = np.zeros((8, 8, 3), np.uint8)
     solid[:] = (120, 64, 200)
     out = decode_jpeg(encode_jpeg_rgb(solid))
@@ -195,8 +214,6 @@ def test_jpeg_color_any_shape_dims_exact(h, w, seed):
     samples per run keep the expected exceedance << 1, garbage decodes
     (uniform-independent output) still fail it almost surely, and the
     round-7 falsifier sits comfortably inside at 3.6 sigma."""
-    from mbta_etl_spark.functions.codecs import encode_jpeg_rgb
-
     rng = np.random.default_rng(seed)
     rgb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
     out = decode_jpeg(encode_jpeg_rgb(rgb))

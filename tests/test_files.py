@@ -64,36 +64,6 @@ def test_read_jsonl_clean_and_corrupt(spark, tmp_path):
     assert len(bad) == 1
 
 
-def test_write_jsonl_shards_deterministic_manifest(spark, tmp_path):
-    """Shard assignment is content-hashed (stable under repartitioning);
-    the manifest reflects what landed on disk."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mbta_etl_spark.sources.files import write_jsonl_shards
-
-    df = spark.range(100).select(
-        F.col("id").alias("doc_id"), F.concat(F.lit("text"), "id").alias("text")
-    )
-    out = str(tmp_path / "corpus")
-    manifest = write_jsonl_shards(df, out, F.col("doc_id"), 4)
-    counts = {r["shard"]: r["n_rows"] for r in manifest.collect()}
-    assert sum(counts.values()) == 100
-    assert set(counts) <= {0, 1, 2, 3}
-    # shard directories exist on disk
-    dirs = {d for d in os.listdir(out) if d.startswith("shard=")}
-    assert dirs == {f"shard={s}" for s in counts}
-    # re-export from a different partitioning lands rows identically
-    out2 = str(tmp_path / "corpus2")
-    write_jsonl_shards(df.repartition(13), out2, F.col("doc_id"), 4)
-    a = spark.read.json(out).select("doc_id", "shard")
-    b = spark.read.json(out2).select("doc_id", "shard")
-    assert {(r["doc_id"], r["shard"]) for r in a.collect()} == {
-        (r["doc_id"], r["shard"]) for r in b.collect()
-    }
-
-
 def test_compact_files_reduces_and_range_partitions(spark, tmp_path):
     """Compaction contract: ~count/target output files, every row
     preserved, and each file owns a DISJOINT doc_id range (footer

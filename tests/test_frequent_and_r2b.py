@@ -636,32 +636,6 @@ def test_d16_error_bounds(spark):
 # --- PCA eigen --------------------------------------------------------------
 
 
-def test_s15_eigensum_equals_s12_variance_sum(spark):
-    # trace(cov) == sum of per-dimension sample variances: the rows-only
-    # PCA entry is pinned to the oracle-checked s12 stats
-    from mbta_etl_spark.operators.similarity import pca_eigen
-    from mbta_etl_spark.plans.llm_registry import _emb
-
-    eig, n, trace = pca_eigen(_emb(spark, SF_DIR_SMALL), "embedding", top_k=64)
-    s12 = llm_registry.s12_dim_stats(spark, SF_DIR_SMALL).collect()
-    var_sum = sum(r.variance for r in s12)
-    assert abs(trace - var_sum) < 1e-3
-    assert abs(sum(eig) - trace) < 1e-6  # full spectrum sums to trace
-    assert all(e >= -1e-9 for e in eig)  # PSD
-    assert list(eig) == sorted(eig, reverse=True)
-    assert n == spark.read.parquet(
-        f"{SF_DIR_SMALL}/embeddings.parquet"
-    ).count()
-
-
-def test_s15_registry_rows(spark):
-    rows = llm_registry.s15_pca_eigen(spark, SF_DIR_SMALL).collect()
-    assert [r.component for r in rows] == list(range(1, 9))
-    fracs = [r.explained_frac for r in rows]
-    assert all(0.0 <= f <= 1.0 for f in fracs)
-    assert fracs == sorted(fracs, reverse=True)
-
-
 def test_s15a_spectrum_moments_match_direct_covariance(spark):
     """Σλ == trace and Σλ² == ‖cov‖_F² computed straight from the
     assembled covariance matrix — the identities the DuckDB oracle

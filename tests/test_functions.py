@@ -14,7 +14,6 @@ from mbta_etl_spark.functions import (
     norm_pandas_udf,
     token_count_bpe,
     unit,
-    universal_hash,
 )
 
 
@@ -64,17 +63,6 @@ def test_md5_32_range_and_determinism(spark):
     vals = [r["h"] for r in df.select(md5_32(F.col("s")).alias("h")).collect()]
     assert vals[0] == vals[1] != vals[2]
     assert all(0 <= v < 1 << 32 for v in vals)
-
-
-def test_universal_hash_bounds(spark):
-    df = spark.createDataFrame([((1 << 32) - 1,)], ["x"])
-    v = df.select(universal_hash(F.col("x"), a=(1 << 24) - 1, b=99).alias("h")).first()["h"]
-    assert 0 <= v < 4294967311
-    try:
-        universal_hash(F.col("x"), a=1 << 24, b=0)
-        raise AssertionError("expected ValueError for oversized multiplier")
-    except ValueError:
-        pass
 
 
 def test_token_count_bpe(spark):

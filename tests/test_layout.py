@@ -1,5 +1,5 @@
-"""Physical-layout tests: partition pruning visible in the scan, bucketed
-join with NO exchange on the bucketed key, salted aggregation correctness."""
+"""Physical-layout tests: bucketed join with NO exchange on the bucketed
+key, salted aggregation correctness, z-order file spans."""
 
 from __future__ import annotations
 
@@ -8,13 +8,7 @@ import contextlib
 
 from pyspark.sql import functions as F
 
-from mbta_etl_spark.sources.layout import (
-    explode_salts,
-    salted_count,
-    write_bucketed,
-    write_partitioned,
-)
-from tests.conftest import SF_DIR_SMALL
+from mbta_etl_spark.sources.layout import salted_count, write_bucketed
 
 
 def _plan(df) -> str:
@@ -22,18 +16,6 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "docs_by_lang")
-    write_partitioned(docs, path, ["lang"], sort_cols=["doc_id"])
-
-    pruned = spark.read.parquet(path).filter(F.col("lang") == "en")
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "lang" in plan
-    # correctness: partition column round-trips
-    assert pruned.count() == docs.filter(F.col("lang") == "en").count()
 
 
 def test_bucketed_join_no_exchange(spark, tmp_path):
@@ -66,53 +48,6 @@ def test_bucketed_join_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS customer_b")
 
 
-def test_ivf_cell_partitioned_layout_prunes_probe(spark, tmp_path):
-    """The IVF scale claim made concrete: write the assigned corpus
-    partitioned by cell, probe with a cell filter — the scan must prune
-    to the probed partition directories (PartitionFilters), reading none
-    of the other cells' files."""
-    from pyspark.sql import functions as F
-
-    from mbta_etl_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = similarity.ivf_centroids(emb, "embedding", "vec_id")
-    assigned = similarity.ivf_assign(emb, "embedding", "vec_id", cents)
-    path = str(tmp_path / "emb_by_cell")
-    write_partitioned(assigned, path, ["cell"])
-
-    probe_cells = [cents[0][0], cents[1][0]]
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    plan = _plan(scan)
-    assert "PartitionFilters" in plan and "cell" in plan
-    # pruned read: only the probed cells' rows come back
-    got_cells = {r["cell"] for r in scan.select("cell").distinct().collect()}
-    assert got_cells <= set(probe_cells)
-
-
-def test_run_sql_generic_cursor(spark):
-    """S2 parity: arbitrary SQL over the registered testdata views —
-    string in, rows out, Catalyst-planned."""
-    from mbta_etl_spark.sources.tables import run_sql
-
-    out = run_sql(
-        spark,
-        SF_DIR_SMALL,
-        """SELECT o_orderstatus, COUNT(*) AS n
-           FROM orders WHERE o_totalprice > 1000
-           GROUP BY o_orderstatus ORDER BY n DESC""",
-    ).collect()
-    assert len(out) >= 2
-    assert out[0]["n"] >= out[-1]["n"]
-    # joins across views work too
-    j = run_sql(
-        spark,
-        SF_DIR_SMALL,
-        "SELECT COUNT(*) AS n FROM lineitem JOIN orders ON l_orderkey = o_orderkey",
-    ).collect()[0]["n"]
-    assert j > 0
-
-
 def test_salted_count_matches_plain(spark):
     from mbta_etl_spark.sources.tables import load_table
 
@@ -128,13 +63,6 @@ def test_salted_count_matches_plain(spark):
         for r in salted_count(events, F.col("event_type"), 8, "key").collect()
     }
     assert salted == plain
-
-
-def test_explode_salts_covers_all(spark):
-    df = spark.range(3).withColumnRenamed("id", "k")
-    out = explode_salts(df, F.col("k"), 4)
-    assert out.count() == 12
-    assert out.select("_salted_key").distinct().count() == 12
 
 
 def test_zorder_beats_linear_sort_on_second_dimension(spark):

@@ -228,7 +228,7 @@ def test_binary_meta_roundtrip(spark, docs):
 def test_undecodable_payloads_raise(spark, docs):
     """Non-PNG/non-WAV payloads surface NotImplementedError naming the
     missing codec (raised in-kernel, so it arrives wrapped in Spark's
-    Python exception); the video sampler remains an eager stub."""
+    Python exception)."""
     from pyspark.errors.exceptions.base import PySparkException
 
     binary = multimodal.to_binary_table(docs, "text", "doc_id")
@@ -236,8 +236,6 @@ def test_undecodable_payloads_raise(spark, docs):
         multimodal.decode_image(binary).collect()
     with pytest.raises(PySparkException, match="(ValueError|NotImplementedError)"):
         multimodal.decode_audio(binary).collect()
-    with pytest.raises(NotImplementedError):
-        multimodal.sample_frames(binary)
 
 
 def test_png_decode_real_roundtrip(spark, docs):

@@ -111,26 +111,22 @@ def test_load_atomic_publish_layout(spark, tmp_path):
     assert not os.path.isabs(os.readlink(path))
 
 
-def test_compact_reduces_files_keeps_rows(spark, tmp_path):
-    """Compaction: fragmented table → few files, same rows, still
-    symlink-published (readable mid-compaction)."""
+def test_atomic_publish_rejects_reader_visible_marker(spark, tmp_path):
+    """A marker parquet readers would scan is refused before any write:
+    no new version dir appears and the published link is unchanged."""
     import glob
     import os
 
-    from mbta_etl_spark.pipeline.load import compact_parquet
+    from mbta_etl_spark.pipeline.load import atomic_publish
 
     path = str(tmp_path / "vehicles")
-    rows = [_vehicle(i, speed=float(i)) for i in range(64)]
-    # fragmented legacy table: 16 explicit partitions = 16 files
-    _vehicles_df(spark, rows).repartition(16).write.parquet(path)
-    files_before = len(glob.glob(os.path.join(os.path.realpath(path), "*.parquet")))
-    assert files_before > 1
-    n = compact_parquet(spark, path, target_files=1)
-    assert n == 64
-    files_after = len(glob.glob(os.path.join(os.path.realpath(path), "*.parquet")))
-    assert files_after == 1
-    assert os.path.islink(path)
-    assert spark.read.parquet(path).count() == 64
+    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(1)]), path)
+    versions = sorted(glob.glob(path + ".v-*"))
+    target = os.readlink(path)
+    with pytest.raises(ValueError, match="marker"):
+        atomic_publish(_vehicles_df(spark, [_vehicle(2)]), path, marker="merged_7")
+    assert sorted(glob.glob(path + ".v-*")) == versions
+    assert os.readlink(path) == target
 
 
 def test_load_migrates_legacy_real_dir(spark, tmp_path):

@@ -259,271 +259,3 @@ def test_transform_with_state_accumulates(spark, tmp_path):
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
         else:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_transform_with_map_state_per_type(spark, tmp_path):
-    """transformWithStateInPandas with MapState: per-(user, event_type)
-    counts accumulate across micro-batches — the growing-key-set state
-    shape a fixed ValueState tuple cannot hold."""
-    import pytest
-    from pyspark.sql.types import StringType
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from mbta_etl_spark.streaming.stateful import per_type_counts_stream
-
-    in_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "in"
-        src.mkdir()
-        sink = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def write(name, rows):
-            with open(src / name, "w") as f:
-                for uid, et in rows:
-                    f.write(json.dumps({"user_id": uid, "event_type": et}) + "\n")
-
-        def drain():
-            stream = spark.readStream.schema(in_schema).json(str(src))
-
-            def _append(batch_df, batch_id):
-                batch_df.write.mode("append").parquet(sink)
-
-            q = (
-                per_type_counts_stream(stream)
-                .writeStream.foreachBatch(_append)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            drain_query(q)
-
-        write("b1.jsonl", [(1, "click"), (1, "click"), (1, "view"), (2, "view")])
-        drain()
-        write("b2.jsonl", [(1, "click"), (2, "purchase")])
-        drain()
-
-        rows = spark.read.parquet(sink).collect()
-        latest: dict = {}
-        for r in rows:
-            k = (r["user_id"], r["event_type"])
-            latest[k] = max(latest.get(k, 0), r["n"])
-        assert latest[(1, "click")] == 3
-        assert latest[(1, "view")] == 1
-        assert latest[(2, "view")] == 1
-        assert latest[(2, "purchase")] == 1
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_transform_with_list_state_last_k(spark, tmp_path):
-    """transformWithStateInPandas with ListState: a bounded last-k buffer
-    per user survives micro-batches and never exceeds k."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from mbta_etl_spark.streaming.stateful import last_k_values_stream
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "in"
-        src.mkdir()
-        sink = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def drain():
-            stream = spark.readStream.schema(IN_SCHEMA).json(str(src))
-
-            def _append(batch_df, batch_id):
-                batch_df.write.mode("append").parquet(sink)
-
-            q = (
-                last_k_values_stream(stream, k=3)
-                .writeStream.foreachBatch(_append)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            drain_query(q)
-
-        _write(src, "b1.jsonl", [
-            (1, "2024-01-01T10:00:00", 1.0),
-            (1, "2024-01-01T10:01:00", 2.0),
-            (1, "2024-01-01T10:02:00", 3.0),
-            (1, "2024-01-01T10:03:00", 4.0),
-        ])
-        drain()
-        _write(src, "b2.jsonl", [(1, "2024-01-01T11:00:00", 10.0)])
-        drain()
-
-        rows = sorted(
-            spark.read.parquet(sink).collect(), key=lambda r: r["sum_kept"]
-        )
-        # batch 1: window [2,3,4] (k=3); batch 2: window [3,4,10]
-        assert [(r["n_kept"], r["sum_kept"]) for r in rows] == [
-            (3, 9.0),
-            (3, 17.0),
-        ]
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_transform_with_timers_session_expiry(spark, tmp_path):
-    """transformWithStateInPandas ProcessingTime timers: an idle user's
-    session closes via handleExpiredTimer on a later micro-batch."""
-    import time as _time
-
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from mbta_etl_spark.streaming.stateful import session_expiry_stream
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "in"
-        src.mkdir()
-        sink = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def drain():
-            stream = spark.readStream.schema(IN_SCHEMA).json(str(src))
-
-            def _append(batch_df, batch_id):
-                batch_df.write.mode("append").parquet(sink)
-
-            q = (
-                session_expiry_stream(stream, idle_ms=500)
-                .writeStream.foreachBatch(_append)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            # an armed-but-unexpired timer keeps an availableNow query
-            # alive waiting to fire it; bound the wait and stop manually
-            q.awaitTermination(20)
-            if q.isActive:
-                q.stop()
-
-        _write(src, "b1.jsonl", [
-            (1, "2024-01-01T10:00:00", 1.0),
-            (1, "2024-01-01T10:01:00", 2.0),
-        ])
-        drain()
-        _time.sleep(1.5)  # let the 500ms processing-time TTL lapse
-        _write(src, "b2.jsonl", [(2, "2024-01-01T11:00:00", 9.0)])
-        drain()
-
-        rows = [tuple(r) for r in spark.read.parquet(sink).collect()]
-        assert (1, 2, "open") in rows          # batch 1: session live
-        assert (1, 2, "closed") in rows        # batch 2: timer fired
-        assert (2, 1, "open") in rows          # new user's live session
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_transform_with_state_run_length_compression(spark, tmp_path):
-    """Streaming run-length compression (streaming form of q104): only
-    CLOSED runs are emitted, runs span micro-batch boundaries via
-    ValueState, and a steady signal emits nothing."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from mbta_etl_spark.streaming.stateful import run_length_stream
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "in"
-        src.mkdir()
-        sink = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def drain():
-            stream = spark.readStream.schema(IN_SCHEMA).json(str(src))
-
-            def _append(batch_df, batch_id):
-                batch_df.write.mode("append").parquet(sink)
-
-            q = (
-                run_length_stream(stream, band_width=20.0)
-                .writeStream.foreachBatch(_append)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            drain_query(q)
-
-        # batch 1: user 1 opens band 0 (3 rows) then band 2 (1 row) —
-        # only the band-0 run closes; user 2 stays steady (no emission)
-        _write(src, "b1.jsonl", [
-            (1, "2024-01-01T10:00:00", 5.0),
-            (1, "2024-01-01T10:01:00", 12.0),
-            (1, "2024-01-01T10:02:00", 19.0),
-            (1, "2024-01-01T10:03:00", 45.0),
-            (2, "2024-01-01T10:00:00", 7.0),
-            (2, "2024-01-01T10:01:00", 8.0),
-        ])
-        drain()
-        # batch 2: user 1's band-2 run GROWS then closes when band 0
-        # returns; user 2 still steady
-        _write(src, "b2.jsonl", [
-            (1, "2024-01-01T10:04:00", 50.0),
-            (1, "2024-01-01T10:05:00", 2.0),
-            (2, "2024-01-01T10:02:00", 9.0),
-        ])
-        drain()
-
-        rows = sorted(
-            spark.read.parquet(sink).collect(),
-            key=lambda r: (r["user_id"], r["start_ts"]),
-        )
-        assert [
-            (r.user_id, r.band, r.run_len, r.start_ts.isoformat())
-            for r in rows
-        ] == [
-            (1, 0, 3, "2024-01-01T10:00:00"),
-            # the band-2 run spans the batch boundary: 1 row in b1 + 1
-            # in b2, closed by b2's return to band 0
-            (1, 2, 2, "2024-01-01T10:03:00"),
-        ]
-        # user 2 never changed band: zero rows — the compression claim
-        assert not [r for r in rows if r.user_id == 2]
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

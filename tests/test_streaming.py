@@ -1,5 +1,6 @@
 """Streaming-path tests: snapshot file-stream → transform → upsert merge
-(availableNow drain), and watermarked windowed aggregation semantics."""
+(availableNow drain), watermarked dedup, stream joins and stream/batch
+equivalence."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from mbta_etl_spark.streaming.ingest import run_upsert_stream, windowed_event_counts
+from mbta_etl_spark.streaming.ingest import run_upsert_stream
 from streamutil import drain_query
 
 
@@ -63,79 +64,6 @@ def test_streaming_upsert_end_to_end(spark, tmp_path):
     drain_query(q)
     out = {r["id"]: r["speed"] for r in spark.read.parquet(table).collect()}
     assert out == {"veh-A": 55.0, "veh-B": 20.0, "veh-C": 30.0}
-
-
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
-
-def test_windowed_counts_batch_semantics(spark):
-    """The windowed rollup is a plain DataFrame function — verify window
-    boundary assignment on a batch frame."""
-    import datetime as dt
-
-    rows = [
-        (1, dt.datetime(2024, 1, 1, 10, 5), 1.0),
-        (2, dt.datetime(2024, 1, 1, 10, 59), 2.0),
-        (3, dt.datetime(2024, 1, 1, 11, 0), 4.0),  # next window edge
-    ]
-    df = spark.createDataFrame(rows, EVENT_SCHEMA)
-    out = {
-        r["window_start"]: (r["cnt"], r["sum_value"])
-        for r in windowed_event_counts(df).collect()
-    }
-    assert out[dt.datetime(2024, 1, 1, 10, 0)] == (2, 3.0)
-    assert out[dt.datetime(2024, 1, 1, 11, 0)] == (1, 4.0)
-
-
-def test_windowed_counts_streaming_with_late_data(spark, tmp_path):
-    """File-stream the events through the watermarked agg in append mode:
-    a late-but-within-watermark row lands in its original window."""
-    import datetime as dt
-
-    src = tmp_path / "events"
-    src.mkdir()
-    sink = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt2")
-
-    def write_batch(name, rows):
-        with open(src / name, "w") as f:
-            for eid, ts, v in rows:
-                f.write(json.dumps({"event_id": eid, "ts": ts, "value": v}) + "\n")
-
-    write_batch(
-        "b1.jsonl",
-        [
-            (1, "2024-01-01T10:05:00", 1.0),
-            (2, "2024-01-01T13:00:00", 8.0),  # advances watermark past 10:xx
-            (3, "2024-01-01T10:30:00", 2.0),  # late but within 2h watermark
-        ],
-    )
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA).json(str(src))
-    )
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_query(q)
-    # append mode emits only windows sealed by the watermark; with max ts
-    # 13:00 and 2h delay, watermark=11:00 seals the 10:00 window
-    out = {
-        r["window_start"]: (r["cnt"], r["sum_value"])
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert out[dt.datetime(2024, 1, 1, 10, 0)] == (2, 3.0)
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
@@ -194,26 +122,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         for r in spark.sql("SELECT * FROM dedup_sink").collect()
     }
     assert got == {1: 1.0, 2: 2.0, 3: 3.0}  # first arrival wins, dup dropped
-
-
-def test_sliding_windows_overlap(spark):
-    """Batch-semantics check: a row falls into duration/slide windows."""
-    import datetime as dt
-
-    from mbta_etl_spark.streaming.ingest import sliding_window_rates
-
-    rows = [(1, dt.datetime(2024, 1, 1, 10, 20), 6.0)]
-    df = spark.createDataFrame(rows, EVENT_SCHEMA)
-    out = sliding_window_rates(df).collect()
-    starts = sorted(r["window_start"] for r in out)
-    # 1h window sliding by 15m: the 10:20 row is in 4 windows
-    assert starts == [
-        dt.datetime(2024, 1, 1, 9, 30),
-        dt.datetime(2024, 1, 1, 9, 45),
-        dt.datetime(2024, 1, 1, 10, 0),
-        dt.datetime(2024, 1, 1, 10, 15),
-    ]
-    assert all(r["cnt"] == 1 and r["avg_value"] == 6.0 for r in out)
 
 
 def test_stream_static_enrichment(spark, tmp_path):
@@ -309,132 +217,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
     drain_query(q)
     rows = spark.sql("SELECT imp_id, click_id FROM attrib_sink").collect()
     assert {(r["imp_id"], r["click_id"]) for r in rows} == {(1, 10)}
-
-
-def test_streaming_session_windows_merge_and_close(spark, tmp_path):
-    """Session windows over a file stream: rows within the gap fuse into
-    one growing session; a far-apart row opens a second session."""
-    import datetime as dt
-
-    from mbta_etl_spark.streaming.ingest import session_window_counts
-
-    src = tmp_path / "sess_events"
-    src.mkdir()
-    rows = [
-        (1, "2024-01-15T10:00:00", 1.0, "click"),
-        (2, "2024-01-15T10:10:00", 1.0, "click"),  # within gap: same session
-        (3, "2024-01-15T14:00:00", 1.0, "click"),  # far: new session
-    ]
-    with open(src / "a.jsonl", "w") as f:
-        for eid, ts, v, et in rows:
-            f.write(
-                json.dumps(
-                    {"event_id": eid, "ts": ts, "value": v, "event_type": et}
-                )
-                + "\n"
-            )
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    out_rows = []
-    q = (
-        session_window_counts(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_test")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out_rows = spark.sql("SELECT * FROM sess_test").collect()
-    finally:
-        q.stop()
-    got = sorted(
-        (r["session_start"], r["session_end"], r["n_events"]) for r in out_rows
-    )
-    assert len(got) == 2
-    # first session: 10:00 merged with 10:10, ends 10:10 + 30m gap
-    assert got[0][2] == 2
-    assert got[0][1] - got[0][0] == dt.timedelta(minutes=40)
-    # second session: single row, 30m span
-    assert got[1][2] == 1
-    assert got[1][1] - got[1][0] == dt.timedelta(minutes=30)
-
-
-def test_streaming_near_dup_ingest(spark, tmp_path):
-    """Ingest-time NEAR-dedup with an on-disk band index: batch 1 seeds
-    the index; batch 2's exact copy and one-token-changed near copy of a
-    batch-1 doc are both dropped by band collision, a genuinely new doc
-    survives, and an intra-batch exact dup keeps only the smaller id."""
-    import os
-
-    from mbta_etl_spark.streaming.dedup_stream import start_near_dup_ingest_stream
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the rain "
-        "falls softly on the quiet village roofs tonight"
-    )
-    src = tmp_path / "docs"
-    src.mkdir()
-    rows1 = [
-        {"doc_id": 1, "text": base},
-        {"doc_id": 2, "text": "an entirely different story about spark "
-                              "clusters shuffling petabytes of tokens"},
-    ]
-    near = base.replace("dog", "cat")  # one token changed: near copy of 1
-    fresh = ("completely novel content mentioning neither animals nor "
-             "weather just raw unduplicated prose for the index")
-    rows2 = [
-        {"doc_id": 10, "text": base},   # exact copy of 1 -> dropped
-        {"doc_id": 11, "text": near},   # near copy of 1 -> dropped
-        {"doc_id": 12, "text": fresh},  # new -> kept
-        {"doc_id": 13, "text": fresh},  # intra-batch dup of 12 -> dropped
-    ]
-    with open(src / "a.jsonl", "w") as f:
-        for r in rows1:
-            f.write(json.dumps(r) + "\n")
-    with open(src / "b.jsonl", "w") as f:
-        for r in rows2:
-            f.write(json.dumps(r) + "\n")
-    now = time.time()
-    os.utime(src / "a.jsonl", (now - 100, now - 100))
-    os.utime(src / "b.jsonl", (now, now))
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # a then b as separate batches
-        .json(str(src))
-    )
-    q = start_near_dup_ingest_stream(
-        stream,
-        str(tmp_path / "store"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    drain_query(q)
-    kept = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    )
-    assert kept == [1, 2, 12]
-    # the index holds bands for exactly the survivors
-    idx_docs = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "store"))
-        .select("doc_id")
-        .distinct()
-        .collect()
-    )
-    assert idx_docs == [1, 2, 12]
 
 
 def test_streaming_dedup_state_survives_restart(spark, tmp_path):
