@@ -13,6 +13,7 @@ import argparse
 import sys
 
 from mbta_etl_spark.pipeline import etl, vehicle_queries as vq
+from mbta_etl_spark.pipeline.load import read_published
 from mbta_etl_spark.session import get_spark
 
 
@@ -81,14 +82,18 @@ def main(argv: list[str] | None = None) -> int:
                 args.limit, truncate=False
             )
             return 0
-        if args.sql:
-            spark.read.parquet(args.db).createOrReplaceTempView("vehicles")
-            spark.sql(args.sql).show(args.limit, truncate=False)
-            return 0
-        if not args.query:
+        if not (args.sql or args.query):
             p.print_usage()
             return 1
-        vehicles = spark.read.parquet(args.db)
+        published = read_published(spark, args.db)
+        if published is None:
+            print(f"no vehicles table at {args.db}", file=sys.stderr)
+            return 1
+        vehicles = published.df
+        if args.sql:
+            vehicles.createOrReplaceTempView("vehicles")
+            spark.sql(args.sql).show(args.limit, truncate=False)
+            return 0
         dispatch = {
             "top10": lambda: vq.top10_fastest(vehicles),
             "routes": lambda: vq.route_breakdown(vehicles),

@@ -9,34 +9,37 @@ atomically repoint readers at it. With a transactional table format
 (Delta/Iceberg) this whole module collapses to
 ``MERGE INTO target USING batch ON key``.
 
-Atomicity: ``path`` is a symlink to an immutable version directory
-(``<path>.v-<n>``). Publishing a new version is a single
-``os.replace(tmp_link, path)`` — atomic on POSIX — so a concurrent
-``spark.read.parquet(path)`` resolves either the old version or the new
-one, never a half-written or missing table. A crash at any point leaves
-the current version intact; stale version dirs and temp links from
-crashed writers are swept on the next successful upsert. (The previous
-implementation renamed the live directory away before renaming staging in
-— leaving a window with no table at all; VERDICT r1 "what's wrong" #4.)
+Layout: ``path`` is a symlink to an immutable version directory
+(``<path>.v-<n>``) holding the part files and a ``_version.json``
+manifest: the written Spark schema, the row count and the streaming
+batch id (format in README "Table layout"). The manifest is written
+inside the dir before the link swap, so it commits with the data, and
+publishing is a single ``os.replace(tmp_link, path)`` — atomic on POSIX —
+so a reader resolves either the old version or the new one, never a
+half-written or missing table. :func:`read_published` is the one reader:
+it resolves the link once and reads that version dir, so a query keeps
+its files across the next publish, which keeps the version it replaced
+and sweeps the older ones. A crash at any point leaves the current
+version intact; stale version dirs and temp links from crashed writers
+are swept on the next successful publish.
 
 Scale shape: the merge is one shuffle keyed on ``id``. A poll pass merges
 a ~10k-row batch into a ~12k-row table, where fixed costs outweigh the
 data work, so the merge is shaped for that:
 
-- the stored version is read with the batch's schema, because
-  ``spark.read.parquet`` without one launches a footer job to infer a
-  schema this code wrote. The Spark schema recorded in one part file's
-  footer, read with pyarrow, keeps a stored version whose column names
-  or types differ failing loudly, before any write;
+- the stored version is read with the schema its manifest records,
+  because a parquet read without one launches a footer job to infer a
+  schema this code wrote. A batch whose column names or types differ
+  from the recorded ones fails loudly, before any write;
 - when the merge input is estimated to be no larger than the session's
   broadcast threshold, the union is hash-partitioned on the key into one
   partition, which the keyed window reuses, instead of the session's 32
   shuffle partitions sized for the registry: at poll scale the 32
   map-side buckets cost more than the data. The estimate needs no job:
-  the stored rows (part-file footers) times the row width, plus the
-  batch plan's size statistic. A larger merge, such as a streaming
-  backfill of many snapshots, keeps the session's shuffle, so AQE still
-  coalesces and splits it and the write stays parallel;
+  the manifest's row count times the row width, plus the batch plan's
+  size statistic. A larger merge, such as a streaming backfill of many
+  snapshots, keeps the session's shuffle, so AQE still coalesces and
+  splits it and the write stays parallel;
 - each batch row carries its position (``monotonically_increasing_id``),
   so of two rows with one id in one ordered payload the later wins, as
   in the reference's ordered ``INSERT OR REPLACE`` loop.
@@ -44,9 +47,9 @@ data work, so the merge is shaped for that:
 At 100 TB you would (a) partition the table (e.g. by route/day) and
 rewrite only partitions containing incoming keys (the batch's
 key→partition map is small and driver-computable), or (b) use a format
-with merge-on-read. The version-dir + atomic-link scheme is exactly a
-poor-man's snapshot manifest — the same mechanism those formats use,
-minus the per-partition granularity.
+with merge-on-read. The version dir + manifest + atomic link is a
+poor-man's table log — the per-version metadata record those formats
+write before the commit, minus the per-file granularity.
 """
 
 from __future__ import annotations
@@ -54,26 +57,48 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import NamedTuple
 
-import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from mbta_etl_spark.operators.core import latest_by_key
 
-# where Spark's parquet writer records the table's Spark schema
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# a version dir's manifest; the leading "_" keeps parquet readers off it
+_MANIFEST = "_version.json"
 
 
-def _current_version(path: str) -> str | None:
-    """The live data directory behind ``path``, or None if absent.
-    Handles both the symlink layout and a legacy real directory."""
-    if os.path.islink(path):
-        return os.path.realpath(path)
-    if os.path.isdir(path):
-        return path  # legacy layout: data written directly at path
-    return None
+class Published(NamedTuple):
+    """The version a table path links to: its data, read from the version
+    dir with the schema the manifest records, the manifest's row count,
+    and the streaming batch id that wrote it (None outside a stream)."""
+
+    df: DataFrame
+    rows: int
+    batch_id: int | None
+
+
+def read_published(spark: SparkSession, path: str) -> Published | None:
+    """The published version at ``path``, or None when nothing is there.
+    The link is resolved once, so the DataFrame keeps reading that
+    version across the next publish, and the recorded schema means no
+    job runs. Anything else at ``path`` (a plain directory, or a link to
+    a dir with no manifest) raises ``ValueError``."""
+    base = path.rstrip("/")
+    if not os.path.lexists(base):
+        return None
+    version_dir = os.path.realpath(base)
+    manifest = os.path.join(version_dir, _MANIFEST)
+    if not (os.path.islink(base) and os.path.isfile(manifest)):
+        raise ValueError(
+            f"{base} is not a published table: it must link to a version "
+            f"dir holding {_MANIFEST}"
+        )
+    with open(manifest) as f:
+        m = json.load(f)
+    df = spark.read.schema(StructType.fromJson(m["schema"])).parquet(version_dir)
+    return Published(df, m["rows"], m["batch_id"])
 
 
 def _next_version_dir(base: str) -> str:
@@ -85,86 +110,62 @@ def _next_version_dir(base: str) -> str:
         n += 1
 
 
-def atomic_publish(df: DataFrame, path: str, marker: str | None = None) -> None:
-    """Write ``df`` as a fresh immutable version dir and atomically point
-    ``path`` (a symlink) at it. Readers resolving mid-swap see either the
-    old version or the new — never a missing or half-written table. Old
-    versions and stale temp links (from crashed writers) are swept after
-    the publish.
+def atomic_publish(df: DataFrame, path: str, batch_id: int | None) -> None:
+    """Write ``df`` and its manifest as a fresh immutable version dir and
+    atomically point ``path`` (a symlink) at it. Readers resolving
+    mid-swap see either the old version or the new — never a missing or
+    half-written table. The row count is observed on the write itself,
+    so the manifest adds no job. ``batch_id`` is the streaming
+    micro-batch being merged (None outside a stream): recorded with the
+    data, it commits in the same swap, which is what lets
+    :func:`claim_batch` make at-least-once foreachBatch redelivery
+    exactly-once.
 
-    ``marker`` (optional, must start with ``_`` so parquet readers skip
-    it; any other name raises ``ValueError`` before anything is written)
-    is landed INSIDE the version dir before the symlink swap, so it
-    commits atomically WITH the data — the mechanism the streaming
-    merges use to record the last merged batch id and make at-least-once
-    foreachBatch redelivery exactly-once (``published_marker`` reads it
-    back)."""
-    if marker is not None and not marker.startswith("_"):
-        raise ValueError(f"marker {marker!r} must start with '_' (reader-invisible)")
+    After the swap every other version is swept — older versions, and
+    the dirs and temp links of crashed writers — except the one the swap
+    replaced, which a reader opened before the swap may still scan."""
     base = path.rstrip("/")
     version_dir = _next_version_dir(base)
-    df.write.mode("overwrite").parquet(version_dir)
-    if marker is not None:
-        with open(os.path.join(version_dir, marker), "w"):
-            pass
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(version_dir)
+    manifest = {
+        "schema": df.schema.jsonValue(),
+        "rows": obs.get["rows"],
+        "batch_id": batch_id,
+    }
+    with open(os.path.join(version_dir, _MANIFEST), "w") as f:
+        json.dump(manifest, f)
 
     # atomic symlink replacement (os.replace of a symlink over a symlink
     # is atomic on POSIX; a temp link in the same dir guarantees
     # same-filesystem rename)
+    replaced = os.readlink(base) if os.path.islink(base) else None
     tmp_link = version_dir + ".publish"
     if os.path.lexists(tmp_link):
         os.remove(tmp_link)
     os.symlink(os.path.basename(version_dir), tmp_link)
-    if os.path.isdir(base) and not os.path.islink(base):
-        # legacy real-dir layout: one-time migration. rename-away then
-        # replace — the only (documented) instant with no table at path,
-        # and it never recurs once the table is link-based.
-        os.rename(base, base + ".v-legacy")
     os.replace(tmp_link, base)
 
-    # GC: previous version + any stale dirs/links from crashed writers
-    keep = os.path.realpath(base)
+    keep = {os.path.basename(version_dir), replaced}
     parent = os.path.dirname(base) or "."
     prefix = os.path.basename(base) + ".v-"
     for name in os.listdir(parent):
+        if not name.startswith(prefix) or name in keep:
+            continue
         full = os.path.join(parent, name)
-        if not name.startswith(prefix):
-            continue
-        if os.path.realpath(full) == keep:
-            continue
-        if os.path.islink(full) or os.path.isfile(full):
-            os.remove(full)
-        else:
+        if os.path.isdir(full) and not os.path.islink(full):
             shutil.rmtree(full)
+        else:
+            os.remove(full)
 
 
-def published_marker(path: str, prefix: str) -> str | None:
-    """Read back the marker (if any) landed with the CURRENTLY published
-    version at ``path`` (see ``atomic_publish(marker=...)``); returns
-    the marker's suffix after ``prefix``, or None. Used by the streaming
-    merges to skip an already-merged (redelivered) micro-batch."""
-    base = os.path.realpath(path.rstrip("/"))
-    if not os.path.isdir(base):
-        return None
-    for name in os.listdir(base):
-        if name.startswith(prefix):
-            return name[len(prefix):]
-    return None
-
-
-_BATCH_MARKER_PREFIX = "_merged_batch_"
-
-
-def batch_marker(batch_id: int) -> str:
-    """Marker name recording a streaming merge's batch id (pass as
-    ``atomic_publish(..., marker=batch_marker(id))``)."""
-    return f"{_BATCH_MARKER_PREFIX}{batch_id}"
-
-
-def claim_batch(table_path: str, batch_id: int) -> bool:
-    """Shared idempotence guard for at-least-once foreachBatch merges
-    (the one mechanism both streaming sinks use — a single copy so the
-    marker string and the comparison can never drift apart):
+def claim_batch(
+    table_path: str, current: Published | None, batch_id: int
+) -> bool:
+    """Shared idempotence guard for at-least-once foreachBatch merges,
+    given the table's ``current`` version (:func:`read_published`):
 
     - returns True when the batch should merge (id advances the table);
     - returns False for a REDELIVERY of the exactly-one batch the
@@ -175,10 +176,9 @@ def claim_batch(table_path: str, batch_id: int) -> bool:
       Treating that as redelivery would silently DROP new data batch
       after batch; failing loudly forces the operator to reset the
       table or the checkpoint together."""
-    prev = published_marker(table_path, _BATCH_MARKER_PREFIX)
-    if prev is None:
+    committed = None if current is None else current.batch_id
+    if committed is None:
         return True
-    committed = int(prev)
     if batch_id == committed:
         return False
     if batch_id < committed:
@@ -191,47 +191,14 @@ def claim_batch(table_path: str, batch_id: int) -> bool:
     return True
 
 
-def _part_files(version_dir: str) -> list[str]:
-    """The data files of a version dir: everything a parquet reader would
-    scan, i.e. not ``_``/``.``-prefixed (``_SUCCESS``, markers, ``.crc``)."""
-    return [
-        e.path for e in os.scandir(version_dir)
-        if e.is_file() and not e.name.startswith(("_", "."))
-    ]
-
-
-def _check_stored_schema(
-    version_dir: str, parts: list[str], batch: DataFrame
-) -> None:
-    """Raise ``ValueError`` unless the stored version holds the batch's
-    columns with the batch's types, as recorded by Spark in one part
-    file's footer (nullability and column order aside)."""
-    meta = (pq.read_schema(parts[0]).metadata or {}) if parts else {}
-    recorded = meta.get(_SPARK_SCHEMA_KEY)
-    stored = StructType.fromJson(json.loads(recorded)) if recorded else StructType()
-    have = {f.name: f.dataType.simpleString() for f in stored}
-    want = {f.name: f.dataType.simpleString() for f in batch.schema}
-    if have != want:
-        raise ValueError(
-            f"stored version {version_dir} has columns {sorted(have.items())}, "
-            f"the batch has {sorted(want.items())}"
-        )
-
-
-def _fits_one_partition(
-    spark: SparkSession, batch: DataFrame, parts: list[str]
-) -> bool:
+def _fits_one_partition(spark: SparkSession, batch: DataFrame, rows: int) -> bool:
     """Whether the merge input is small enough for one task: no larger
     than the session's broadcast threshold (``autoBroadcastJoinThreshold``,
     -1 turns this off). Estimated without a job in Spark's in-memory row
-    size: the stored rows (footer counts) times the row width, plus the
-    batch plan's size statistic (a source with no size reports
-    Long.MaxValue)."""
+    size: the stored ``rows`` times the row width, plus the batch plan's
+    size statistic (a source with no size reports Long.MaxValue)."""
     limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     budget = limit - batch._jdf.queryExecution().analyzed().stats().sizeInBytes()
-    if budget < 0 or sum(os.path.getsize(p) for p in parts) > budget:
-        return False  # the files alone exceed it; their rows are larger
-    rows = sum(pq.read_metadata(p).num_rows for p in parts)
     return rows * batch._jdf.schema().defaultSize() <= budget
 
 
@@ -247,15 +214,15 @@ def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:
     Publishing goes through :func:`atomic_publish`, so readers never
     observe a missing table.
 
-    The stored version is read with ``batch.schema``, so no footer job
-    runs. It must hold the batch's column names and types, checked on
-    the Spark schema in one part file's footer; a mismatch raises
-    ``ValueError`` before anything is written. A merge estimated to be no
-    larger than ``autoBroadcastJoinThreshold`` is hash-partitioned on
-    ``id`` into one partition; a larger one, and the first pass with
-    nothing stored, shuffle as the session's defaults decide."""
+    The stored version is read through :func:`read_published`, so no
+    footer job runs. Its recorded column names and types must equal the
+    batch's; a mismatch raises ``ValueError`` before anything is
+    written. A merge estimated to be no larger than
+    ``autoBroadcastJoinThreshold`` is hash-partitioned on ``id`` into
+    one partition; a larger one, and the first pass with nothing
+    stored, shuffle as the session's defaults decide."""
     base = path.rstrip("/")
-    current = _current_version(base)
+    current = read_published(spark, base)
 
     # batch order, so the last in-batch occurrence of a key wins
     new = batch.withColumns(
@@ -264,15 +231,18 @@ def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:
     if current is None:
         merged = new
     else:
-        parts = _part_files(current)
-        _check_stored_schema(current, parts, batch)
-        old = spark.read.schema(batch.schema).parquet(current).withColumns(
-            {"_src": F.lit(0), "_ord": F.lit(0)}
-        )
+        have = {f.name: f.dataType.simpleString() for f in current.df.schema}
+        want = {f.name: f.dataType.simpleString() for f in batch.schema}
+        if have != want:
+            raise ValueError(
+                f"stored table {base} has columns {sorted(have.items())}, "
+                f"the batch has {sorted(want.items())}"
+            )
+        old = current.df.withColumns({"_src": F.lit(0), "_ord": F.lit(0)})
         merged = new.unionByName(old)
-        if _fits_one_partition(spark, batch, parts):
+        if _fits_one_partition(spark, batch, current.rows):
             merged = merged.repartition(1, "id")
     winner = latest_by_key(
         merged, ["id"], [F.desc("ingested_at"), F.desc("_src"), F.desc("_ord")]
     ).drop("_src", "_ord")
-    atomic_publish(winner, base)
+    atomic_publish(winner, base, None)

@@ -5,8 +5,8 @@ operator in operators/frequent.py.
 State lives in the TABLE (an MG summary is mergeable, Agarwal et al.
 PODS'12), not the stream engine, so like streaming/rollup.py the
 aggregate survives restarts via checkpoint replay; redelivered batches
-(foreachBatch is at-least-once) are skipped through the batch-id
-marker published atomically with the data, making the merges
+(foreachBatch is at-least-once) are skipped through the batch id
+the version manifest commits with the data, making the merges
 exactly-once. Per-batch cost: one batch-sized groupBy plus a
 merge over <= 2*capacity summary rows; standing state is O(capacity)
 regardless of stream length. Counts are LOWER BOUNDS with error at most
@@ -17,15 +17,13 @@ sketch into an exact answer whenever one is needed.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from mbta_etl_spark.operators.frequent import mg_merge, mg_summarize
 from mbta_etl_spark.pipeline.load import (
     atomic_publish,
-    batch_marker,
     claim_batch,
+    read_published,
 )
 
 
@@ -37,24 +35,20 @@ def merge_mg_batch(
     capacity: int,
 ) -> None:
     """One idempotent foreachBatch merge. foreachBatch is AT-LEAST-once,
-    so the merge records the batch id inside the published version
-    (atomic_publish marker — data + id commit in one symlink swap) and
+    so the merge records the batch id in the published version's
+    manifest (data + id commit in one symlink swap) and
     the shared ``claim_batch`` guard skips a redelivered batch (raising
     on id regression = broken checkpoint/table lineage). Without the
     skip, a replayed batch would inflate effective N past the trim
     bound (error > N/capacity), which would break the 'candidates ⊇
     true heavy hitters' guarantee the exact-recount consumers (st03)
     rely on."""
-    if not claim_batch(table_path, batch_id):
+    current = read_published(batch_df.sparkSession, table_path)
+    if not claim_batch(table_path, current, batch_id):
         return  # redelivered batch: already merged and published
     inc = mg_summarize(batch_df, key, capacity)
-    spark = batch_df.sparkSession
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path)
-        out = mg_merge(existing, inc, key, capacity)
-    else:
-        out = inc
-    atomic_publish(out, table_path, marker=batch_marker(batch_id))
+    out = inc if current is None else mg_merge(current.df, inc, key, capacity)
+    atomic_publish(out, table_path, batch_id)
 
 
 def start_heavy_hitter_stream(

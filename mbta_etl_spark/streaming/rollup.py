@@ -7,9 +7,9 @@ This is the foreachBatch form of a materialized view: state lives in the
 TABLE (mergeable partials), not the stream engine, so the aggregate
 survives restarts for free. foreachBatch is AT-LEAST-once — the
 checkpoint can redeliver the last batch after a crash between publish
-and commit — so each merge records its batch id inside the published
-version (atomic_publish marker: data + id in one symlink swap) and
-skips redelivered ids, making the merge exactly-once end to end.
+and commit — so each merge records its batch id in the published
+version's manifest (data + id commit in one symlink swap) and skips
+redelivered ids, making the merge exactly-once end to end.
 
 Scale: per micro-batch cost is one partial aggregation of the batch plus
 a merge shuffle over partial ROWS (bucket × key cardinality), never the
@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from mbta_etl_spark.operators.rollup import rollup_increment, rollup_merge
 from mbta_etl_spark.pipeline.load import (
     atomic_publish,
-    batch_marker,
     claim_batch,
+    read_published,
 )
 
 
@@ -41,26 +41,20 @@ def merge_rollup_batch(
     """One idempotent foreachBatch merge. foreachBatch is AT-LEAST-once
     (a crash between the table publish and the checkpoint commit
     redelivers the same batch id on restart), so the merge records the
-    batch id INSIDE the published version via atomic_publish's marker —
-    data and batch id commit in one symlink swap — and the shared
-    ``claim_batch`` guard skips a redelivered batch (and fails loudly on
-    an id regression, which means checkpoint/table lineage broke). That
+    batch id in the published version's manifest — data and batch id
+    commit in one symlink swap — and the shared ``claim_batch`` guard
+    skips a redelivered batch (and fails loudly on an id regression,
+    which means checkpoint/table lineage broke). That
     makes the merge exactly-once end to end; without it a replayed
     batch would double-count into cnt/sum."""
-    if not claim_batch(table_path, batch_id):
+    current = read_published(batch_df.sparkSession, table_path)
+    if not claim_batch(table_path, current, batch_id):
         return  # redelivered batch: already merged and published
     inc = rollup_increment(
         batch_df, F.col("ts"), F.col("value"), keys, bucket
     )
-    spark = batch_df.sparkSession
-    import os
-
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path)
-        merged = rollup_merge(existing, inc)
-    else:
-        merged = inc
-    atomic_publish(merged, table_path, marker=batch_marker(batch_id))
+    merged = inc if current is None else rollup_merge(current.df, inc)
+    atomic_publish(merged, table_path, batch_id)
 
 
 def start_rollup_stream(

@@ -103,21 +103,20 @@ def merge_profile_batch(
     at-least-once, so the merge follows st02's exactly-once
     discipline — the shared ``claim_batch`` guard skips the one batch
     a recovered checkpoint can redeliver (and fails loudly on an id
-    regression), and ``atomic_publish`` commits data + batch id in one
-    symlink swap. Scale shape: the merge shuffles profile ROWS (one
-    per key seen in the batch + one per standing key), never raw
-    events — the same table-state economics as the rollup merge."""
-    import os
-
+    regression), and ``atomic_publish`` commits data + batch id (the
+    version manifest) in one symlink swap. Scale shape: the merge
+    shuffles profile ROWS (one per key seen in the batch + one per
+    standing key), never raw events — the same table-state economics
+    as the rollup merge."""
     from mbta_etl_spark.pipeline.load import (
         atomic_publish,
-        batch_marker,
         claim_batch,
+        read_published,
     )
 
-    if not claim_batch(table_path, batch_id):
+    current = read_published(batch_df.sparkSession, table_path)
+    if not claim_batch(table_path, current, batch_id):
         return  # redelivered batch: already merged and published
-    spark = batch_df.sparkSession
     # batch_df appears TWICE in the merged plan (anti-join probe +
     # union arm); an unpersisted micro-batch DataFrame may be
     # recomputed per appearance, re-executing the upstream
@@ -127,14 +126,13 @@ def merge_profile_batch(
     # persist-a-reused-batchDF recommendation).
     batch_df.persist()
     try:
-        if os.path.exists(table_path):
-            existing = spark.read.parquet(table_path)
-            merged = existing.join(
+        if current is None:
+            merged = batch_df
+        else:
+            merged = current.df.join(
                 batch_df.select("user_id"), "user_id", "left_anti"
             ).unionByName(batch_df)
-        else:
-            merged = batch_df
-        atomic_publish(merged, table_path, marker=batch_marker(batch_id))
+        atomic_publish(merged, table_path, batch_id)
     finally:
         batch_df.unpersist()
 

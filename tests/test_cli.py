@@ -127,3 +127,45 @@ def test_cli_sql_counts_loaded_vehicles(spark, monkeypatch, capsys, vehicles_db)
         if line.startswith("|")
     ]
     assert (header, value) == ("n_loaded", str(len(VEHICLES)))
+
+
+@pytest.mark.parametrize(
+    "args",
+    [["--query", "count"], ["--sql", "select count(*) from vehicles"]],
+    ids=["query", "sql"],
+)
+def test_cli_opening_the_table_runs_no_job(
+    spark, monkeypatch, capsys, vehicles_db, args
+):
+    """`--query` and `--sql` open the table through ``read_published``,
+    with the schema its manifest records, so no job infers it."""
+    cli = _patched_cli(spark, monkeypatch)
+    sc = spark.sparkContext
+    group = f"cli-open-{args[0]}"
+    opened = []
+
+    def read_published(spark, path):
+        sc.setJobGroup(group, "open the vehicles table")
+        try:
+            opened.append(cli_read(spark, path))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return opened[-1]
+
+    cli_read = cli.read_published
+    monkeypatch.setattr(cli, "read_published", read_published)
+    assert cli.main([*args, "--db", vehicles_db]) == 0
+    assert len(opened) == 1 and opened[0].rows == len(VEHICLES)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert str(len(VEHICLES)) in capsys.readouterr().out
+
+
+@pytest.mark.parametrize("args", [["--query", "count"], ["--sql", "select 1"]],
+                         ids=["query", "sql"])
+def test_cli_absent_db_exits_1_naming_path(spark, monkeypatch, capsys, tmp_path, args):
+    cli = _patched_cli(spark, monkeypatch)
+    db = str(tmp_path / "nowhere")
+    assert cli.main([*args, "--db", db]) == 1
+    assert db in capsys.readouterr().err
