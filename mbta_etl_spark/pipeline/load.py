@@ -23,7 +23,7 @@ and sweeps the older ones. A crash at any point leaves the current
 version intact; stale version dirs and temp links from crashed writers
 are swept on the next successful publish.
 
-Scale shape: the merge is one shuffle keyed on ``id``. A poll pass merges
+Scale shape: the merge is a keyed window on ``id``. A poll pass merges
 a ~10k-row batch into a ~12k-row table, where fixed costs outweigh the
 data work, so the merge is shaped for that:
 
@@ -32,14 +32,17 @@ data work, so the merge is shaped for that:
   schema this code wrote. A batch whose column names or types differ
   from the recorded ones fails loudly, before any write;
 - when the merge input is estimated to be no larger than the session's
-  broadcast threshold, the union is hash-partitioned on the key into one
-  partition, which the keyed window reuses, instead of the session's 32
-  shuffle partitions sized for the registry: at poll scale the 32
-  map-side buckets cost more than the data. The estimate needs no job:
-  the manifest's row count times the row width, plus the batch plan's
-  size statistic. A larger merge, such as a streaming backfill of many
-  snapshots, keeps the session's shuffle, so AQE still coalesces and
-  splits it and the write stays parallel;
+  broadcast threshold, the union (or, on the first pass, the batch) is
+  coalesced into one partition. One partition already clusters every
+  key, so the window needs no exchange and the pass is one job of one
+  task: reading, merging and writing. A hash partitioning into one
+  partition would still run a shuffle-map job, and the session's 32
+  shuffle partitions, sized for the registry, cost more than the data
+  at poll scale. The estimate needs no job: the manifest's row count
+  times the row width, plus the batch plan's size statistic. A larger
+  merge, such as a streaming backfill of many snapshots, keeps the
+  session's shuffle, so AQE still coalesces and splits it and the write
+  stays parallel;
 - each batch row carries its position (``monotonically_increasing_id``),
   so of two rows with one id in one ordered payload the later wins, as
   in the reference's ordered ``INSERT OR REPLACE`` loop.
@@ -218,9 +221,9 @@ def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:
     footer job runs. Its recorded column names and types must equal the
     batch's; a mismatch raises ``ValueError`` before anything is
     written. A merge estimated to be no larger than
-    ``autoBroadcastJoinThreshold`` is hash-partitioned on ``id`` into
-    one partition; a larger one, and the first pass with nothing
-    stored, shuffle as the session's defaults decide."""
+    ``autoBroadcastJoinThreshold``, the first pass's included, is
+    coalesced into one partition and runs with no shuffle; a larger one
+    shuffles on ``id`` as the session's defaults decide."""
     base = path.rstrip("/")
     current = read_published(spark, base)
 
@@ -240,8 +243,9 @@ def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:
             )
         old = current.df.withColumns({"_src": F.lit(0), "_ord": F.lit(0)})
         merged = new.unionByName(old)
-        if _fits_one_partition(spark, batch, current.rows):
-            merged = merged.repartition(1, "id")
+    if _fits_one_partition(spark, batch, 0 if current is None else current.rows):
+        # one partition already clusters every key: no exchange is planned
+        merged = merged.coalesce(1)
     winner = latest_by_key(
         merged, ["id"], [F.desc("ingested_at"), F.desc("_src"), F.desc("_ord")]
     ).drop("_src", "_ord")

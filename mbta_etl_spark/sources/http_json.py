@@ -9,25 +9,32 @@ Projection follows Go's ``json.Unmarshal`` (reference
 pipeline/extract.go:28 via model/model.go:8-30): unknown JSON keys are
 dropped, missing keys are null, JSON numbers coerce to the declared
 width, and a ``null`` data element is an all-null row. Error semantics
-are preserved: non-2xx responses, malformed JSON and type conflicts
-abort the run with :class:`ExtractError` (main_test.go:72-108) —
-nothing is silently skipped.
+are preserved: non-2xx responses, malformed JSON (the ``NaN`` and
+``Infinity`` tokens included), type conflicts and numbers out of the
+declared range abort the run with :class:`ExtractError`
+(main_test.go:72-108) — nothing is silently skipped.
 
-Two faces share the one decoder:
+Two faces share these semantics:
 
 - **Driver** (``ingest_payload``): the paper's ``etl.run`` path. One API
   snapshot is driver-resident by construction (reference README reports
-  373-522 vehicles), so the projected tuples become one ``pyarrow.Table``
-  (one Arrow array per top-level field) that ``createDataFrame`` hands to
-  the JVM whole. A Python list would instead be parallelized as a
-  pickled RDD and re-shipped through Python workers by every job that
-  scans it, the upsert's shuffle included.
+  373-522 vehicles). ``parse_payload`` decodes it with Arrow's C++ JSON
+  reader under the envelope schema, straight into one ``pyarrow.Table``
+  that ``createDataFrame`` hands to the JVM whole. A body Arrow refuses,
+  or could decide differently, takes the ``json.loads`` decoder and
+  projector below, so every body is accepted or aborted, and decoded,
+  as that decoder alone would. A Python list would instead be
+  parallelized as a pickled RDD and re-shipped through Python workers by
+  every job that scans it.
 - **Registered source** (``HttpJsonDataSource``)::
 
     spark.dataSource.register(HttpJsonDataSource)
     spark.read.format("http_json").option("urls", ...).load()        # batch
     spark.readStream.format("http_json").option("url", ...).load()   # poll
 
+  Both readers project ``json.loads`` values with the compiled
+  projector: a caller's schema may hold map types, which Arrow's JSON
+  reader cannot build.
   *Batch* (``reader``): one :class:`InputPartition` per URL, fetched ON
   EXECUTORS — a backfill over N archived snapshot URLs is an
   N-way-parallel scan with no driver bottleneck.
@@ -56,12 +63,15 @@ from __future__ import annotations
 
 import functools
 import json
+import math
 import re
 import time
 from typing import Any, Callable, Iterator, Sequence, Tuple
 from urllib.request import urlopen
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.json as pa_json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
@@ -88,6 +98,13 @@ from pyspark.sql.types import (
 from mbta_etl_spark.pipeline.schema import RAW_VEHICLE_SCHEMA
 
 _RAW_ARROW_SCHEMA = to_arrow_schema(RAW_VEHICLE_SCHEMA)
+# the whole envelope as Arrow reads it: one row whose ``data`` list holds
+# the raw items; other keys are skipped, and pretty-printed bodies parse
+_ENVELOPE_PARSE = pa_json.ParseOptions(
+    explicit_schema=pa.schema([("data", pa.list_(pa.struct(list(_RAW_ARROW_SCHEMA))))]),
+    unexpected_field_behavior="ignore",
+    newlines_in_values=True,
+)
 
 
 class ExtractError(RuntimeError):
@@ -112,12 +129,19 @@ def fetch_json(url: str, timeout: float = 30.0) -> str:
         raise ExtractError(f"failed to fetch {url}: {e}") from e
 
 
-def parse_payload(body: str) -> list[Any]:
-    """Decode the JSON:API envelope; malformed JSON or a missing/invalid
-    ``data`` array aborts (reference main_test.go:91-108)."""
+def _reject_constant(token: str) -> None:
+    raise ExtractError(f"failed to parse JSON: {token} is not a JSON number")
+
+
+def _decode_envelope(body: str) -> list[Any]:
+    """Decode the JSON:API envelope with ``json.loads`` and return its
+    ``data`` items. Malformed JSON aborts, the ``NaN``/``Infinity``
+    tokens included (Go's scanner rejects them), as does a missing or
+    invalid ``data`` array (reference main_test.go:91-108)."""
     try:
-        doc = json.loads(body)
-    except json.JSONDecodeError as e:
+        doc = json.loads(body, parse_constant=_reject_constant)
+    except (ValueError, RecursionError) as e:
+        # ValueError also covers an integer literal past Python's digit limit
         raise ExtractError(f"failed to parse JSON: {e}") from e
     data = doc.get("data") if isinstance(doc, dict) else None
     if not isinstance(data, list):
@@ -147,9 +171,11 @@ def _typed(kinds: tuple, what: str, name: str, convert=None) -> Callable[[Any], 
 @functools.cache
 def _projector(dtype: DataType) -> Callable[[Any], Any]:
     """Compile ``dtype`` once into a json.loads value -> schema-shaped
-    value function: unknown object keys dropped, missing keys null, JSON
-    numbers coerced to the declared width (an integral float fills an
-    int; Go's overflow error is kept), kind conflicts abort."""
+    value function, following json.Unmarshal: unknown object keys
+    dropped, missing keys null, JSON numbers coerced to the declared
+    width, and width overflow, a number past the double range and kind
+    conflicts abort. One rule is this decoder's own and not Go's, which
+    rejects it: an integral float (``180.0``, ``1e2``) fills an int."""
     name = dtype.simpleString()
     if isinstance(dtype, StructType):
         fields = [(f.name, _projector(f.dataType)) for f in dtype.fields]
@@ -174,7 +200,19 @@ def _projector(dtype: DataType) -> Callable[[Any], Any]:
     if isinstance(dtype, BooleanType):
         return _typed((bool,), "JSON bool", name)
     if isinstance(dtype, (FloatType, DoubleType)):
-        return _typed((float, int), "JSON number", name, float)
+
+        def finite(v):
+            # strconv.ParseFloat's range error: 1E400 decodes to inf, and
+            # an integer literal past the double range cannot convert
+            try:
+                f = float(v)
+            except OverflowError:
+                f = math.inf
+            if not math.isfinite(f):
+                raise ExtractError(f"number out of range for {name}")
+            return f
+
+        return _typed((float, int), "JSON number", name, finite)
     if type(dtype) not in _INT_BITS:
         return _typed((), "a type http_json supports", name)
     hi = 1 << (_INT_BITS[type(dtype)] - 1)
@@ -198,28 +236,83 @@ def _project_rows(items: list[Any], schema: StructType) -> list[Tuple]:
     return [null_row if item is None else project(item) for item in items]
 
 
-def ingest_payload(spark: SparkSession, body: str) -> DataFrame:
-    """Raw JSON body → DataFrame with the declared nested schema.
+def _arrow_envelope(body: str) -> pa.Table | None:
+    """The raw table decoded by Arrow's C++ JSON reader, or None where it
+    refuses the body or could decide it differently from
+    :func:`_decode_envelope`: the ``NaN``, ``Inf`` and ``Infinity``
+    tokens and a BOM (Arrow accepts them), a document that is not one envelope with a
+    ``data`` array (``{"data": null}``, a missing ``data``, two
+    documents), and a non-finite double (an integer literal past the
+    double range reads as inf). Arrow itself refuses integral floats in
+    int columns, duplicate keys and ``1E400``."""
+    if body.startswith("\ufeff") or "NaN" in body or "Inf" in body:
+        return None
+    try:
+        raw = body.encode()
+        doc = pa_json.read_json(
+            pa.BufferReader(raw),
+            read_options=pa_json.ReadOptions(use_threads=False, block_size=len(raw) + 1),
+            parse_options=_ENVELOPE_PARSE,
+        )
+    except (pa.ArrowException, UnicodeEncodeError):
+        return None
+    data = doc.column("data")
+    if doc.num_rows != 1 or data.null_count:
+        return None
+    items = data.combine_chunks().flatten()  # the data[] structs
+    table = pa.Table.from_arrays(items.flatten(), schema=_RAW_ARROW_SCHEMA)
+    return table if _finite(table.columns) else None
 
-    The projected rows go to the JVM as one Arrow table: one array per
-    top-level field (the ``attributes`` struct built from its tuples),
-    decoded JVM-side by ``createDataFrame(pyarrow.Table)``. The plan's
-    scan is then a JVM relation, so neither the upsert nor any later job
-    starts a Python worker to re-read the batch, as a pickled-list RDD
-    would. The projector has already made every type and width check,
-    so the Arrow build cannot fail on a value."""
-    rows = _project_rows(parse_payload(body), RAW_VEHICLE_SCHEMA)
+
+def _finite(columns) -> bool:
+    """No NaN or ±inf in any double leaf of ``columns`` (a struct's
+    leaves carry its nulls, so a null row's slots are never checked)."""
+    for c in columns:
+        if pa.types.is_struct(c.type):
+            if not _finite(c.flatten()):
+                return False
+        elif pa.types.is_floating(c.type):
+            if not pc.all(pc.is_finite(c), min_count=0).as_py():
+                return False
+    return True
+
+
+def parse_payload(body: str) -> pa.Table:
+    """Raw JSON body → the ``data[]`` items as a ``RAW_VEHICLE_SCHEMA``
+    Arrow table, one row per item.
+
+    Arrow's C++ JSON reader decodes the body under the envelope schema
+    in one block (:func:`_arrow_envelope`). A body it refuses, or could
+    decide differently, goes through :func:`_decode_envelope` and the
+    projector instead, which either builds the same table (one
+    ``pa.array`` per top-level field) or raises :class:`ExtractError`.
+    So every body is accepted or aborted, and decoded, as by the
+    ``json.loads`` path alone; only the time differs."""
+    table = _arrow_envelope(body)
+    if table is not None:
+        return table
+    rows = _project_rows(_decode_envelope(body), RAW_VEHICLE_SCHEMA)
     columns = list(zip(*rows)) or [()] * len(_RAW_ARROW_SCHEMA)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(columns, _RAW_ARROW_SCHEMA)],
         schema=_RAW_ARROW_SCHEMA,
     )
-    return spark.createDataFrame(table, RAW_VEHICLE_SCHEMA)
+
+
+def ingest_payload(spark: SparkSession, body: str) -> DataFrame:
+    """Raw JSON body → DataFrame with the declared nested schema.
+
+    The decoded table (:func:`parse_payload`) goes to the JVM whole and
+    is decoded there by ``createDataFrame(pyarrow.Table)``. The plan's
+    scan is then a JVM relation, so neither the upsert nor any later job
+    starts a Python worker to re-read the batch, as a pickled-list RDD
+    would."""
+    return spark.createDataFrame(parse_payload(body), RAW_VEHICLE_SCHEMA)
 
 
 def _fetch_rows(url: str, schema: StructType, timeout: float) -> list[Tuple]:
     """One poll: GET + envelope parse + schema projection."""
-    return _project_rows(parse_payload(fetch_json(url, timeout)), schema)
+    return _project_rows(_decode_envelope(fetch_json(url, timeout)), schema)
 
 
 def _split_urls(raw: str) -> list[str]:

@@ -12,6 +12,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 
+from mbta_etl_spark.pipeline.schema import RAW_ATTRIBUTES_SCHEMA
 from mbta_etl_spark.pipeline.transform import transform
 from mbta_etl_spark.sources.http_json import (
     ExtractError,
@@ -410,6 +411,248 @@ def test_projection_roundtrip_property(tmp_path):
 
     run()
 
+
+
+# --- parse_payload: Arrow's reader decides every body as json.loads does --
+
+
+def _json_loads_table(body):
+    """The table the json.loads path builds: envelope decode, projector,
+    one ``pa.array`` per top-level field."""
+    import pyarrow as pa
+
+    from mbta_etl_spark.pipeline.schema import RAW_VEHICLE_SCHEMA
+    from mbta_etl_spark.sources import http_json
+
+    rows = http_json._project_rows(http_json._decode_envelope(body), RAW_VEHICLE_SCHEMA)
+    columns = list(zip(*rows)) or [()] * len(RAW_VEHICLE_SCHEMA)
+    arrow = http_json._RAW_ARROW_SCHEMA
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+
+
+def _assert_same_decision(body):
+    """``parse_payload(body)`` equals the json.loads path's table, schema
+    included, or both raise ExtractError."""
+    from mbta_etl_spark.sources.http_json import parse_payload
+
+    try:
+        want = _json_loads_table(body)
+    except ExtractError:
+        with pytest.raises(ExtractError):
+            parse_payload(body)
+        return
+    got = parse_payload(body)
+    assert got.schema == want.schema
+    assert got.equals(want)
+
+
+# "string", "double" or "int" per declared attribute
+_ATTR_KINDS = {f.name: f.dataType.simpleString() for f in RAW_ATTRIBUTES_SCHEMA.fields}
+
+
+def _envelope_bodies():
+    """JSON text of JSON:API envelopes, built token by token so that it
+    can hold duplicate keys, exact number spellings and any whitespace.
+    A body holds values each declared field accepts (nulls, missing
+    keys, null elements, unknown and nested keys and non-ASCII text
+    included) and at most one fault, so that each fault is seen alone:
+    a conflicting kind, an integral float in an int field, an
+    out-of-range number, a non-finite token in a declared or unknown
+    key, a duplicate key, a bad element, a missing or non-list ``data``,
+    or a BOM, a second document or trailing text around the envelope."""
+    from hypothesis import strategies as st
+
+    labels = st.text(max_size=6) | st.sampled_from(
+        ["Ünïcødé 🚋 東京", "naïve\n\"q\"\\", "\u0000\u001f"]
+    )
+    numbers = {
+        "int": st.integers(-(2**31), 2**31 - 1).map(str),
+        "double": st.integers(-(2**70), 2**70).map(str)
+        | st.floats(allow_nan=False, allow_infinity=False).map(repr),
+    }
+    odd_numbers = st.sampled_from(
+        ["180.0", "1e2", "1E2", "-0.0", "-0", "2147483648", "-2147483649", "0.5", "1e-400"]
+    )
+    # what Go's decoder refuses in a float64, or anywhere for the tokens
+    non_finite = st.sampled_from(
+        ["NaN", "-NaN", "Inf", "-Inf", "Infinity", "-Infinity", "1E400", "-1e400",
+         "1.7976931348623159e308", "9" * 400]
+    )
+    conflicts = st.sampled_from(["true", "false", "{}", "[]", '"7"', "7", "[1]"])
+    faults = st.sampled_from(
+        [None, "value", "unknown", "duplicate", "element", "attributes", "data", "document"]
+    )
+
+    @st.composite
+    def body(draw):
+        ws = draw(st.sampled_from(["", " ", "\n  ", "\r\n\t"]))
+        ascii_only = draw(st.booleans())
+        n_items = draw(st.integers(0, 5))
+        fault, at, seen = draw(faults), draw(st.integers(0, max(n_items - 1, 0))), [0]
+
+        def fires(kind):
+            """Whether this site of ``kind`` holds the body's fault."""
+            if fault != kind:
+                return False
+            seen[0] += 1
+            return seen[0] - 1 == at
+
+        def string():
+            return json.dumps(draw(labels), ensure_ascii=ascii_only)
+
+        def obj(pairs):
+            inner = ("," + ws).join(f"{json.dumps(k)}:{ws}{v}" for k, v in pairs)
+            return "{" + ws + inner + ws + "}"
+
+        def arr(values):
+            return "[" + ws + ("," + ws).join(values) + ws + "]"
+
+        def junk(depth=0):
+            """Any well-formed value, for keys the schema does not know."""
+            pick = draw(st.integers(0, 4 if depth < 2 else 2))
+            if pick == 0:
+                return draw(st.sampled_from(["null", "true", "false", "1", "-2.5e-3"]))
+            if pick == 1:
+                return string()
+            if pick == 2:
+                return draw(numbers["double"])
+            if pick == 3:
+                return arr([junk(depth + 1) for _ in range(draw(st.integers(0, 2)))])
+            keys = draw(st.lists(st.sampled_from(["x", "nest", "self", "id"]), max_size=2))
+            return obj([(k, junk(depth + 1)) for k in keys])
+
+        def value(kind):
+            """A declared field's value, or None to leave the key out."""
+            if fires("value"):
+                return draw(conflicts | odd_numbers | non_finite if kind != "string" else conflicts)
+            pick = draw(st.integers(0, 6))
+            if pick == 5:
+                return "null"
+            if pick == 6:
+                return None
+            return string() if kind == "string" else draw(numbers[kind])
+
+        def present(pairs):
+            return [(k, v) for k, v in pairs if v is not None]
+
+        def item():
+            if fires("element"):
+                return draw(conflicts | odd_numbers | non_finite)
+            if draw(st.integers(0, 9)) == 0 and fault is None:
+                return "null"
+            names = draw(st.permutations(list(_ATTR_KINDS)))
+            attrs = present([(k, value(_ATTR_KINDS[k])) for k in names])
+            if attrs and fires("duplicate"):
+                k = draw(st.sampled_from([k for k, _ in attrs]))
+                attrs.append((k, value(_ATTR_KINDS[k]) or "null"))
+            if fires("unknown"):
+                attrs.append(("extra", draw(non_finite)))
+            elif draw(st.booleans()):
+                attrs.append(("extra", junk()))
+            attributes = obj(attrs)
+            if fires("attributes"):
+                attributes = draw(conflicts)
+            elif draw(st.integers(0, 9)) == 0:
+                attributes = "null"
+            pairs = present([
+                ("id", value("string")),
+                ("type", value("string")),
+                ("attributes", attributes),
+                ("links", junk() if draw(st.booleans()) else None),
+            ])
+            return obj(draw(st.permutations(pairs)))
+
+        top = [
+            ("jsonapi", obj([("version", '"1.0"')])),
+            ("data", arr([item() for _ in range(n_items)])),
+        ]
+        if fault == "data":
+            top[1] = draw(st.sampled_from([("data", "null"), ("data", "{}"), ("data", '"x"'),
+                                          ("meta", "[]")]))
+        doc = draw(st.sampled_from(["", " \n"])) + obj(draw(st.permutations(top)))
+        if fault == "document":
+            doc = draw(st.sampled_from(["﻿" + doc, doc + "\n" + doc, doc + " x"]))
+        return doc
+
+    return body()
+
+
+def test_parse_payload_matches_json_loads_path():
+    """Hypothesis: for generated envelope bodies, the Arrow-decoded table
+    equals the json.loads path's (schema included), or both abort."""
+    from hypothesis import HealthCheck, given, settings
+
+    @settings(max_examples=500, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+    @given(body=_envelope_bodies())
+    def run(body):
+        _assert_same_decision(body)
+
+    run()
+
+
+_ITEM = '{"id": "a", "attributes": {"label": "a", "speed": 1.5, "bearing": %s}}'
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        '{"data": [%s]}' % (_ITEM % "180.0"),
+        '{"data": [%s]}' % (_ITEM % "1e2"),
+        '{"data": [%s]}' % (_ITEM % "-0.0"),
+        '{"data": [{"id": "a", "id": "b", "attributes": {"speed": 1, "speed": 2}}]}',
+        '{"data": [{"id": "a", "attributes": {"speed": 1E400}}]}',
+        '{"data": [{"id": "a", "attributes": {"speed": 1.7976931348623159e308}}]}',
+        '{"data": [{"id": "a", "attributes": {"speed": %s}}]}' % ("9" * 400),
+        '{"data": [{"id": "a", "attributes": {"speed": 1, "extra": NaN}}]}',
+        '{"data": [{"id": "a", "attributes": {"speed": 1, "extra": -Inf}}]}',
+        '\ufeff{"data": []}',
+        '{"data": null}',
+        '{"jsonapi": {"version": "1.0"}}',
+        '{"data": []}\n{"data": []}',
+    ],
+    ids=["int_180_0", "int_1e2", "int_neg_zero", "duplicate_keys", "double_1e400",
+         "double_past_max", "double_int_past_range", "unknown_key_nan",
+         "unknown_key_inf", "bom",
+         "null_data", "missing_data", "two_documents"],
+)
+def test_parse_payload_falls_back_where_arrow_differs(body):
+    """Each body takes the json.loads path and ends as it does there:
+    those Arrow refuses (integral floats in int fields, duplicate keys,
+    ``1E400``) and those Arrow would decide otherwise (a double read as
+    inf, a non-finite token in a key it skips, a BOM, no single ``data``
+    array)."""
+    from mbta_etl_spark.sources.http_json import _arrow_envelope
+
+    assert _arrow_envelope(body) is None
+    _assert_same_decision(body)
+
+
+def test_parse_payload_reads_clean_bodies_with_arrow():
+    """A pretty-printed body with unknown and nested keys, a null element,
+    missing attributes and non-ASCII text is decoded by Arrow, to the
+    json.loads path's table."""
+    from mbta_etl_spark.sources.http_json import _arrow_envelope, parse_payload
+
+    body = json.dumps(
+        {
+            "data": [
+                {"id": "a", "links": {"self": [1, {"x": None}]},
+                 "attributes": {"label": "Ünïcødé 🚋 東京", "speed": 3,
+                                "bearing": 270, "junk": {"deep": [True]}}},
+                None,
+                {"id": "b", "type": "vehicle"},
+                {"attributes": None},
+            ],
+            "jsonapi": {"version": "1.0"},
+        },
+        indent=2,
+        ensure_ascii=False,
+    )
+    assert _arrow_envelope(body) is not None
+    _assert_same_decision(body)
+    assert len(parse_payload(body)) == 4
 
 def test_read_between_offsets_replays_deterministically(
     spark, snapshot_urls

@@ -259,11 +259,13 @@ def test_load_stored_column_mismatch_raises_before_write(spark, tmp_path, drift)
     assert [r["id"] for r in spark.read.parquet(path).collect()] == ["veh-1"]
 
 
-def test_load_one_partition_only_for_small_merges(spark, tmp_path):
-    """The merge goes to one shuffle partition only when the stored rows
-    (the manifest's count) plus the batch's plan estimate fit under the
-    broadcast threshold; a batch with no size estimate, or a threshold
-    of -1, keeps the session's shuffle."""
+def test_load_one_partition_only_for_small_merges(spark, tmp_path, monkeypatch):
+    """The merge goes to one partition only when the stored rows (the
+    manifest's count) plus the batch's plan estimate fit under the
+    broadcast threshold, and then its plan holds no exchange; a batch
+    with no size estimate, or a threshold of -1, keeps the session's
+    shuffle."""
+    from mbta_etl_spark.pipeline import load
     from mbta_etl_spark.pipeline.load import _fits_one_partition, read_published
 
     path = str(tmp_path / "vehicles")
@@ -275,11 +277,23 @@ def test_load_one_partition_only_for_small_merges(spark, tmp_path):
     small = spark.createDataFrame(unsized.toArrow(), VEHICLE_SCHEMA)  # local rows
     assert _fits_one_partition(spark, small, rows)
     assert not _fits_one_partition(spark, small, 10**9)  # too many stored rows
+
+    published, publish = [], load.atomic_publish
+
+    def keep_plan(df, dest, batch_id):
+        published.append(df._jdf.queryExecution().executedPlan().toString())
+        publish(df, dest, batch_id)
+
+    monkeypatch.setattr(load, "atomic_publish", keep_plan)
+    upsert_parquet(spark, small, path)
+    assert "Exchange" not in published[-1]
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
         assert not _fits_one_partition(spark, small, rows)
+        upsert_parquet(spark, small, path)
+        assert "Exchange hashpartitioning(id" in published[-1]
     finally:
         spark.conf.set(key, saved)
 
@@ -340,9 +354,10 @@ def _payload_with(overrides, extra=()):
 
 
 def test_run_coerces_json_numbers_and_drops_null_element(spark, tmp_path):
-    """json.Unmarshal fills a float64 from an integral number and an int
-    from an integral float; a null data[] element is a zero-value row
-    that T1 drops. None of them aborts the pass."""
+    """json.Unmarshal fills a float64 from an integral number, and a null
+    data[] element is a zero-value row that T1 drops. This decoder also
+    fills an int from an integral float, a rule of its own: Go rejects
+    ``180.0`` for an int. None of them aborts the pass."""
     from mbta_etl_spark.pipeline import etl
 
     path = str(tmp_path / "vehicles")
@@ -358,14 +373,24 @@ def test_run_coerces_json_numbers_and_drops_null_element(spark, tmp_path):
     assert rows["b"]["bearing"] == 180
 
 
+_NON_FINITE = ["NaN", "Infinity", "-Infinity", "1E400", "-1e400", "9" * 400]
+
+
 @pytest.mark.parametrize(
-    "attrs",
-    [{"speed": "fast"}, {"bearing": 2**40}],
-    ids=["string_speed", "bearing_overflow"],
+    "key, token",
+    [("speed", '"fast"'), ("bearing", str(2**40))]
+    + [("speed", t) for t in _NON_FINITE]
+    + [("extra", t) for t in _NON_FINITE[:3]],
+    ids=["string_speed", "bearing_overflow", "nan", "infinity", "neg_infinity", "1e400",
+         "neg_1e400", "int_past_double", "unknown_key_nan", "unknown_key_infinity",
+         "unknown_key_neg_infinity"],
 )
-def test_ingest_type_conflict_aborts_before_write(spark, tmp_path, attrs):
+def test_ingest_type_conflict_aborts_before_write(spark, tmp_path, key, token):
     """A type conflict or width overflow aborts the pass with ExtractError
-    before anything is written: the published version is untouched."""
+    before anything is written: the published version is untouched. So
+    do the NaN and Infinity tokens anywhere, and a number past the double
+    range in a float64, as Go's decoder rejects them (a syntax error, and
+    strconv.ParseFloat's range error)."""
     import os
 
     from mbta_etl_spark.pipeline import etl
@@ -373,7 +398,7 @@ def test_ingest_type_conflict_aborts_before_write(spark, tmp_path, attrs):
     path = str(tmp_path / "vehicles")
     etl.run(spark, path, body=_payload([("a", 5.0)]))
     published = os.path.realpath(path)
-    bad = _payload_with({"a": {}, "x": attrs})
+    bad = _payload_with({"a": {}, "x": {key: "@@"}}).replace('"@@"', token)
     with pytest.raises(http_json.ExtractError):
         http_json.ingest_payload(spark, bad)
     with pytest.raises(http_json.ExtractError):
@@ -381,6 +406,14 @@ def test_ingest_type_conflict_aborts_before_write(spark, tmp_path, attrs):
     assert os.path.realpath(path) == published
     assert sorted(os.listdir(tmp_path)) == ["vehicles", os.path.basename(published)]
     assert [r["id"] for r in spark.read.parquet(path).collect()] == ["a"]
+
+
+@pytest.mark.parametrize("token", _NON_FINITE[3:])
+def test_out_of_range_number_in_unknown_key_decodes(token):
+    """Go skips an unknown key's value without converting it, so a
+    number past the double range there does not abort."""
+    body = _payload_with({"a": {}, "x": {"extra": "@@"}}).replace('"@@"', token)
+    assert len(http_json.parse_payload(body)) == 2
 
 
 @pytest.mark.parametrize("n", [3, 5000], ids=["under_slices", "over_slices"])
@@ -400,26 +433,44 @@ def test_run_keeps_last_in_batch_duplicate(spark, tmp_path, n):
         assert [r["speed"] for r in rows] == [3.0]
 
 
-def test_run_over_stored_table_runs_two_jobs(spark, tmp_path):
-    """A pass over an existing table runs two Spark jobs: the merge's
-    shuffle map and the write. The stored version's schema is pinned, so
-    no footer job infers it."""
+def _run_jobs(spark, group, path, body):
+    """(records loaded, Spark jobs run) for one ``etl.run`` pass."""
     from mbta_etl_spark.pipeline import etl
 
-    path = str(tmp_path / "vehicles")
-    etl.run(spark, path, body=_payload([("a", 1.0), ("b", 2.0)]))
     sc = spark.sparkContext
-    group = f"two-jobs-{tmp_path.name}"
-    sc.setJobGroup(group, "etl.run over a stored table")
+    sc.setJobGroup(group, "one etl.run pass")
     try:
-        assert etl.run(spark, path, body=_payload([("b", 3.0), ("c", 4.0)])) == 2
+        n = etl.run(spark, path, body=body)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    return n, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_over_stored_table_runs_one_job(spark, tmp_path):
+    """A pass over an existing table runs one Spark job, the write: the
+    small merge is coalesced into one task, so no shuffle map job runs,
+    and the stored version's schema is pinned, so no footer job infers
+    it."""
+    from mbta_etl_spark.pipeline import etl
+
+    path = str(tmp_path / "vehicles")
+    etl.run(spark, path, body=_payload([("a", 1.0), ("b", 2.0)]))
+    body = _payload([("b", 3.0), ("c", 4.0)])
+    assert _run_jobs(spark, f"one-job-{tmp_path.name}", path, body) == (2, 1)
     rows = {r["id"]: r["speed"] for r in spark.read.parquet(path).collect()}
     assert rows == {"a": 1.0, "b": 3.0, "c": 4.0}
+
+
+def test_first_run_runs_one_job(spark, tmp_path):
+    """The first pass, with nothing stored, is one job too: the batch
+    alone fits one partition."""
+    path = str(tmp_path / "vehicles")
+    body = _payload([("a", 1.0), ("b", 2.0), ("a", 3.0)])
+    assert _run_jobs(spark, f"first-{tmp_path.name}", path, body) == (3, 1)
+    rows = {r["id"]: r["speed"] for r in spark.read.parquet(path).collect()}
+    assert rows == {"a": 3.0, "b": 2.0}
 
 
 def test_ingest_lineage_has_no_python_rdd(spark):
@@ -463,7 +514,7 @@ def test_ingest_arrow_rows_match_row_conversion(spark, body, expect):
 
     raw = http_json.ingest_payload(spark, body)
     assert raw.schema == RAW_VEHICLE_SCHEMA
-    tuples = http_json._project_rows(http_json.parse_payload(body), RAW_VEHICLE_SCHEMA)
+    tuples = http_json._project_rows(http_json._decode_envelope(body), RAW_VEHICLE_SCHEMA)
     now = F.lit("2024-01-15 12:00:00").cast("timestamp")
     got = transform(raw, now).collect()
     want = transform(spark.createDataFrame(tuples, RAW_VEHICLE_SCHEMA), now).collect()
