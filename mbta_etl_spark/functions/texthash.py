@@ -18,15 +18,16 @@ def md5_32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def regex_tokens(text: Column, pattern: str = BPE_SPLIT_PATTERN) -> Column:
-    """All pattern matches as an array — a BPE-style pre-tokenization."""
-    return F.regexp_extract_all(text, F.lit(pattern), 0)
+def regex_tokens(text: Column) -> Column:
+    """All ``BPE_SPLIT_PATTERN`` matches as an array — a BPE-style
+    pre-tokenization."""
+    return F.regexp_extract_all(text, F.lit(BPE_SPLIT_PATTERN), 0)
 
 
-def token_count_bpe(text: Column, pattern: str = BPE_SPLIT_PATTERN) -> Column:
+def token_count_bpe(text: Column) -> Column:
     """Number of BPE-ish pre-tokens (the "token count" a training-data
     pipeline budgets by, minus merges). Pure JVM regex — no UDF."""
-    return F.size(regex_tokens(text, pattern)).cast("long")
+    return F.size(regex_tokens(text)).cast("long")
 
 
 def position_tokenizer_udtf():

@@ -42,10 +42,9 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def unit(vec: Column, precomputed_norm: Column | None = None) -> Column:
-    """vec / |vec|. Pass ``precomputed_norm`` when the norm is already a
-    column so the O(d) fold isn't re-evaluated per element."""
-    n = precomputed_norm if precomputed_norm is not None else norm(vec)
+def unit(vec: Column) -> Column:
+    """vec / |vec|."""
+    n = norm(vec)
     return F.transform(_dbl(vec), lambda x: x / n)
 
 

@@ -34,7 +34,7 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def balance_scan(df: DataFrame, target: int | None = None) -> DataFrame:
+def balance_scan(df: DataFrame) -> DataFrame:
     """Round-robin-balance a frame ONLY when it has fewer partitions
     than the cluster's parallelism (round-8 optimization, guide §2.6).
 
@@ -47,8 +47,7 @@ def balance_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     already parallel. Costs one exchange of whatever columns the caller
     projected (callers should project FIRST so only needed columns
     move, §2.3)."""
-    sc = df.sparkSession.sparkContext
-    n = target or sc.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
@@ -144,30 +143,27 @@ def global_stats(df: DataFrame, measure: Column) -> DataFrame:
     )
 
 
-def conditional_counts(
-    df: DataFrame, key: Column, values: Sequence[str], prefix: str = "n_"
-) -> DataFrame:
-    """Q5/Q7: COUNT(*) per listed key value, one scan, wide one-row result.
+def conditional_counts(df: DataFrame, key: Column, values: Sequence[str]) -> DataFrame:
+    """Q5/Q7: COUNT(*) per listed key value, one scan, wide one-row result
+    (one ``n_<value>`` column per value).
 
     The reference runs one scan per status (queries.go:94-97); conditional
     aggregation makes it a single pass regardless of how many statuses.
     """
     aggs = [
-        F.count(F.when(key == v, 1)).alias(f"{prefix}{v.lower()}") for v in values
+        F.count(F.when(key == v, 1)).alias(f"n_{v.lower()}") for v in values
     ]
     return df.agg(*aggs)
 
 
-def share_percentages(
-    df: DataFrame, key: Column, values: Sequence[str], prefix: str = "pct_"
-) -> DataFrame:
-    """Q6: 100 * SUM(CASE WHEN key=v)/COUNT(*) per value, one scan
-    (reference queries.go:104-111)."""
+def share_percentages(df: DataFrame, key: Column, values: Sequence[str]) -> DataFrame:
+    """Q6: 100 * SUM(CASE WHEN key=v)/COUNT(*) per value, one scan, into
+    one ``pct_<value>`` column each (reference queries.go:104-111)."""
     total = F.count(F.lit(1))
     aggs = [
         F.round(
             F.sum(F.when(key == v, 1).otherwise(0)) * 100.0 / total, 6
-        ).alias(f"{prefix}{v.lower()}")
+        ).alias(f"pct_{v.lower()}")
         for v in values
     ]
     return df.agg(*aggs)
@@ -194,11 +190,7 @@ def threshold_split(df: DataFrame, measure: Column, threshold: float) -> DataFra
 # (reference pipeline/queries.go:138-156): element at 0-index ⌊n*k/d⌋ of the
 # ascending sort of the filtered measure.
 # ---------------------------------------------------------------------------
-def discrete_percentiles(
-    df: DataFrame,
-    measure: Column,
-    fractions: Sequence[tuple[str, int, int]] = (("p50", 1, 2), ("p90", 9, 10), ("p95", 95, 100)),
-) -> DataFrame:
+def discrete_percentiles(df: DataFrame, measure: Column) -> DataFrame:
     """Exact discrete percentiles with the reference's integer-division
     offsets (p50 → OFFSET n/2, p90 → n*9/10, p95 → n*95/100).
 
@@ -208,7 +200,7 @@ def discrete_percentiles(
     can satisfy several fractions at small n, so labels explode from an
     array — the reference emits one row per fraction regardless of value
     ties). No driver-side count action, no per-fraction re-sort (the
-    previous form ran 1 + len(fractions) jobs). The single-partition
+    previous form ran one job plus one per fraction). The single-partition
     sort is the honest cost of EXACT order statistics and is why this is
     the parity operator; ``approx_percentiles`` below is the 100 TB
     path. Empty input → empty result (reference emits nothing when
@@ -226,7 +218,7 @@ def discrete_percentiles(
         F.when(
             F.col("_rn") == F.expr(f"(_n * {num}) div {den} + 1"), F.lit(label)
         )
-        for label, num, den in fractions
+        for label, num, den in (("p50", 1, 2), ("p90", 9, 10), ("p95", 95, 100))
     ]
     return (
         ranked.select(F.array_compact(F.array(*arms)).alias("_m"), "value")
@@ -365,10 +357,9 @@ def apply_changelog(
     op_col: str,
     order_by: Sequence[Column],
     payload_cols: Sequence[str],
-    delete_op: str = "D",
 ) -> DataFrame:
     """Apply a CDC changelog to a snapshot: the latest change per key
-    wins (by ``order_by`` desc); a delete removes the key, anything else
+    wins (by ``order_by`` desc); a delete (op ``'D'``) removes the key, anything else
     upserts the payload columns (replacing an existing row or inserting
     a new key). This is ``MERGE INTO ... WHEN MATCHED [AND op='D'] THEN
     DELETE / THEN UPDATE / WHEN NOT MATCHED THEN INSERT`` without a table
@@ -392,7 +383,7 @@ def apply_changelog(
         *[F.col(p).alias(f"_b_{p}") for p in payload_cols],
     )
     j = b.join(c, key, "full_outer")
-    survives = F.col("_op").isNull() | (F.col("_op") != delete_op)
+    survives = F.col("_op").isNull() | (F.col("_op") != "D")
     return j.filter(survives).select(
         F.col(key),
         *[

@@ -83,10 +83,9 @@ def _shingle_table(df: DataFrame, text: Column, id_col: Column, k: int) -> DataF
     per-doc distinct, and md5 all happen in one Python pass (hashlib's C
     md5 + C-level string slicing), which measures ~2x faster than the
     equivalent interpreted higher-order-function expression chain and
-    ships only (long, long) rows back across the Arrow boundary. Same
-    semantics as operators.text.shingles: split on single space, docs
-    shorter than k tokens contribute one whole-text shingle, null text
-    contributes nothing."""
+    ships only (long, long) rows back across the Arrow boundary.
+    Shingles split on single space, docs shorter than k tokens
+    contribute one whole-text shingle, null text contributes nothing."""
     import hashlib
 
     import pandas as pd
@@ -270,15 +269,15 @@ def _mh_b(seed: int) -> int:
     return 7919 * seed + 17
 
 
-def _minhash_wide(sh: DataFrame, n_hashes: int = NUM_HASHES) -> DataFrame:
+def _minhash_wide(sh: DataFrame) -> DataFrame:
     """(doc_id, mh0..mh{n-1}): all minhashes in ONE map-side-combinable
-    aggregation over the shingle table — n_hashes min-columns instead of
-    exploding n_hashes× rows through the shuffle.
+    aggregation over the shingle table — NUM_HASHES min-columns instead of
+    exploding NUM_HASHES× rows through the shuffle.
 
     Permutation family is Carter-Wegman universal hashing over ONE md5:
     x = first 8 hex chars of md5(shingle) as uint32, h_s = (a_s·x + b_s)
-    mod p with p = 4294967311. One digest + n_hashes multiply-adds per
-    shingle instead of n_hashes digests — pure 64-bit integer arithmetic
+    mod p with p = 4294967311. One digest + NUM_HASHES multiply-adds per
+    shingle instead of NUM_HASHES digests — pure 64-bit integer arithmetic
     (a_s < 2^24, x < 2^32, no overflow), identical in any engine."""
     # top 32 bits of the 60-bit key == first 8 hex digits of md5(shingle)
     x = F.expr("sh64 DIV 268435456")  # 16^7
@@ -286,24 +285,22 @@ def _minhash_wide(sh: DataFrame, n_hashes: int = NUM_HASHES) -> DataFrame:
         F.min(
             (F.lit(_mh_a(s)) * x + F.lit(_mh_b(s))) % F.lit(MINHASH_PRIME)
         ).alias(f"mh{s}")
-        for s in range(n_hashes)
+        for s in range(NUM_HASHES)
     ]
     return sh.groupBy("doc_id").agg(*mins)
 
 
-def _band_table_from_shingles(
-    sh: DataFrame, n_hashes: int = NUM_HASHES, band_size: int = BAND_SIZE
-) -> DataFrame:
+def _band_table_from_shingles(sh: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) LSH band table from a (doc_id, sh64)
     shingle table: wide per-doc minhash signature, md5 band keys over
     each band's minhashes in seed order, stacked to rows for the
     collision equi-join."""
-    wide = _minhash_wide(sh, n_hashes)
-    n_bands = n_hashes // band_size
+    wide = _minhash_wide(sh)
+    n_bands = NUM_HASHES // BAND_SIZE
     band_keys = [
         F.md5(
             F.concat_ws(
-                "|", *[F.col(f"mh{b * band_size + r}") for r in range(band_size)]
+                "|", *[F.col(f"mh{b * BAND_SIZE + r}") for r in range(BAND_SIZE)]
             )
         ).alias(f"bk{b}")
         for b in range(n_bands)
@@ -320,8 +317,6 @@ def minhash_lsh_pairs(
     id_col: Column,
     k: int = 3,
     threshold: float = 0.5,
-    n_hashes: int = NUM_HASHES,
-    band_size: int = BAND_SIZE,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with true Jaccard ≥ threshold.
@@ -346,7 +341,7 @@ def minhash_lsh_pairs(
     # exchange was not reused, so the min-per-seed signature aggregation
     # ran twice — materialize it once (n_docs x n_bands rows, the §8
     # lightweight proxy).
-    bands = _materialize(_band_table_from_shingles(sh, n_hashes, band_size))
+    bands = _materialize(_band_table_from_shingles(sh))
     ba = bands.alias("ba")
     bb = bands.alias("bb")
     cand = (
@@ -503,7 +498,6 @@ def banded_hamming_pairs(
     sig_col: str,
     max_hamming: int = 3,
     n_bands: int = 4,
-    bits: int = 64,
 ) -> DataFrame:
     """Generic banded hamming join over ANY 64-bit signature column
     (SimHash, perceptual hash, …): (doc_a, doc_b, hamming) for every
@@ -512,8 +506,8 @@ def banded_hamming_pairs(
     least one band slice, so max_hamming = n_bands − 1 makes the banding
     recall-exact. Input contract: one row per doc_id with a long
     ``sig_col``."""
-    assert bits % n_bands == 0
-    band_bits = bits // n_bands
+    assert 64 % n_bands == 0
+    band_bits = 64 // n_bands
     mask = (1 << band_bits) - 1
     stack_args = ", ".join(
         f"{b}, shiftright({sig_col}, {b * band_bits}) & {mask}"
@@ -556,20 +550,19 @@ def embedding_cosine_pairs(
     id_col: str,
     threshold: float,
     n_planes: int = 0,
-    n_blocks: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cosine) for
     every pair with cosine(a, b) >= threshold, id_a < id_b.
 
     ``n_planes=0`` is the EXACT path: block-partitioned matrix multiply.
-    Vectors are unit-normalized once, assigned to ``id % n_blocks``
-    blocks, and each of the B(B+1)/2 block-pairs becomes one
+    Vectors are unit-normalized once, assigned to B = 8 blocks by
+    ``id % 8``, and each of the B(B+1)/2 block-pairs becomes one
     ``applyInPandas`` group whose kernel is a single numpy matmul
     (Arrow-batched, BLAS-backed). All-pairs work is inherently O(n²/2)
     dots, but it is spread over block-pair tasks with an n·(B+1) row
-    shuffle — the distributed-exact shape; tune n_blocks ≈ #executors at
-    scale. Scores are returned raw and thresholded engine-side on the
-    6dp-rounded value, keeping parity with SQL ROUND semantics.
+    shuffle — the distributed-exact shape; at scale B should track
+    #executors. Scores are returned raw and thresholded engine-side on
+    the 6dp-rounded value, keeping parity with SQL ROUND semantics.
 
     ``n_planes>0`` is the APPROXIMATE scale path: both sides get a
     deterministic random-hyperplane signature (similarity.hyperplanes)
@@ -594,7 +587,7 @@ def embedding_cosine_pairs(
         ),
     )
     if n_planes == 0:
-        return _exact_cosine_pairs_blocked(e, threshold, n_blocks)
+        return _exact_cosine_pairs_blocked(e, threshold, 8)
 
     dim = df.select(F.size(vec_col)).first()[0]
     planes = similarity.hyperplanes(dim, n_planes)
@@ -699,13 +692,9 @@ def _exact_cosine_pairs_blocked(
     ).filter(F.col("cosine") >= threshold)
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph: (node, component)
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Connected components over a near-dup pair graph (``doc_a``,
+    ``doc_b`` edges): (node, component)
     where component is the MIN node id reachable — the cluster
     representative a dedup pipeline keeps while dropping the rest.
 
@@ -725,9 +714,9 @@ def connected_components(
     # materialize the pair list ONCE before branching — the symmetric
     # union reads it twice, and without this the whole upstream pair
     # pipeline (e.g. MinHash LSH) would execute once per branch
-    p = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
-        eager=True
-    )
+    p = pairs.select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    ).localCheckpoint(eager=True)
     edges = _materialize(
         p.union(p.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
@@ -837,25 +826,23 @@ def minhash_estimate_audit(
     text: Column,
     id_col: Column,
     k: int = 3,
-    n_hashes: int = NUM_HASHES,
-    band_size: int = BAND_SIZE,
 ) -> DataFrame:
     """Sketch-trust audit for the MinHash ESTIMATE itself: over the LSH
     candidate pairs, compare the signature-agreement estimate
-    (matching seeds / n_hashes) against exact Jaccard — one summary row
+    (matching seeds / NUM_HASHES) against exact Jaccard — one summary row
     (n_pairs, MAE, max error, mean bias). d13 audits the BANDING's
     recall; this audits the ESTIMATOR's accuracy, the other half of
     trusting a sketch at 100 TB. Zero-intersection candidates (pure
     band-hash collisions) are kept via a left join — they are exactly
     the worst-case estimate errors an inner join would hide."""
     sh = _materialize(_shingle_table(df, text, id_col, k))
-    wide = _minhash_wide(sh, n_hashes)
-    n_bands = n_hashes // band_size
+    wide = _minhash_wide(sh)
+    n_bands = NUM_HASHES // BAND_SIZE
     band_keys = [
         F.md5(
             F.concat_ws(
                 "|",
-                *[F.col(f"mh{b * band_size + r}") for r in range(band_size)],
+                *[F.col(f"mh{b * BAND_SIZE + r}") for r in range(BAND_SIZE)],
             )
         ).alias(f"bk{b}")
         for b in range(n_bands)
@@ -877,17 +864,17 @@ def minhash_estimate_audit(
     )
     wa = wide.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{s}").alias(f"a{s}") for s in range(n_hashes)],
+        *[F.col(f"mh{s}").alias(f"a{s}") for s in range(NUM_HASHES)],
     )
     wb = wide.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{s}").alias(f"b{s}") for s in range(n_hashes)],
+        *[F.col(f"mh{s}").alias(f"b{s}") for s in range(NUM_HASHES)],
     )
     n_agree = sum(
         (F.col(f"a{s}") == F.col(f"b{s}")).cast("int")
-        for s in range(n_hashes)
+        for s in range(NUM_HASHES)
     )
-    est = n_agree.cast("double") / F.lit(float(n_hashes))
+    est = n_agree.cast("double") / F.lit(float(NUM_HASHES))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     sha = sh.select(F.col("doc_id").alias("doc_a"), "sh64")
     shb = sh.select(F.col("doc_id").alias("doc_b"), "sh64")
@@ -1130,8 +1117,6 @@ def substring_dedup_pairs(
 def canonical_selection(
     components: DataFrame,
     scored: DataFrame,
-    quality_col: str = "quality",
-    tokens_col: str = "n_tokens",
 ) -> DataFrame:
     """Canonical-document selection per duplicate cluster: the step a
     dedup pipeline runs AFTER clustering (connected_components) — keep
@@ -1140,7 +1125,7 @@ def canonical_selection(
     training-data pipeline needs the keep/drop decision too.)
 
     ``components`` is (doc_id, component) from connected_components;
-    ``scored`` carries per-doc ``quality_col`` and ``tokens_col`` (e.g.
+    ``scored`` carries per-doc ``quality`` and ``n_tokens`` (e.g.
     text.quality_score output). Canonical = max quality, ties broken by
     min doc_id, so the pick is deterministic and replayable in SQL.
 
@@ -1156,8 +1141,8 @@ def canonical_selection(
     ranked = components.join(
         scored.select(
             "doc_id",
-            F.col(quality_col).alias("_q"),
-            F.col(tokens_col).cast("long").alias("_tok"),
+            F.col("quality").alias("_q"),
+            F.col("n_tokens").cast("long").alias("_tok"),
         ),
         "doc_id",
     ).withColumn(
@@ -1556,7 +1541,6 @@ def dup_aware_sample_census(
     text: Column,
     id_col: Column,
     source_col: str,
-    salt: str = "dupsample",
 ) -> DataFrame:
     """Dedup-aware deterministic subsampling census: each copy of an
     exact-dup group survives with probability 1/n_copies (keep iff
@@ -1586,7 +1570,7 @@ def dup_aware_sample_census(
     )
     w6 = F.floor(F.lit(1e6) / F.col("n_copies") + F.lit(0.5)).cast("long")
     keep = (
-        _bucket(F.col("_id"), salt) * F.col("n_copies") < F.lit(DENOM)
+        _bucket(F.col("_id"), "dupsample") * F.col("n_copies") < F.lit(DENOM)
     ).cast("long")
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
@@ -1611,12 +1595,7 @@ def dup_aware_sample_census(
     )
 
 
-def pointer_doubling_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 10,
-) -> DataFrame:
+def pointer_doubling_components(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     """Connected components by min-label propagation WITH pointer
     jumping — the O(log diameter) variant ``connected_components``'s
     docstring defers to for deep graphs, executed: each round first
@@ -1634,7 +1613,7 @@ def pointer_doubling_components(
     clusters both converge fast — on web-scale chains this is the one
     that finishes."""
     p = pairs.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     ).localCheckpoint(eager=True)
     edges = _materialize(
         p.union(p.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
@@ -1690,44 +1669,40 @@ def bbit_minhash_audit(
     id_col: Column,
     k: int = 3,
     threshold: float = 0.5,
-    n_hashes: int = NUM_HASHES,
 ) -> DataFrame:
     """b-bit MinHash compression audit (Li & Koenig 2010): for every
     verified near-dup pair, the full-signature Jaccard estimate
-    (matching minhashes / n_hashes) next to the 1-bit estimate
+    (matching minhashes / NUM_HASHES) next to the 1-bit estimate
     (2·bit_agreement − 1, the unbiased correction for b=1) and the true
     Jaccard — the measured answer to "how much signature can we throw
     away": 1 bit per hash is a 32x signature shrink, paid for in
     estimator variance that this audit quantifies on the real corpus.
 
     Shape: the pair pipeline and the wide signature share ONE persisted
-    shingle table; estimates are a CASE-sum over the 2·n_hashes wide
+    shingle table; estimates are a CASE-sum over the 2·NUM_HASHES wide
     columns after two doc-keyed joins — pure JVM, no extra shuffle
     beyond the joins."""
     sh = _materialize(_shingle_table(df, text, id_col, k))
-    pairs = minhash_lsh_pairs(
-        df, text, id_col, k=k, threshold=threshold,
-        n_hashes=n_hashes, shingles=sh,
-    )
-    wide = _minhash_wide(sh, n_hashes)
+    pairs = minhash_lsh_pairs(df, text, id_col, k=k, threshold=threshold, shingles=sh)
+    wide = _minhash_wide(sh)
     wa = wide.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{s}").alias(f"_a{s}") for s in range(n_hashes)],
+        *[F.col(f"mh{s}").alias(f"_a{s}") for s in range(NUM_HASHES)],
     )
     wb = wide.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{s}").alias(f"_b{s}") for s in range(n_hashes)],
+        *[F.col(f"mh{s}").alias(f"_b{s}") for s in range(NUM_HASHES)],
     )
     j = pairs.join(wa, "doc_a").join(wb, "doc_b")
     full = sum(
         F.when(F.col(f"_a{s}") == F.col(f"_b{s}"), 1).otherwise(0)
-        for s in range(n_hashes)
+        for s in range(NUM_HASHES)
     )
     bit = sum(
         F.when(F.col(f"_a{s}") % 2 == F.col(f"_b{s}") % 2, 1).otherwise(0)
-        for s in range(n_hashes)
+        for s in range(NUM_HASHES)
     )
-    n = F.lit(float(n_hashes))
+    n = F.lit(float(NUM_HASHES))
     _r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return j.select(
         "doc_a",

@@ -418,8 +418,8 @@ FRAME_SAMPLE_SCHEMA = StructType(
 )
 
 
-def fake_frame_samples(df: DataFrame, every_n: int = 64) -> DataFrame:
-    """Deterministic fake frame sampler: every ``every_n`` bytes of the
+def fake_frame_samples(df: DataFrame) -> DataFrame:
+    """Deterministic fake frame sampler: every 64 bytes of the
     payload becomes one "frame" row (media_id, frame_idx, byte_offset,
     md5-of-slice). Exercises the ONE-TO-MANY mapInPandas shape a real
     video sampler has — each input row expands to a variable number of
@@ -432,11 +432,11 @@ def fake_frame_samples(df: DataFrame, every_n: int = 64) -> DataFrame:
             ids, idxs, offs, sums = [], [], [], []
             for mid, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
-                for fi, off in enumerate(range(0, max(len(b), 1), every_n)):
+                for fi, off in enumerate(range(0, max(len(b), 1), 64)):
                     ids.append(mid)
                     idxs.append(fi)
                     offs.append(off)
-                    sums.append(hashlib.md5(b[off : off + every_n]).hexdigest())
+                    sums.append(hashlib.md5(b[off : off + 64]).hexdigest())
             yield pd.DataFrame(
                 {
                     "media_id": pd.Series(ids, dtype="int64"),
@@ -449,9 +449,7 @@ def fake_frame_samples(df: DataFrame, every_n: int = 64) -> DataFrame:
     return df.mapInPandas(_sample, schema=FRAME_SAMPLE_SCHEMA)
 
 
-def phash_dup_pairs(
-    df: DataFrame, max_hamming: int = 7, n_bands: int = 8
-) -> DataFrame:
+def phash_dup_pairs(df: DataFrame) -> DataFrame:
     """Perceptual-hash near-dup pairs over a binary payload table:
     payload → 64-bit hash → banded hamming join (reuses
     ``dedup.banded_hamming_pairs``; 8 bands of 8 bits = recall-exact to
@@ -478,9 +476,7 @@ def phash_dup_pairs(
     sigs = df.select(
         "doc_id", (F.shiftleft(hi, 32) + lo).alias("phash")
     )
-    return banded_hamming_pairs(
-        sigs, "phash", max_hamming=max_hamming, n_bands=n_bands
-    )
+    return banded_hamming_pairs(sigs, "phash", max_hamming=7, n_bands=8)
 
 
 SNIFF_SCHEMA = StructType(
@@ -651,9 +647,9 @@ def byte_entropy(df: DataFrame) -> DataFrame:
 VIT_PATCH = 16
 
 
-def patch_grid(features: DataFrame, patch: int = VIT_PATCH) -> DataFrame:
+def patch_grid(features: DataFrame) -> DataFrame:
     """ViT patch-grid budgeting over decoded image dims: pad each image
-    up to patch multiples, count the patch tokens it will occupy in a
+    up to ``VIT_PATCH`` multiples, count the patch tokens it will occupy in a
     vision-transformer batch (n_patches + 1 CLS), and the padding waste
     the grid introduces — the image-side analog of c26's text pad-waste,
     and the number a multimodal token-budget planner needs BEFORE any
@@ -663,9 +659,9 @@ def patch_grid(features: DataFrame, patch: int = VIT_PATCH) -> DataFrame:
     decode or the m02 fake); everything here is pure integer Catalyst
     arithmetic — ceil-division via DIV, one pinned 6dp division for the
     waste fraction — so the grid math never leaves the JVM."""
-    p = F.lit(patch)
-    nx = F.expr(f"(width + {patch - 1}) DIV {patch}")
-    ny = F.expr(f"(height + {patch - 1}) DIV {patch}")
+    p = F.lit(VIT_PATCH)
+    nx = F.expr(f"(width + {VIT_PATCH - 1}) DIV {VIT_PATCH}")
+    ny = F.expr(f"(height + {VIT_PATCH - 1}) DIV {VIT_PATCH}")
     staged = features.select(
         "media_id",
         "width",

@@ -95,9 +95,8 @@ def sketch_rollup(
     df: DataFrame,
     ts_col: str,
     entity_col: str,
-    bucket: str = "day",
 ) -> DataFrame:
-    """Mergeable distinct-count rollup: one HLL sketch per time bucket
+    """Mergeable distinct-count rollup: one HLL sketch per day bucket
     (Datasketches ``hll_sketch_agg``), per-bucket estimates plus an
     all-buckets total derived by UNIONING the bucket sketches — never by
     re-scanning raw events. This is r01's partial-aggregate algebra
@@ -119,7 +118,7 @@ def sketch_rollup(
     single-pass estimate ≈ exact, within error) is additionally pinned
     in tests/test_rollup.py. For oracle-exact distincts see q24
     (two-stage exact) / r01."""
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     sketches = df.groupBy(b.alias("bucket")).agg(
         F.hll_sketch_agg(entity_col).alias("_sk")
     )
@@ -221,11 +220,10 @@ def histogram_quantile_rollup(
     lo: float = 0.0,
     width: float = 25.0,
     nbins: int = 20,
-    bucket: str = "day",
 ) -> DataFrame:
     """Mergeable fixed-bin histogram rollup with a quantile READ, audited
     against the exact percentile — the additive-sketch answer to "p95
-    over any time range without rescanning events". Per-(bucket, bin)
+    over any time range without rescanning events". Per-(day, bin)
     counts are the stored partials (integers: merge = SUM, exactly
     r01's algebra), the merged histogram is cumulated over its O(nbins)
     rows, and each requested quantile is linearly interpolated inside
@@ -248,7 +246,7 @@ def histogram_quantile_rollup(
 
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     v = F.col(value_col).cast("double")
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     bin_id = F.least(
         F.lit(nbins - 1),
         F.greatest(F.lit(0), F.floor((v - F.lit(lo)) / F.lit(width))),

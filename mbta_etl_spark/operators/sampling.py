@@ -40,7 +40,7 @@ def hash_sample(df: DataFrame, key: Column, rate: float, salt: str = "s0") -> Da
 
 
 def stratified_hash_sample(
-    df: DataFrame, key: Column, stratum: Column, rates: dict[str, float], salt: str = "s0"
+    df: DataFrame, key: Column, stratum: Column, rates: dict[str, float]
 ) -> DataFrame:
     """Per-stratum hash sampling: stratum value → keep rate (strata not
     in ``rates`` are dropped). One codegen'd CASE over the hash bucket —
@@ -54,7 +54,7 @@ def stratified_hash_sample(
             else thresh.when(stratum == value, t)
         )
     thresh = thresh.otherwise(F.lit(0))
-    return df.filter(_bucket(key, salt) < thresh)
+    return df.filter(_bucket(key, "s0") < thresh)
 
 
 def token_budget_sample(
@@ -63,7 +63,6 @@ def token_budget_sample(
     stratum: Column,
     n_tokens: Column,
     budget: int,
-    salt: str = "s0",
 ) -> DataFrame:
     """Per-stratum document selection up to a token budget: within each
     stratum, walk documents in content-hash order and keep them while the
@@ -88,7 +87,7 @@ def token_budget_sample(
         stratum.alias("stratum"),
         n_tokens.cast("long").alias("n_tokens"),
     )
-    h = F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
+    h = F.md5(F.concat(F.lit("s0"), F.col("doc_id").cast("string")))
     w = (
         Window.partitionBy("stratum")
         .orderBy(h, "doc_id")
@@ -104,7 +103,6 @@ def weighted_sample_topk(
     key: Column,
     weight: Column,
     k: int,
-    salt: str = "s0",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis A-Res):
     each row draws u ∈ (0,1) from its content hash and scores
@@ -114,7 +112,7 @@ def weighted_sample_topk(
     heaps, no global sort, no shuffle of non-winners. This is THE
     distributed weighted sampler: reservoir semantics without any
     sequential reservoir."""
-    u = (_bucket(key, salt).cast("double") + F.lit(0.5)) / F.lit(float(DENOM))
+    u = (_bucket(key, "s0").cast("double") + F.lit(0.5)) / F.lit(float(DENOM))
     score = F.log(u) / weight.cast("double")
     return (
         df.select(
@@ -132,7 +130,6 @@ def per_stratum_topn(
     key: Column,
     stratum: Column,
     n: int,
-    salt: str = "s0",
 ) -> DataFrame:
     """Exactly-n-per-stratum sampling ("1000 eval docs per language"):
     rank rows within each stratum by content hash (uniform, reproducible)
@@ -143,7 +140,7 @@ def per_stratum_topn(
     from pyspark.sql import Window
 
     base = df.select(key.alias("doc_id"), stratum.alias("stratum"))
-    h = F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
+    h = F.md5(F.concat(F.lit("s0"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("stratum").orderBy(h, "doc_id")
     return (
         base.withColumn("rank", F.row_number().over(w))
@@ -151,25 +148,16 @@ def per_stratum_topn(
     )
 
 
-def split_assign(
-    df: DataFrame,
-    key: Column,
-    splits: tuple[tuple[str, float], ...] = (("train", 0.8), ("val", 0.1), ("test", 0.1)),
-    salt: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test assignment: the hash bucket of ``key``
-    picks the split, so membership is exhaustive, disjoint, reproducible
-    on any partitioning, and stable as the corpus grows (a doc never
-    migrates between splits on re-runs). The last split absorbs hash
-    rounding. Pure projection — no shuffle."""
-    b = _bucket(key, salt)
-    expr = None
-    acc = 0
-    for name, frac in splits[:-1]:
-        acc += int(frac * DENOM)
-        expr = F.when(b < acc, name) if expr is None else expr.when(b < acc, name)
-    last = F.lit(splits[-1][0])
-    return df.withColumn("split", last if expr is None else expr.otherwise(last))
+def split_assign(df: DataFrame, key: Column) -> DataFrame:
+    """Deterministic 80/10/10 train/val/test assignment: the hash bucket
+    of ``key`` picks the split, so membership is exhaustive, disjoint,
+    reproducible on any partitioning, and stable as the corpus grows (a
+    doc never migrates between splits on re-runs). Pure projection — no
+    shuffle."""
+    b = _bucket(key, "split")
+    return df.withColumn(
+        "split", F.when(b < 8000, "train").when(b < 9000, "val").otherwise("test")
+    )
 
 
 def chunk_pack(df: DataFrame, id_col: Column, n_tokens: Column, capacity: int) -> DataFrame:
@@ -269,7 +257,6 @@ def weighted_mix(
     key: Column,
     stratum: Column,
     weights: dict[str, float],
-    salt: str = "mix",
 ) -> DataFrame:
     """Weighted corpus mixture: stratum weight w replicates each row
     floor(w) times plus one extra copy with probability frac(w), decided
@@ -292,7 +279,7 @@ def weighted_mix(
             if w_frac is None
             else w_frac.when(stratum == value, fw)
         )
-    n = w_int.otherwise(0) + (_bucket(key, salt) < w_frac.otherwise(0)).cast("int")
+    n = w_int.otherwise(0) + (_bucket(key, "mix") < w_frac.otherwise(0)).cast("int")
     copies = F.when(n > 0, F.sequence(F.lit(1), n)).otherwise(F.array())
     return df.withColumn("copy", F.explode(copies))
 
@@ -302,7 +289,6 @@ def temperature_mix(
     key: Column,
     stratum: Column,
     budget: int,
-    salt: str = "tm",
 ) -> DataFrame:
     """Temperature-flattened source mixture (tau = 0.5): per-stratum
     share proportional to sqrt(stratum count), the standard trick for
@@ -335,7 +321,7 @@ def temperature_mix(
         .alias("target"),
     )
     w = Window.partitionBy(stratum).orderBy(
-        F.md5(F.concat(F.lit(salt), key.cast("string"))), key
+        F.md5(F.concat(F.lit("tm"), key.cast("string"))), key
     )
     ranked = df.select(
         key.alias("doc_id"),
@@ -421,7 +407,6 @@ def shuffle_shards(
     source: Column,
     n_tokens: Column,
     n_shards: int,
-    salt: str = "shard",
 ) -> DataFrame:
     """Deterministic global shuffle + sharding for dataloader prep: the
     LAST step of a training-data pipeline — spread the corpus
@@ -438,7 +423,7 @@ def shuffle_shards(
     (every shard should see ~all sources), plus the first/last order
     keys that pin the intra-shard ordering deterministically.
     """
-    key = F.md5(F.concat(F.lit(salt), id_col.cast("string")))
+    key = F.md5(F.concat(F.lit("shard"), id_col.cast("string")))
     h = F.conv(F.substring(key, 1, 8), 16, 10).cast("long")
     per = df.select(
         (h % n_shards).alias("shard_id"),

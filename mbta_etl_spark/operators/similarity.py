@@ -11,7 +11,7 @@ Two paths, mirroring what a 100 TB training-data pipeline needs:
 - **LSH-bucketed top-k** (scale path): deterministic random-hyperplane
   signatures (signs derived from md5, so Spark and the DuckDB oracle
   derive identical planes); only vectors in the query's bucket (or within
-  ``probe_hamming`` of it) are scored. Sub-linear candidate set at the
+  Hamming distance 1 of it) are scored. Sub-linear candidate set at the
   cost of recall — the standard trade, measured in tests against the
   brute-force baseline.
 """
@@ -90,19 +90,16 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     return sig.cast("long")
 
 
-def probe_signatures(query: list[float], planes: list[list[float]], probe_hamming: int = 1) -> list[int]:
+def probe_signatures(query: list[float], planes: list[list[float]]) -> list[int]:
     """The query's signature plus every signature within Hamming distance
-    ``probe_hamming`` (multi-probe LSH: neighbors that land one flipped
-    plane away are recovered without enlarging buckets)."""
+    1 (multi-probe LSH: neighbors that land one flipped plane away are
+    recovered without enlarging buckets)."""
     qsig = 0
     for p, plane in enumerate(planes):
         dot = math.fsum(a * b for a, b in zip(query, plane))
         if dot > 0:
             qsig |= 1 << p
-    sigs = [qsig]
-    if probe_hamming >= 1:
-        sigs += [qsig ^ (1 << p) for p in range(len(planes))]
-    return sigs
+    return [qsig] + [qsig ^ (1 << p) for p in range(len(planes))]
 
 
 def lsh_topk(
@@ -111,7 +108,6 @@ def lsh_topk(
     id_col: str,
     query: list[float],
     k: int = 10,
-    n_planes: int = N_PLANES,
     exclude_id=None,
 ) -> DataFrame:
     """LSH-bucketed cosine top-k with Hamming-1 multi-probe: score only
@@ -120,7 +116,7 @@ def lsh_topk(
     bucket the table by signature so the probe prunes to P+1 buckets'
     files instead of scanning the corpus."""
     dim = len(query)
-    planes = hyperplanes(dim, n_planes)
+    planes = hyperplanes(dim, N_PLANES)
     sigs = probe_signatures(query, planes)
     cand = df.withColumn("_sig", lsh_signature(F.col(vec_col), planes)).filter(
         F.col("_sig").isin(sigs)
@@ -380,12 +376,7 @@ def _kmeans_assign(df: DataFrame, vec_col: str, id_col: str, centroids) -> DataF
 
 
 def kmeans_fit_predict(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_iter: int = 2,
-    stride: int = IVF_STRIDE,
-    max_centroids: int = IVF_MAX_CENTROIDS,
+    df: DataFrame, vec_col: str, id_col: str, n_iter: int = 2
 ) -> DataFrame:
     """Lloyd's k-means with deterministic stride-sample init and a FIXED
     iteration count: (id, cluster, dist) after n_iter assign/update
@@ -401,9 +392,7 @@ def kmeans_fit_predict(
     the job count static and the oracle replayable; production k-means
     on 100 TB runs the same loop with a sampled update (mini-batch)."""
     base = df.select(F.col(id_col), F.col(vec_col))
-    cents = kmeans_final_centroids(
-        df, vec_col, id_col, n_iter, stride, max_centroids
-    )
+    cents = kmeans_final_centroids(df, vec_col, id_col, n_iter)
     return _kmeans_assign(base, vec_col, id_col, cents)
 
 
@@ -549,10 +538,8 @@ def ivf_topk(
     id_col: str,
     query: list[float],
     k: int = 10,
-    stride: int = IVF_STRIDE,
     nprobe: int = 2,
     exclude_id=None,
-    max_centroids: int = IVF_MAX_CENTROIDS,
 ) -> DataFrame:
     """IVF approximate top-k: assign every vector to its nearest coarse
     centroid, scan ONLY the nprobe cells nearest the query, exact-re-rank
@@ -561,7 +548,7 @@ def ivf_topk(
     prunes to nprobe partition directories and the scan cost drops from
     O(n) to O(n·nprobe/C). Recall < 1 by design (the standard IVF trade);
     raise nprobe for recall, raise C for speed."""
-    centroids = ivf_centroids(df, vec_col, id_col, stride, max_centroids)
+    centroids = ivf_centroids(df, vec_col, id_col)
     cells = ivf_probe_cells(centroids, query, nprobe)
     cand = ivf_assign(df, vec_col, id_col, centroids).filter(
         F.col("cell").isin(cells)
@@ -627,9 +614,6 @@ def mmr_rerank(
     vec_col: str,
     id_col: str,
     query: list[float],
-    pool: int = MMR_POOL,
-    k: int = MMR_K,
-    lam: float = MMR_LAMBDA,
     exclude_id=None,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k: greedily pick the
@@ -638,7 +622,7 @@ def mmr_rerank(
     coverage (near-duplicate hits stop crowding the result list).
 
     Two-stage shape, and this IS the 100 TB shape: stage 1 is the
-    distributed brute-force/ANN top-``pool`` (TakeOrdered over the
+    distributed brute-force/ANN top-``MMR_POOL`` (TakeOrdered over the
     corpus — the only part that sees data); stage 2 runs the inherently
     sequential greedy loop as ONE applyInPandas kernel over the
     constant-size pool (state O(pool·d), independent of corpus size) —
@@ -675,7 +659,7 @@ def mmr_rerank(
     )
     if exclude_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_id)
-    cand = cand.orderBy(F.desc("rel"), F.asc("vec_id")).limit(pool)
+    cand = cand.orderBy(F.desc("rel"), F.asc("vec_id")).limit(MMR_POOL)
 
     out_schema = StructType(
         [
@@ -706,13 +690,13 @@ def mmr_rerank(
         cosM = G / np.multiply.outer(norms, norms)
 
         picked = [0]  # row 0 = max rel (ties already id-ordered)
-        while len(picked) < min(k, n):
+        while len(picked) < min(MMR_K, n):
             best, best_score = None, None
             for i in range(n):
                 if i in picked:
                     continue
                 maxcos = cosM[i, picked].max()
-                score = lam * rels[i] - (1.0 - lam) * maxcos
+                score = MMR_LAMBDA * rels[i] - (1.0 - MMR_LAMBDA) * maxcos
                 # strict > keeps the earlier (higher-rel / lower-id on
                 # equal rel) candidate on exact ties... but the oracle
                 # breaks ties on vec_id alone, so mirror that:
@@ -975,8 +959,6 @@ def pq_codebook(
     id_col: str,
     n_sub: int = 4,
     n_iter: int = 2,
-    stride: int = IVF_STRIDE,
-    max_centroids: int = IVF_MAX_CENTROIDS,
 ) -> DataFrame:
     """Product-quantization codebook report: split each d-dim vector
     into ``n_sub`` contiguous subvectors, k-means each subspace
@@ -1003,9 +985,7 @@ def pq_codebook(
             F.col(id_col),
             F.slice(F.col(vec_col), m * sub_len + 1, sub_len).alias("_sub"),
         )
-        a = kmeans_fit_predict(
-            sliced, "_sub", id_col, n_iter, stride, max_centroids
-        )
+        a = kmeans_fit_predict(sliced, "_sub", id_col, n_iter)
         return (
             a.groupBy("cluster").agg(
                 F.count(F.lit(1)).alias("n_members"),
@@ -1045,8 +1025,6 @@ def pq_adc_topk(
     k: int = 10,
     n_sub: int = 4,
     n_iter: int = 2,
-    stride: int = IVF_STRIDE,
-    max_centroids: int = IVF_MAX_CENTROIDS,
     exclude_id=None,
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k search — the companion search
@@ -1077,9 +1055,7 @@ def pq_adc_topk(
             F.col(id_col),
             F.slice(F.col(vec_col), m * sub + 1, sub).alias("_sub"),
         )
-        cents = kmeans_final_centroids(
-            sliced, "_sub", id_col, n_iter, stride, max_centroids
-        )
+        cents = kmeans_final_centroids(sliced, "_sub", id_col, n_iter)
         lut6 = []
         for c in cents:
             d2 = 0.0

@@ -114,12 +114,7 @@ def range_join_agg(
     return joined.groupBy(*group_cols).agg(*aggs)
 
 
-def interval_overlap_join(
-    a: DataFrame,
-    b: DataFrame,
-    key: str,
-    bin_minutes: int = 5,
-) -> DataFrame:
+def interval_overlap_join(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
     """Keyed interval-overlap join via time-axis binning — the scalable
     range-join shape. Inputs carry (key, id, start_ts, end_ts); output is
     every (key, a_id, b_id) whose intervals overlap, with the overlap
@@ -131,18 +126,19 @@ def interval_overlap_join(
     (key, bin) — a plain shuffled hash join — and the exact overlap
     predicate filters the binned candidates. An interval pair overlapping
     across a bin boundary appears in multiple bins, so candidates are
-    de-duplicated before the final projection. Bin width trades explode
-    factor (long intervals / small bins → many rows) against candidate
-    precision (huge bins → more false candidates); set it near the median
-    interval length. Overlap seconds derive from exact microsecond
-    arithmetic — no float hazards."""
+    de-duplicated before the final projection. Bins are 5 minutes wide:
+    bin width trades explode factor (long intervals / small bins → many
+    rows) against candidate precision (huge bins → more false
+    candidates), and belongs near the median interval length. Overlap
+    seconds derive from exact microsecond arithmetic — no float
+    hazards."""
     # tz-free binning: microseconds since a fixed NTZ reference, integer-
     # divided into bins (unix_micros would need an NTZ→TZ cast that
     # shifts with the session timezone)
     bin_expr = (
         "CAST(timestampdiff(MICROSECOND, "
         "TIMESTAMP_NTZ '2000-01-01 00:00:00', {c}) "
-        f"/ {bin_minutes * 60_000_000} AS LONG)"
+        "/ 300000000 AS LONG)"
     )
 
     def _bins(df: DataFrame, side: str) -> DataFrame:

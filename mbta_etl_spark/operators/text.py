@@ -139,19 +139,6 @@ def lang_id(df: DataFrame, text: Column, id_col: Column, actual_lang: Column) ->
     )
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """Distinct token k-gram shingles; documents shorter than k tokens get
-    a single whole-text shingle so no document silently disappears."""
-    toks = _tokens(text)
-    n = F.size(toks)
-    # slice+array_join beats k× element_at ~4x in interpreted HOF eval
-    grams = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    )
-    return F.when(n >= k, F.array_distinct(grams)).otherwise(F.array(text))
-
-
 def fingerprint(df: DataFrame, text: Column, id_col: Column, k: int = 5) -> DataFrame:
     """Rolling-hash document fingerprint: min(md5) over token k-gram
     shingles — a 1-permutation MinHash, stable under content shifts that

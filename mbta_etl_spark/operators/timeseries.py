@@ -26,19 +26,19 @@ def locf(
     key_cols: Sequence[str],
     order_cols: Sequence[Column],
     value_col: str,
-    out_col: str = "value_filled",
 ) -> DataFrame:
-    """Last-observation-carried-forward: null measurements take the most
-    recent non-null value within their series; leading nulls (no prior
-    observation) stay null. ``F.last(ignorenulls=True)`` over a running
-    frame — the engine-native gap fill, no self-join."""
+    """Last-observation-carried-forward into ``value_filled``: null
+    measurements take the most recent non-null value within their series;
+    leading nulls (no prior observation) stay null.
+    ``F.last(ignorenulls=True)`` over a running frame — the engine-native
+    gap fill, no self-join."""
     w = (
         Window.partitionBy(*key_cols)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
-        out_col, F.last(F.col(value_col), ignorenulls=True).over(w)
+        "value_filled", F.last(F.col(value_col), ignorenulls=True).over(w)
     )
 
 
@@ -48,10 +48,10 @@ def interpolate(
     ts_col: str,
     order_tiebreak: str,
     value_col: str,
-    out_col: str = "value_interp",
 ) -> DataFrame:
-    """Linear interpolation of null measurements between the nearest
-    non-null neighbours in the series (TimescaleDB ``interpolate``):
+    """Linear interpolation, into ``value_interp``, of null measurements
+    between the nearest non-null neighbours in the series (TimescaleDB
+    ``interpolate``):
     v = prev + (next − prev) · elapsed/gap, with elapsed/gap taken from
     exact microsecond timestamp differences. Non-null rows pass through
     untouched; nulls before the first or after the last observation stay
@@ -97,7 +97,7 @@ def interpolate(
             F.floor(interp * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6),
         )
     )
-    return staged.withColumn(out_col, filled).drop(
+    return staged.withColumn("value_interp", filled).drop(
         "_prev_v", "_prev_t", "_next_v", "_next_t"
     )
 
@@ -109,11 +109,10 @@ def rolling_zscore(
     order_tiebreak: str,
     value_col: str,
     lookback: int = 20,
-    threshold: float = 3.0,
 ) -> DataFrame:
     """Rolling-window anomaly detection: per-series z-score of each
     observation against the trailing ``lookback``+current frame, flagged
-    when |z| exceeds ``threshold`` (the classic 3-sigma monitor).
+    when |z| exceeds 3 (the classic 3-sigma monitor).
 
     Cross-engine float discipline: the frame sums (Σv, Σv²) are order-
     dependent across engines (running vs segment-tree accumulation), so
@@ -150,7 +149,7 @@ def rolling_zscore(
         order_tiebreak,
         value_col,
         z.alias("z"),
-        (z.isNotNull() & (F.abs(z) > F.lit(threshold))).alias("is_anomaly"),
+        (z.isNotNull() & (F.abs(z) > F.lit(3.0))).alias("is_anomaly"),
     )
 
 
@@ -159,12 +158,11 @@ def bucket_gapfill(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    bucket: str = "hour",
     max_buckets_per_key: int | None = None,
 ) -> DataFrame:
     """Per-key time-bucket rollup with an explicit gap spine
     (TimescaleDB ``time_bucket_gapfill`` + ``locf``): aggregate each
-    series into ``bucket`` buckets, generate EVERY bucket between that
+    series into hour buckets, generate EVERY bucket between that
     series' first and last observation, zero-fill event counts, and
     carry the last observed bucket sum forward across empty buckets.
 
@@ -182,7 +180,7 @@ def bucket_gapfill(
     When set, a key's spine is truncated to its LAST N buckets (the
     recent window a dashboard reads); the task fails loudly in review,
     not silently, because truncation is visible in the output domain."""
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("hour", F.col(ts_col)).cast("timestamp_ntz")
     agg = df.groupBy(*key_cols, b.alias("bucket")).agg(
         F.count("*").alias("n_events"),
         (
@@ -197,7 +195,7 @@ def bucket_gapfill(
         capped_lo = F.greatest(
             F.col("_lo"),
             F.expr(
-                f"_hi - INTERVAL {max_buckets_per_key - 1} {bucket}"
+                f"_hi - INTERVAL {max_buckets_per_key - 1} hour"
             ).cast("timestamp_ntz"),
         )
         bounds = bounds.select(
@@ -209,7 +207,7 @@ def bucket_gapfill(
             F.sequence(
                 F.col("_lo"),
                 F.col("_hi"),
-                F.expr(f"INTERVAL 1 {bucket}"),
+                F.expr("INTERVAL 1 hour"),
             )
         ).alias("bucket"),
     )
@@ -368,9 +366,8 @@ def downsample_last(
     ts_col: str,
     order_tiebreak: str,
     value_cols: Sequence[str],
-    bucket: str = "hour",
 ) -> DataFrame:
-    """Downsample each series to one row per time bucket — the LAST
+    """Downsample each series to one row per hour bucket — the LAST
     observation wins (TimescaleDB ``last(value, time)`` per
     ``time_bucket``; the dashboard-resolution reducer). One window keyed
     by (series, bucket): rank descending by (ts, tiebreak), keep rank 1.
@@ -378,7 +375,7 @@ def downsample_last(
     size is #(key, bucket) pairs regardless of input rate, which is the
     point — a 1 Hz feed downsampled hourly sheds 3600× before anything
     downstream shuffles again."""
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("hour", F.col(ts_col)).cast("timestamp_ntz")
     w = (
         Window.partitionBy(*key_cols, "bucket")
         .orderBy(F.desc(ts_col), F.desc(order_tiebreak))
@@ -395,10 +392,10 @@ def minmax_normalize(
     df: DataFrame,
     key_cols: Sequence[str],
     value_col: str,
-    out_col: str = "value_norm",
 ) -> DataFrame:
-    """Per-series min-max normalization to [0, 1] — the per-key feature
-    scaling an ML pipeline applies before windowed models. One unordered
+    """Per-series min-max normalization to [0, 1] into ``value_norm`` —
+    the per-key feature scaling an ML pipeline applies before windowed
+    models. One unordered
     window over the series key (no sort — min/max are frame-free), so
     the plan is a single Exchange plus a hash-window pass; constant
     series (max == min) normalize to null rather than a divide-by-zero.
@@ -410,7 +407,7 @@ def minmax_normalize(
     hi = F.max(v).over(w)
     ratio = (v - lo) / (hi - lo)
     return df.withColumn(
-        out_col,
+        "value_norm",
         F.when(
             hi > lo, F.floor(ratio * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
         ),
@@ -456,13 +453,12 @@ def locf_with_ttl(
     order_tiebreak: str,
     value_col: str,
     max_stale_seconds: float,
-    out_col: str = "value_filled",
 ) -> DataFrame:
-    """LOCF with an expiry: a carried-forward value goes back to null
-    once it is older than ``max_stale_seconds`` — the monitoring
-    semantics where a stale reading is worse than no reading (a sensor
-    that died mustn't keep reporting its last value forever; plain
-    ``locf`` does exactly that).
+    """LOCF into ``value_filled`` with an expiry: a carried-forward value
+    goes back to null once it is older than ``max_stale_seconds`` — the
+    monitoring semantics where a stale reading is worse than no reading
+    (a sensor that died mustn't keep reporting its last value forever;
+    plain ``locf`` does exactly that).
 
     Same single window as ``locf``, plus the timestamp of the carried
     observation (``last`` over the same frame) so staleness is one
@@ -484,7 +480,7 @@ def locf_with_ttl(
         f"timestampdiff(MICROSECOND, _ct, {ts_col})"
     ) / F.lit(1_000_000.0)
     return staged.withColumn(
-        out_col,
+        "value_filled",
         F.when(age_s <= max_stale_seconds, F.col("_cv")),
     ).drop("_cv", "_ct")
 
@@ -575,14 +571,13 @@ def ohlc_bars(
     ts_col: str,
     order_tiebreak: str,
     value_col: str,
-    bucket: str = "hour",
 ) -> DataFrame:
-    """Resample each series into OHLC bars: one row per (series, bucket)
-    with the first (open), max (high), min (low), and last (close)
+    """Resample each series into hourly OHLC bars: one row per (series,
+    bucket) with the first (open), max (high), min (low), and last (close)
     observation plus the bar's row count — the candlestick/telemetry
     reducer (TimescaleDB ``candlestick_agg``, kdb ``xbar`` + first/last).
 
-    Shape: a single groupBy on (keys, date_trunc(bucket)) — ``min_by`` /
+    Shape: a single groupBy on (keys, date_trunc('hour')) — ``min_by`` /
     ``max_by`` over a (ts, tiebreak) struct give open/close without any
     window sort, and all five aggregates are partial-aggregable, so the
     map side combines to one row per (key, bucket) per task BEFORE the
@@ -590,7 +585,7 @@ def ohlc_bars(
     shuffle moves #(key, bucket) rows, not #input rows, and a 1 Hz feed
     compresses 3600x map-side. Deterministic under ties via the
     monotonic tiebreak column in the ordering struct."""
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("hour", F.col(ts_col)).cast("timestamp_ntz")
     ordk = F.struct(F.col(ts_col), F.col(order_tiebreak))
     v = F.col(value_col)
     return (
@@ -611,16 +606,13 @@ def cusum_drift(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    bucket: str = "day",
-    slack_sigmas: float = 0.5,
-    alarm_sigmas: float = 4.0,
 ) -> DataFrame:
-    """Per-series one-sided CUSUM drift detector over bucketed means:
+    """Per-series one-sided CUSUM drift detector over daily bucket means:
 
         S_t = max(0, S_{t-1} + x_t - mu - k),   alarm when S_t > h
 
-    with mu/sd the series' own bucket-mean statistics, k = slack_sigmas*sd
-    (ignore wiggle below this), h = alarm_sigmas*sd. The standard
+    with mu/sd the series' own bucket-mean statistics, k = 0.5*sd
+    (ignore wiggle below this), h = 4*sd. The standard
     change-point monitor for data-quality/ingest drift — unlike ts04's
     rolling z-score, CUSUM accumulates many small shifts that never
     individually clear a z threshold.
@@ -641,7 +633,7 @@ def cusum_drift(
     import pandas as pd
 
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     bucketed = df.groupBy(*key_cols, b.alias("bucket")).agg(
         r6(F.avg(value_col)).alias("x")
     )
@@ -665,8 +657,8 @@ def cusum_drift(
         pdf = pdf.sort_values("bucket").reset_index(drop=True)
         mu = float(pdf["mu"].iloc[0])
         sd = float(pdf["sd"].iloc[0]) if pd.notna(pdf["sd"].iloc[0]) else 0.0
-        k = slack_sigmas * sd
-        h = alarm_sigmas * sd
+        k = 0.5 * sd
+        h = 4.0 * sd
         s = 0.0
         out = []
         for x in pdf["x"]:
@@ -686,14 +678,12 @@ def holt_linear(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    bucket: str = "day",
-    alpha: float = 0.5,
-    beta: float = 0.25,
 ) -> DataFrame:
     """Per-series Holt double-exponential smoothing (level + trend) over
-    bucketed means, scoring the one-step-ahead forecast f_t = l_{t-1} +
-    b_{t-1} against the actual — the next rung up from ts11's seasonal-
-    naive baseline, still cheap enough to run as a scan-side audit:
+    daily bucket means, scoring the one-step-ahead forecast f_t =
+    l_{t-1} + b_{t-1} against the actual — the next rung up from ts11's
+    seasonal-naive baseline, still cheap enough to run as a scan-side
+    audit:
 
         l_t = alpha*x_t + (1-alpha)*(l_{t-1} + b_{t-1})
         b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
@@ -710,8 +700,9 @@ def holt_linear(
     """
     import pandas as pd
 
+    alpha, beta = 0.5, 0.25
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     bucketed = df.groupBy(*key_cols, b.alias("bucket")).agg(
         r6(F.avg(value_col)).alias("x")
     )
@@ -755,22 +746,17 @@ def holt_winters(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    bucket: str = "day",
-    period: int = 7,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    gamma: float = 0.25,
 ) -> DataFrame:
     """Per-series additive Holt-Winters (level + trend + seasonal) over
-    bucketed means — the seasonality-aware rung above ``holt_linear``,
-    scoring the one-step-ahead forecast f_t = l_{t-1} + b_{t-1} +
-    s_{t-m} against the actual:
+    daily bucket means with a weekly period m = 7 — the seasonality-aware
+    rung above ``holt_linear``, scoring the one-step-ahead forecast
+    f_t = l_{t-1} + b_{t-1} + s_{t-m} against the actual:
 
         l_t = alpha*(x_t - s_{t-m}) + (1-alpha)*(l_{t-1} + b_{t-1})
         b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
         s_t = gamma*(x_t - l_t)   + (1-gamma)*s_{t-m}
 
-    No-lookahead init at t = m (period): l_m = x_m, b_m = 0, s_i =
+    No-lookahead init at t = m: l_m = x_m, b_m = 0, s_i =
     x_i - x_m for i = 1..m — every init term is a single IEEE subtract
     on already-6dp-pinned bucket means, so the recursion is replayable
     bit-for-bit by a recursive CTE carrying (level, trend, seasonal
@@ -781,15 +767,16 @@ def holt_winters(
     Execution shape: same two tiers as ``holt_linear`` — a distributed
     bucket aggregate (map-side-combinable), then the inherently
     sequential per-series recursion inside applyInPandas over the tiny
-    post-aggregate table. State is O(period) per series; parallelism is
+    post-aggregate table. State is O(m) per series; parallelism is
     across series, which is the only axis that grows at 100 TB.
     Smoothing factors are exact binary fractions (0.5, 0.25) so both
     engines' recursions multiply exactly.
     """
     import pandas as pd
 
+    alpha, beta, gamma = 0.5, 0.25, 0.25
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     bucketed = df.groupBy(*key_cols, b.alias("bucket")).agg(
         r6(F.avg(value_col)).alias("x")
     )
@@ -802,7 +789,7 @@ def holt_winters(
         f"{key_fields}, bucket timestamp_ntz, x double, "
         "forecast double, abs_err double"
     )
-    m = period
+    m = 7
 
     def _one_series(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bucket").reset_index(drop=True)
@@ -838,17 +825,15 @@ def seasonal_mad_anomalies(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    bucket: str = "day",
-    season: int = 7,
     threshold: float = 3.0,
 ) -> DataFrame:
-    """Seasonal-profile robust anomaly detection: per-series day-of-week
-    median profile, residual against the profile, and a MAD-scaled
-    robust z-score — flag buckets where |resid| / (1.4826·MAD) exceeds
-    ``threshold``. The STL-lite outlier detector a metrics pipeline
-    runs where ts04's rolling z-score fails: medians shrug off the
-    outliers themselves (no masking), and the weekly profile keeps
-    ordinary weekend dips from flagging.
+    """Seasonal-profile robust anomaly detection over daily buckets:
+    per-series day-of-week median profile, residual against the profile,
+    and a MAD-scaled robust z-score — flag buckets where
+    |resid| / (1.4826·MAD) exceeds ``threshold``. The STL-lite outlier
+    detector a metrics pipeline runs where ts04's rolling z-score fails:
+    medians shrug off the outliers themselves (no masking), and the
+    weekly profile keeps ordinary weekend dips from flagging.
 
     Day-of-week is epoch-day mod 7 (engine-portable — no locale
     dayofweek). All medians are grouped aggregates joined back via
@@ -860,13 +845,13 @@ def seasonal_mad_anomalies(
     emission only.
     """
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     daily = df.groupBy(*key_cols, b.alias("bucket")).agg(
         r6(F.avg(value_col)).alias("x")
     )
     dow = (
         F.datediff(F.col("bucket").cast("date"), F.to_date(F.lit("1970-01-01")))
-        % season
+        % 7
     ).cast("int")
     daily = daily.withColumn("dow", dow)
     prof = daily.groupBy(*key_cols, "dow").agg(
@@ -950,7 +935,6 @@ def changepoint_single(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    bucket: str = "day",
 ) -> DataFrame:
     """Best single changepoint per series (the first step of binary
     segmentation / PELT): the split that maximally reduces total SSE
@@ -975,7 +959,7 @@ def changepoint_single(
     from pyspark.sql import Window
 
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     daily = df.groupBy(*key_cols, b.alias("bucket")).agg(
         F.floor(F.avg(value_col) * F.lit(1e3) + F.lit(0.5))
         .cast("long")
@@ -1047,10 +1031,9 @@ def acf(
     ts_col: str,
     value_col: str,
     lags: Sequence[int] = (1, 2, 7, 14),
-    bucket: str = "day",
 ) -> DataFrame:
     """Per-series autocorrelation function at the requested lags:
-    Pearson r between x_t and x_{t+lag} over bucketed means — the
+    Pearson r between x_t and x_{t+lag} over daily bucket means — the
     seasonality/persistence diagnostic that tells you WHICH period
     ts25's Holt-Winters should model (a weekly cycle shows as an ACF
     peak at lag 7) and whether ts13's drift tests have independent
@@ -1072,7 +1055,7 @@ def acf(
     from pyspark.sql import Window
 
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     daily = df.groupBy(*key_cols, b.alias("bucket")).agg(
         F.floor(F.avg(value_col) * F.lit(1e3) + F.lit(0.5)).cast("long").alias("x3")
     )
@@ -1122,9 +1105,8 @@ def stl_decompose(
     ts_col: str,
     value_col: str,
     period: int = 7,
-    bucket: str = "day",
 ) -> DataFrame:
-    """Additive STL-style decomposition of each series' bucketed means
+    """Additive STL-style decomposition of each series' daily bucket means
     into trend + seasonal + residual — the "what is actually moving"
     view that turns ts27's anomaly flags and ts28's changepoint into
     explainable components (is the level drifting, or is it just the
@@ -1136,7 +1118,7 @@ def stl_decompose(
                    edge rule, so every trend is a 7-term mean)
       detrend_t  = x_t - trend_t
       seasonal_d = per-(series, position-in-period) mean of detrend
-                   (position = ISO weekday for the default day/7)
+                   (position = ISO weekday for the default period 7)
       resid_t    = detrend_t - seasonal_d
 
     Exactness: x3 is the 3dp-pinned integer bucket mean (the ts28/ts29
@@ -1159,7 +1141,7 @@ def stl_decompose(
 
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     half = (period - 1) // 2
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     daily = df.groupBy(*key_cols, b.alias("bucket")).agg(
         F.floor(F.avg(value_col) * F.lit(1e3) + F.lit(0.5)).cast("long").alias("x3")
     )
@@ -1208,10 +1190,10 @@ def forecast_backtest(
     ts_col: str,
     value_col: str,
     season: int = 7,
-    bucket: str = "day",
 ) -> DataFrame:
-    """Per-series forecast backtest: seasonal-naive (x̂_t = x_{t-season})
-    vs naive (x̂_t = x_{t-1}) one-step-ahead MAE over the same
+    """Per-series forecast backtest over daily bucket means:
+    seasonal-naive (x̂_t = x_{t-season}) vs naive (x̂_t = x_{t-1})
+    one-step-ahead MAE over the same
     evaluation rows, and their ratio — the MASE-style number that says
     whether the weekly structure ts29/ts30 detected actually FORECASTS
     (ratio < 1 ⇒ model the season; ratio ≥ 1 ⇒ it's noise).
@@ -1228,7 +1210,7 @@ def forecast_backtest(
     from pyspark.sql import Window
 
     r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("day", F.col(ts_col)).cast("timestamp_ntz")
     daily = df.groupBy(*key_cols, b.alias("bucket")).agg(
         F.floor(F.avg(value_col) * F.lit(1e3) + F.lit(0.5)).cast("long").alias("x3")
     )
@@ -1319,15 +1301,14 @@ def timedecay_smooth(
     order_tiebreak: str,
     value_col: str,
     lookback: int = 16,
-    tau_us: int = 600_000_000,
 ) -> DataFrame:
     """Irregular-gap kernel smoother: each observation is replaced by a
     weighted mean of its trailing ``lookback``+current frame, with
     hyperbolic time-decay weights w_j = tau / (tau + (t_i - t_j)) — the
     attention-like smoother for series whose rows are NOT equally
     spaced, where a row-count EWMA (ts06) over-weights whatever burst
-    happens to precede the row. tau is the half-influence scale: an
-    observation tau microseconds back carries half a current one.
+    happens to precede the row. tau = 600 s is the half-influence scale:
+    an observation tau back carries half a current one.
 
     Cross-engine exactness: the weights are RATIONAL in the integer
     microsecond gap — one IEEE divide per term, no exp()/libm whose
@@ -1358,7 +1339,7 @@ def timedecay_smooth(
         .over(w)
         .alias("_win"),
     )
-    tau = F.lit(float(tau_us))
+    tau = F.lit(600_000_000.0)
 
     def _wgt(s: Column) -> Column:
         return tau / (tau + (F.col("_t_us") - s["t"]).cast("double"))
@@ -1383,9 +1364,8 @@ def m4_downsample(
     ts_col: str,
     order_tiebreak: str,
     value_col: str,
-    bucket: str = "hour",
 ) -> DataFrame:
-    """M4 visual downsampling (Jugel et al., VLDB 2014): per time bucket
+    """M4 visual downsampling (Jugel et al., VLDB 2014): per hour bucket
     keep the four points a pixel column can actually show — first, last,
     min, max — instead of an average that flattens spikes. The standard
     lossless-for-rendering reducer behind dashboard charts.
@@ -1395,7 +1375,7 @@ def m4_downsample(
     (min/first break ties toward the earliest (ts, id); max/last toward
     the latest), so re-runs and re-partitions are bit-stable. No window,
     no second shuffle; output is O(4 points per key-bucket)."""
-    b = F.date_trunc(bucket, F.col(ts_col)).cast("timestamp_ntz")
+    b = F.date_trunc("hour", F.col(ts_col)).cast("timestamp_ntz")
     t, i, v = F.col(ts_col), F.col(order_tiebreak), F.col(value_col)
     g = (
         df.select(*key_cols, b.alias("bucket"), t, i, v)

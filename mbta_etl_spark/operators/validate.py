@@ -137,9 +137,7 @@ def quarantine_split(
     )
 
 
-def benford_digit_audit(
-    df: DataFrame, value_col: Column, out_digit: str = "digit"
-) -> DataFrame:
+def benford_digit_audit(df: DataFrame, value_col: Column) -> DataFrame:
     """First-significant-digit census vs Benford's law — the classic
     fabricated-data / unit-mixup detector for positive monetary or
     measurement columns. Returns one row per digit 1..9 with the
@@ -156,26 +154,26 @@ def benford_digit_audit(
     pos = df.select(value_col.alias("_v")).filter(F.col("_v") > 0)
     digit = F.floor(F.col("_v") / F.pow(F.lit(10.0), F.floor(F.log10("_v"))))
     counted = (
-        pos.select(digit.cast("int").alias(out_digit))
-        .groupBy(out_digit)
+        pos.select(digit.cast("int").alias("digit"))
+        .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     spine = counted.sparkSession.range(1, 10).select(
-        F.col("id").cast("int").alias(out_digit)
+        F.col("id").cast("int").alias("digit")
     )
     total = F.sum("n").over(Window.partitionBy())
 
     def _r6(c: Column) -> Column:
         return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
-    exp_share = F.log10(F.lit(1.0) + F.lit(1.0) / F.col(out_digit))
+    exp_share = F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit"))
     exp_n = exp_share * total
     filled = (
-        spine.join(F.broadcast(counted), out_digit, "left")
-        .select(out_digit, F.coalesce("n", F.lit(0)).alias("n"))
+        spine.join(F.broadcast(counted), "digit", "left")
+        .select("digit", F.coalesce("n", F.lit(0)).alias("n"))
     )
     return filled.select(
-        out_digit,
+        "digit",
         "n",
         _r6(F.col("n") / total).alias("obs_share"),
         _r6(exp_share).alias("exp_share"),

@@ -24,13 +24,7 @@ from pyspark.sql import functions as F
 from mbta_etl_spark.operators import dedup, text
 
 
-def corpus_stages(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.5,
-    jaccard_threshold: float = 0.5,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def corpus_stages(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The pipeline's intermediate frames ``(qualified, exact_kept,
     survivors)``, shared by ``clean_corpus`` (final stats) and the c19
     observability funnel (per-stage counts) so compositions never
@@ -38,9 +32,8 @@ def corpus_stages(
     pipeline, the anti-join probe, and the survivor rows."""
     from pyspark.sql import Window
 
-    t, i = F.col(text_col), F.col(id_col)
+    t, i = F.col("text"), F.col("doc_id")
 
-    assert id_col == "doc_id", "corpus_stages expects the id column named doc_id"
     # quality as an inline column — a projection, not a compute-then-join-
     # back (the join would shuffle the whole corpus twice for no reason)
     toks = F.split(t, " ")
@@ -54,7 +47,7 @@ def corpus_stages(
         0.5 * len_score + 0.3 * (1 - stop_ratio) + 0.2 * (1 - punct_ratio), 6
     )
     qualified = docs.withColumn("quality", qual).filter(
-        F.col("quality") >= min_quality
+        F.col("quality") >= 0.5
     )
 
     # exact dedup: keep the min doc_id per content group — ONE shuffle
@@ -73,35 +66,25 @@ def corpus_stages(
     exact_kept = materialize(exact_kept)
 
     # near-dedup among the exact-kept set: drop doc_b of each pair
-    pairs = dedup.minhash_lsh_pairs(
-        exact_kept, t, i, threshold=jaccard_threshold
-    )
+    pairs = dedup.minhash_lsh_pairs(exact_kept, t, i, threshold=0.5)
     drop_b = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = exact_kept.join(drop_b, "doc_id", "left_anti")
     return qualified, exact_kept, survivors
 
 
-def clean_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.5,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """Returns the surviving documents with quality + token stats.
+def clean_corpus(docs: DataFrame) -> DataFrame:
+    """Returns the surviving documents of a (doc_id, text, ...) table with
+    quality + token stats.
 
     Drop rules, in order:
-    1. quality < min_quality (length/stopword/punctuation heuristic)
+    1. quality < 0.5 (length/stopword/punctuation heuristic)
     2. exact duplicates: every doc whose sha256(text) group has a smaller
        doc_id survivor
     3. near duplicates: the larger doc_id of every LSH-confirmed pair with
-       Jaccard ≥ threshold (computed among quality survivors)
+       Jaccard ≥ 0.5 (computed among quality survivors)
     """
-    t = F.col(text_col)
-    toks = F.split(t, " ")
-    _, _, survivors = corpus_stages(
-        docs, text_col, id_col, min_quality, jaccard_threshold
-    )
+    toks = F.split(F.col("text"), " ")
+    _, _, survivors = corpus_stages(docs)
     # token stats inline for the same reason as quality
     return survivors.select(
         "doc_id",

@@ -1524,11 +1524,10 @@ def st04_stream_session_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).select("user_id", "ts", "value")
     # time-monotone batch split relative to the ACTUAL data span —
     # shared helper (st05 uses the same one; see its docstring for the
-    # monotonicity argument). No uniform-shift requirement: the
-    # event-time arithmetic below is zone-free (wall-instant
-    # relabeling), so a DST transition inside the span is handled
-    # correctly rather than rejected.
-    keyed = time_quantile_key(ev, "ts", 4, require_uniform_shift=False)
+    # monotonicity argument). The event-time arithmetic below is
+    # zone-free (wall-instant relabeling), so a DST transition inside
+    # the span is handled correctly.
+    keyed = time_quantile_key(ev, "ts", 4)
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("2099-01-01 00:00:00").cast("timestamp_ntz").alias("ts"),
@@ -1706,9 +1705,7 @@ def _land_pair_streams(
     # data, and every later batch would be silently corrupted (the
     # replay.py failure mode)
     n_batches = 4
-    keyed = time_quantile_key(
-        ev, "ts", n_batches, require_uniform_shift=False
-    )
+    keyed = time_quantile_key(ev, "ts", n_batches)
     clicks_dir = os.path.join(base, "clicks")
     purch_dir = os.path.join(base, "purchases")
     shutil.rmtree(base, ignore_errors=True)
@@ -2125,9 +2122,7 @@ def st08_stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "scale factor — redelivered copies would outlive their "
             "dedup state; widen the horizon or raise n_batches"
         )
-    keyed = time_quantile_key(
-        ev, "ts", n_batches, require_uniform_shift=False
-    )
+    keyed = time_quantile_key(ev, "ts", n_batches)
     redelivered = keyed.filter(
         F.pmod(F.col("event_id"), F.lit(17)) == 0
     ).withColumn(

@@ -1,68 +1,15 @@
-"""File-format sources: schema-enforced CSV / JSONL readers and parquet
-footer introspection.
+"""File-format sources: parquet footer introspection.
 
 The reference's only persistent format is its SQLite file (reference
 pipeline/load.go:6-39); a Spark engine instead meets data as files on
-object storage. Rules all readers here follow:
-
-- **Schema is declared, never inferred.** Inference scans the data once
-  before the real job (2× read at 100 TB) and silently drifts when a
-  partition has anomalous rows. ``schema(...)`` + ``mode=FAILFAST``
-  gives one scan and loud failure, matching the reference's
-  abort-on-bad-input semantics (reference pipeline/extract.go:27-30).
-- **Corrupt-row policy is explicit.** ``permissive_with_corrupt_column``
-  keeps bad rows in ``_corrupt_record`` for quarantine pipelines
-  instead of failing the job — choose per call site.
-- **Readers return lazy DataFrames**; nothing is collected.
+object storage, and the footers of those files are what partition
+pruning and row-group skipping decide from.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructType
-
-CORRUPT_COL = "_corrupt_record"
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = True,
-    permissive_with_corrupt_column: bool = False,
-) -> DataFrame:
-    """CSV with a declared schema. FAILFAST by default; PERMISSIVE mode
-    adds ``_corrupt_record`` capturing unparseable lines."""
-    reader = spark.read.option("header", str(header).lower())
-    if permissive_with_corrupt_column:
-        schema = StructType(list(schema.fields)).add(CORRUPT_COL, StringType())
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", CORRUPT_COL
-        )
-    else:
-        reader = reader.option("mode", "FAILFAST")
-    return reader.schema(schema).csv(path)
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    permissive_with_corrupt_column: bool = False,
-) -> DataFrame:
-    """Line-delimited JSON with a declared schema (the landing format of
-    the HTTP pollers, see sources/http_json.py). Same corrupt-row policy
-    switch as ``read_csv``."""
-    reader = spark.read
-    if permissive_with_corrupt_column:
-        schema = StructType(list(schema.fields)).add(CORRUPT_COL, StringType())
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", CORRUPT_COL
-        )
-    else:
-        reader = reader.option("mode", "FAILFAST")
-    return reader.schema(schema).json(path)
 
 
 def footer_stats(

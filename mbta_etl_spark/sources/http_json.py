@@ -54,9 +54,8 @@ Two faces share these semantics:
     re-observing is strictly stronger).
 
 Archived snapshots landed as JSON lines are a different input: read them
-with ``files.read_jsonl(spark, path, RAW_VEHICLE_SCHEMA)`` or a
-file-stream source (``mbta_etl_spark.streaming``); the downstream
-transform is identical.
+with the file-stream source ``streaming.ingest.stream_vehicle_snapshots``
+(declared ``RAW_VEHICLE_SCHEMA``); the downstream transform is identical.
 """
 
 from __future__ import annotations
@@ -168,6 +167,15 @@ def _typed(kinds: tuple, what: str, name: str, convert=None) -> Callable[[Any], 
     return project
 
 
+def _replace_lone_surrogates(s: str) -> str:
+    """json.loads keeps a lone surrogate escape (``"\\ud800"``) as a
+    surrogate code point, which no UTF-8 encoder accepts; Go's decoder
+    puts U+FFFD in its place. A valid pair is already one character."""
+    if s.isascii():
+        return s
+    return s.encode("utf-16-le", "surrogatepass").decode("utf-16-le", "replace")
+
+
 @functools.cache
 def _projector(dtype: DataType) -> Callable[[Any], Any]:
     """Compile ``dtype`` once into a json.loads value -> schema-shaped
@@ -196,7 +204,7 @@ def _projector(dtype: DataType) -> Callable[[Any], Any]:
             (dict,), "JSON object", name, lambda v: {k: val(x) for k, x in v.items()}
         )
     if isinstance(dtype, StringType):
-        return _typed((str,), "JSON string", name)
+        return _typed((str,), "JSON string", name, _replace_lone_surrogates)
     if isinstance(dtype, BooleanType):
         return _typed((bool,), "JSON bool", name)
     if isinstance(dtype, (FloatType, DoubleType)):

@@ -88,40 +88,6 @@ def dedup_stream_by_key(
     )
 
 
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    max_delay: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Stream-stream interval join: right-side rows attach to a left-side
-    row with the same key when they arrive within [left_ts, left_ts +
-    max_delay] — the click-to-impression attribution shape, but live.
-
-    Both sides are watermarked AND the join condition bounds event time
-    in both directions; together these let the state store evict: a
-    buffered left row can be dropped once the right watermark passes
-    left_ts + max_delay (and vice versa), so state is proportional to
-    the delay horizon, not the stream history. Without the time bound
-    Spark would (correctly) refuse unbounded stream-stream state growth
-    for outer joins and buffer forever for inner. Column names must be
-    disjoint across the two streams (streaming joins have no alias
-    scoping across micro-batches).
-    """
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
-    cond = (
-        (F.col(left_key) == F.col(right_key))
-        & (F.col(right_ts) >= F.col(left_ts))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {max_delay}"))
-    )
-    return l.join(r, cond, "inner")
-
-
 def interval_overlap_streams(
     a: DataFrame,
     b: DataFrame,
@@ -134,8 +100,7 @@ def interval_overlap_streams(
     watermark: str = "30 minutes",
     how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream INTERVAL-OVERLAP join — the symmetric sibling of
-    ``interval_join_streams``: each a-row owns the window
+    """Stream-stream INTERVAL-OVERLAP join: each a-row owns the window
     [a_ts, a_ts + a_window), each b-row [b_ts, b_ts + b_window), and a
     pair joins when the windows overlap, i.e.
     ``b_ts > a_ts - b_window AND b_ts < a_ts + a_window`` (strict: two

@@ -81,60 +81,7 @@ def land_replay_log(
     shutil.rmtree(staging, ignore_errors=True)
 
 
-def assert_constant_utc_offset(tz_name: str, mn, mx) -> None:
-    """Fail LOUDLY if the session timezone changes UTC offset anywhere
-    in [mn, mx] (naive wall datetimes, 6-hour probe grid).
-
-    A watermarked consumer that CASTS NTZ event times to LTZ in the
-    session zone (watermarks require LTZ) implicitly assumes the cast
-    is a UNIFORM shift: across a DST transition it is not — wall-time
-    arithmetic (session gaps, window overlaps) diverges between the
-    LTZ stream and an NTZ SQL oracle by the offset step, a silent hash
-    mismatch. This guard turns that silent divergence into an explicit
-    error for any such consumer. As of round 7 NO registry entry needs
-    it — st04/st05/st06 moved to the zone-free wall-instant relabeling
-    (registry._wall_instant / _ntz_from_wall_instant), which is exact
-    across transitions — so it survives as the conservative default
-    for FUTURE consumers that take the session-zone-cast shortcut
-    (time_quantile_key applies it unless require_uniform_shift=False).
-    Fixed-offset zone names (UTC, GMT+8, +05:30) are constant by
-    construction; region names are probed via zoneinfo."""
-    import datetime as dt
-
-    name = tz_name.strip()
-    # tuple membership, not `in "+-"`: an empty name would make the
-    # substring test vacuously True and silently bypass the DST guard
-    if name.upper() in ("UTC", "Z", "GMT") or name[:1] in ("+", "-") or (
-        name.upper().startswith(("GMT+", "GMT-", "UTC+", "UTC-"))
-    ):
-        return
-    from zoneinfo import ZoneInfo
-
-    tz = ZoneInfo(name)
-    probe = mn
-    offsets = set()
-    while probe <= mx:
-        offsets.add(probe.replace(tzinfo=tz).utcoffset())
-        probe += dt.timedelta(hours=6)
-    offsets.add(mx.replace(tzinfo=tz).utcoffset())
-    if len(offsets) > 1:
-        raise ValueError(
-            f"session timezone {tz_name!r} changes UTC offset within "
-            f"the replay span [{mn} .. {mx}] ({sorted(str(o) for o in offsets)}); "
-            "the NTZ->LTZ watermark cast is not a uniform shift here, so "
-            "the streamed result would silently diverge from the NTZ "
-            "batch oracle — run with a transition-free session zone, or "
-            "rework the entry to compute its event-time arithmetic on "
-            "NTZ columns carried through the operator"
-        )
-
-
-def time_quantile_key(
-    df: DataFrame,
-    ts_col: str,
-    n_batches: int,
-    require_uniform_shift: bool = True,
-) -> DataFrame:
+def time_quantile_key(df: DataFrame, ts_col: str, n_batches: int) -> DataFrame:
     """Append a ``replay_key`` column holding the TIME-MONOTONE batch
     index a watermarked replay needs (st04/st05): the actual data span
     is split into ``n_batches`` contiguous day ranges, so batch k+1's
@@ -147,18 +94,13 @@ def time_quantile_key(
     NTZ-derived wall dates, so it is TZ-free. Consumers landing
     multiple streams from one source (st05) must call this ONCE on the
     shared frame before splitting sides, so the landings stay mutually
-    aligned batch-for-batch. By default also guards the NTZ->LTZ
-    uniform-shift assumption of any watermarked consumer that CASTS to
-    the session zone (see assert_constant_utc_offset) — a conservative
-    default for NEW consumers; as of round 7 every registry entry
-    (st04/st05/st06) uses the zone-free wall-instant relabeling
-    instead and passes ``require_uniform_shift=False``, being correct
-    across DST transitions by construction."""
+    aligned batch-for-batch. The watermarked consumers (st04/st05/st06)
+    must not cast NTZ event times to the session zone: across a DST
+    transition that cast is not a uniform shift. They relabel event
+    times zone-free (registry._wall_instant / _ntz_from_wall_instant),
+    which is exact across transitions, so no session-zone check runs
+    here."""
     mn, mx = df.agg(F.min(ts_col), F.max(ts_col)).first()
-    if require_uniform_shift:
-        assert_constant_utc_offset(
-            df.sparkSession.conf.get("spark.sql.session.timeZone"), mn, mx
-        )
     n_days = (mx.date() - mn.date()).days + 1
     days_per_batch = max(1, -(-n_days // n_batches))
     day_off = F.datediff(
@@ -213,9 +155,7 @@ _PIN_ADVISORY_BYTES = 64 * 1024 * 1024
 @contextmanager
 def pinned_stream_parallelism(spark, n: int = 8, input_dirs=None):
     """Pin ``spark.sql.shuffle.partitions`` around a bounded streaming
-    replay, restoring the session value after. ``SPARK_GRAFT_STREAM_PIN``
-    overrides ``n`` for A/B experiments (and is the scale knob a real
-    deployment would set to its executor count).
+    replay, restoring the session value after.
 
     Scale adaptivity (r9, VERDICT r8 item 4): the measured tier value
     ``n`` is a FLOOR, not the answer — when ``input_dirs`` (the landed
@@ -226,7 +166,7 @@ def pinned_stream_parallelism(spark, n: int = 8, input_dirs=None):
     production scale the data term grows past the floor and the pin
     rises to the session's own shuffle sizing (the deployment-set
     value), so 4-8 state-store partitions can never strangle a real
-    load. The env override still wins over everything.
+    load.
 
     Why 8 at test scale — the round-8 measured A/B (sf0.1, local[32],
     32 session partitions vs 8 pinned, identical outputs):
@@ -266,13 +206,10 @@ def pinned_stream_parallelism(spark, n: int = 8, input_dirs=None):
     reverses for all of them: match executor count, because
     per-partition DATA, not store count, becomes the bill (the
     _run_join_replay economics note)."""
-    import os
-
     if input_dirs:
         session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         derived = -(-_dir_bytes(spark, *input_dirs) // _PIN_ADVISORY_BYTES)
         n = max(n, min(derived, session_n))
-    n = int(os.environ.get("SPARK_GRAFT_STREAM_PIN", n))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

@@ -36,10 +36,9 @@ def merge_rollup_batch(
     batch_id: int,
     table_path: str,
     keys: list[str],
-    bucket: str = "hour",
 ) -> None:
-    """One idempotent foreachBatch merge. foreachBatch is AT-LEAST-once
-    (a crash between the table publish and the checkpoint commit
+    """One idempotent foreachBatch merge of hourly partials. foreachBatch
+    is AT-LEAST-once (a crash between the table publish and the checkpoint commit
     redelivers the same batch id on restart), so the merge records the
     batch id in the published version's manifest — data and batch id
     commit in one symlink swap — and the shared ``claim_batch`` guard
@@ -50,9 +49,7 @@ def merge_rollup_batch(
     current = read_published(batch_df.sparkSession, table_path)
     if not claim_batch(table_path, current, batch_id):
         return  # redelivered batch: already merged and published
-    inc = rollup_increment(
-        batch_df, F.col("ts"), F.col("value"), keys, bucket
-    )
+    inc = rollup_increment(batch_df, F.col("ts"), F.col("value"), keys)
     merged = inc if current is None else rollup_merge(current.df, inc)
     atomic_publish(merged, table_path, batch_id)
 
@@ -61,17 +58,13 @@ def start_rollup_stream(
     events: DataFrame,
     table_path: str,
     checkpoint: str,
-    keys: list[str] | None = None,
-    bucket: str = "hour",
 ):
-    """events stream (ts, value, *keys) → continuously-merged rollup
-    table at ``table_path``. Returns the StreamingQuery."""
-    keys = keys or ["event_type"]
-
+    """events stream (ts, value, event_type) → continuously-merged hourly
+    rollup table at ``table_path``. Returns the StreamingQuery."""
     return (
         events.writeStream.foreachBatch(
             lambda batch_df, batch_id: merge_rollup_batch(
-                batch_df, batch_id, table_path, keys, bucket
+                batch_df, batch_id, table_path, ["event_type"]
             )
         )
         .option("checkpointLocation", checkpoint)

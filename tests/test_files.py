@@ -1,67 +1,7 @@
-"""Schema-enforced CSV / JSONL sources: FAILFAST vs corrupt-column."""
+"""File-format sources: compaction, schema evolution, incremental
+manifests and parquet footer introspection."""
 
 from __future__ import annotations
-
-import pytest
-
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-from mbta_etl_spark.sources.files import CORRUPT_COL, read_csv, read_jsonl
-
-SCHEMA = StructType(
-    [
-        StructField("id", LongType()),
-        StructField("name", StringType()),
-        StructField("score", DoubleType()),
-    ]
-)
-
-
-def test_read_csv_clean(spark, tmp_path):
-    p = tmp_path / "ok.csv"
-    p.write_text("id,name,score\n1,alpha,0.5\n2,beta,1.5\n")
-    rows = read_csv(spark, str(p), SCHEMA).collect()
-    assert {(r["id"], r["name"], r["score"]) for r in rows} == {
-        (1, "alpha", 0.5),
-        (2, "beta", 1.5),
-    }
-
-
-def test_read_csv_failfast_on_bad_row(spark, tmp_path):
-    p = tmp_path / "bad.csv"
-    p.write_text("id,name,score\n1,alpha,0.5\nnot_a_number,beta,oops\n")
-    with pytest.raises(Exception):
-        read_csv(spark, str(p), SCHEMA).collect()
-
-
-def test_read_csv_permissive_quarantines(spark, tmp_path):
-    p = tmp_path / "bad.csv"
-    p.write_text("id,name,score\n1,alpha,0.5\nnot_a_number,beta,oops\n")
-    df = read_csv(spark, str(p), SCHEMA, permissive_with_corrupt_column=True)
-    rows = df.collect()
-    assert len(rows) == 2
-    bad = [r for r in rows if r[CORRUPT_COL] is not None]
-    assert len(bad) == 1 and "not_a_number" in bad[0][CORRUPT_COL]
-
-
-def test_read_jsonl_clean_and_corrupt(spark, tmp_path):
-    p = tmp_path / "rows.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "alpha", "score": 0.5}\n'
-        "this is not json\n"
-    )
-    df = read_jsonl(spark, str(p), SCHEMA, permissive_with_corrupt_column=True)
-    rows = df.collect()
-    good = [r for r in rows if r[CORRUPT_COL] is None]
-    bad = [r for r in rows if r[CORRUPT_COL] is not None]
-    assert [(r["id"], r["name"]) for r in good] == [(1, "alpha")]
-    assert len(bad) == 1
 
 
 def test_compact_files_reduces_and_range_partitions(spark, tmp_path):

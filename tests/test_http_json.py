@@ -204,6 +204,22 @@ def test_batch_default_schema_is_vehicle_envelope(spark, tmp_path):
     assert out["v2"]["occupancy_status"] == "UNKNOWN"  # ''->UNKNOWN (T5)
 
 
+def test_batch_replaces_lone_surrogate_escape(spark, tmp_path):
+    """The registered source's reader maps a lone surrogate escape to
+    U+FFFD, as Go's decoder does, instead of failing the task on a
+    surrogate code point; a valid pair still decodes to one character."""
+    register_http_json(spark)
+    p = tmp_path / "surrogates.json"
+    p.write_text(json.dumps({"data": [
+        {"id": "s", "attributes": {"label": "\ud800"}},
+        {"id": "p", "attributes": {"label": "\U0001F600"}},
+    ]}))
+    assert "\\ud800" in p.read_text() and "\\ud83d\\ude00" in p.read_text()
+    raw = spark.read.format("http_json").option("url", f"file://{p}").load()
+    labels = {r.id: r.attributes.label for r in raw.collect()}
+    assert labels == {"s": "\ufffd", "p": "\U0001F600"}
+
+
 def test_null_data_element_decodes_to_all_null_row(spark, tmp_path):
     """Go json.Unmarshal parity: a null element in data[] becomes a
     zero-value (all-null) row, not an engine conversion crash."""

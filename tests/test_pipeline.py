@@ -373,6 +373,20 @@ def test_run_coerces_json_numbers_and_drops_null_element(spark, tmp_path):
     assert rows["b"]["bearing"] == 180
 
 
+def test_run_replaces_lone_surrogate_escape(spark, tmp_path):
+    """A lone surrogate escape (``"\\ud800"``) decodes to U+FFFD, as
+    Go's decoder substitutes it, and a valid pair (``"\\ud83d\\ude00"``)
+    still decodes to one character."""
+    from mbta_etl_spark.pipeline import etl
+
+    path = str(tmp_path / "vehicles")
+    body = _payload_with({"s": {"label": "\ud800"}, "p": {"label": "\U0001F600"}})
+    assert '"\\ud800"' in body and '"\\ud83d\\ude00"' in body
+    assert etl.run(spark, path, body=body) == 2
+    labels = {r["id"]: r["label"] for r in spark.read.parquet(path).collect()}
+    assert labels == {"s": "\ufffd", "p": "\U0001F600"}
+
+
 _NON_FINITE = ["NaN", "Infinity", "-Infinity", "1E400", "-1e400", "9" * 400]
 
 

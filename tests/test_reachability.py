@@ -1,29 +1,41 @@
-"""Reachability guard: every top-level function and class in the package
-must be reachable, by name, from a product root.
+"""Reachability guards over the package's top-level definitions.
 
-Roots: the CLI (``mbta_etl_spark/cli.py``), the batch pipeline
-(``pipeline/etl.py``), the registry (``queries()`` / ``oracle_sql()``,
-whose oracle tables name every entry), ``bench.py``,
-``__spark_entry__.py``, ``scripts/`` and ``perfbench/`` (its tests
-aside). A definition is reached when its name appears as an identifier in
-the source of a root or of a reached definition. Module-level statements
-that define nothing (imports, the registry's ``_ORACLES[...] = ...``
-rows) are root source of their module. ``__init__`` re-exports and
-``tests/`` are not callers. The walk is name-level, so two definitions
-sharing a name reach each other; it parses source only and starts no
-Spark session.
+Definitions: every top-level function and class in the package must be
+reachable, by name, from a product root. Roots: the CLI
+(``mbta_etl_spark/cli.py``), the batch pipeline (``pipeline/etl.py``),
+the registry (``queries()`` / ``oracle_sql()``, whose oracle tables name
+every entry), ``bench.py``, ``__spark_entry__.py``, ``scripts/`` and
+``perfbench/`` (its tests aside). A definition is reached when its name
+appears as an identifier in the code of a root or of a reached
+definition: a name, an attribute, an imported name or its alias, or a
+string constant that is an identifier (the registry's ``_ORACLES`` keys
+name their builders). Docstrings and comments are not code and reach
+nothing. Module-level statements that define nothing (imports, the
+registry's ``_ORACLES[...] = ...`` rows) are root code of their module.
+``__init__`` re-exports and ``tests/`` are not callers. The walk is
+name-level, so two definitions sharing a name reach each other.
+
+Parameters: every optional parameter of a top-level package function
+must be passed, by keyword or position, by some call in the package,
+the other product roots or ``tests/``. A parameter no call passes has
+one value in use: fold its default into the body. Calls match by name
+as the walk does (``f(...)`` and ``mod.f(...)``), ``from m import f as
+g`` aliases resolve to ``f``, and a call with ``*args`` or ``**kwargs``
+counts as passing every parameter.
+
+Both guards parse source only and start no Spark session.
 """
 
 from __future__ import annotations
 
 import ast
-import re
+from collections.abc import Iterator
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "mbta_etl_spark"
-IDENT = re.compile(r"[A-Za-z_]\w*")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 ROOT_MODULES = {"cli.py", "pipeline/etl.py"}
 ROOT_NAMES = {"queries", "oracle_sql"}
@@ -36,9 +48,46 @@ ALLOWED = {
 }
 
 
-def _identifiers(lines: list[str], node: ast.stmt) -> set[str]:
-    first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
-    return set(IDENT.findall("\n".join(lines[first - 1 : node.end_lineno])))
+def _package_modules() -> Iterator[tuple[str, str, ast.Module]]:
+    """(path relative to the package, dotted module name, parsed tree)
+    for every package module but the ``__init__`` re-exports."""
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        rel = path.relative_to(PKG).as_posix()
+        module = "mbta_etl_spark." + rel[: -len(".py")].replace("/", ".")
+        yield rel, module, ast.parse(path.read_text())
+
+
+def _root_scripts() -> list[Path]:
+    scripts = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    scripts += sorted((REPO / "scripts").glob("*.py"))
+    scripts += [p for p in sorted((REPO / "perfbench").glob("*.py"))
+                if not p.name.startswith("test_")]
+    return scripts
+
+
+def _identifiers(node: ast.AST) -> set[str]:
+    """The identifiers ``node``'s code uses. A string statement (a
+    docstring) is not code, so its text reaches nothing."""
+    docstrings = {
+        id(n.value) for n in ast.walk(node)
+        if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+    }
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+            if n.asname:
+                out.add(n.asname)
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier() and id(n) not in docstrings):
+            out.add(n.value)
+    return out
 
 
 def _defined_names(node: ast.stmt) -> list[str]:
@@ -56,15 +105,9 @@ def unreachable_definitions() -> list[str]:
     that no product root reaches."""
     defs: dict[str, list[tuple[str, bool, set[str]]]] = {}
     roots = set(ROOT_NAMES)
-    for path in sorted(PKG.rglob("*.py")):
-        if path.name == "__init__.py":
-            continue
-        rel = path.relative_to(PKG).as_posix()
-        module = "mbta_etl_spark." + rel[: -len(".py")].replace("/", ".")
-        text = path.read_text()
-        lines = text.splitlines()
-        for node in ast.parse(text).body:
-            idents = _identifiers(lines, node)
+    for rel, module, tree in _package_modules():
+        for node in tree.body:
+            idents = _identifiers(node)
             names = _defined_names(node)
             if not names or rel in ROOT_MODULES:
                 roots |= idents
@@ -72,12 +115,8 @@ def unreachable_definitions() -> list[str]:
                 defs.setdefault(name, []).append(
                     (f"{module}.{name}", isinstance(node, DEFS), idents)
                 )
-    scripts = [REPO / "bench.py", REPO / "__spark_entry__.py"]
-    scripts += sorted((REPO / "scripts").glob("*.py"))
-    scripts += [p for p in sorted((REPO / "perfbench").glob("*.py"))
-                if not p.name.startswith("test_")]
-    for path in scripts:
-        roots |= set(IDENT.findall(path.read_text()))
+    for path in _root_scripts():
+        roots |= _identifiers(ast.parse(path.read_text()))
 
     reached: set[str] = set()
     todo = [n for n in roots if n in defs]
@@ -95,6 +134,59 @@ def unreachable_definitions() -> list[str]:
     )
 
 
+def unpassed_parameters() -> list[str]:
+    """``module.function.parameter`` for every optional parameter of a
+    top-level package function that no call passes."""
+    optional: dict[str, list[tuple[str, list[str], list[str]]]] = {}
+    for _, module, tree in _package_modules():
+        for node in tree.body:
+            if not isinstance(node, FUNCS):
+                continue
+            a = node.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            names = positional[len(positional) - len(a.defaults):]
+            names += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                      if d is not None]
+            if names:
+                optional.setdefault(node.name, []).append(
+                    (f"{module}.{node.name}", positional, names)
+                )
+
+    callers = sorted(PKG.rglob("*.py")) + _root_scripts()
+    callers += sorted((REPO / "tests").glob("*.py"))
+    callers += sorted((REPO / "perfbench").glob("test_*.py"))
+    passed: dict[str, set[str]] = {}
+    every: set[str] = set()
+    for path in callers:
+        tree = ast.parse(path.read_text())
+        aliases = {
+            a.asname: a.name for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom) for a in n.names if a.asname
+        }
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            name = aliases.get(name, name)
+            if name not in optional:
+                continue
+            if any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                every.add(name)
+            got = passed.setdefault(name, set())
+            got.update(k.arg for k in call.keywords)
+            for _, positional, _ in optional[name]:
+                got.update(positional[: len(call.args)])
+    return sorted(
+        f"{qualname}.{p}"
+        for name, entries in optional.items() if name not in every
+        for qualname, _, names in entries
+        for p in names if p not in passed.get(name, set())
+    )
+
+
 def test_every_package_definition_is_reachable_from_a_product_root():
     dead = set(unreachable_definitions())
     assert not dead - ALLOWED, (
@@ -103,4 +195,12 @@ def test_every_package_definition_is_reachable_from_a_product_root():
     )
     assert not ALLOWED - dead, (
         f"allow-list entries now reached or gone: {sorted(ALLOWED - dead)}"
+    )
+
+
+def test_every_optional_parameter_is_passed_by_some_call():
+    unpassed = unpassed_parameters()
+    assert not unpassed, (
+        "optional parameters no call passes (fold the default into the "
+        f"body, or give the parameter a caller): {unpassed}"
     )

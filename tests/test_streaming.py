@@ -167,58 +167,6 @@ def test_stream_static_enrichment(spark, tmp_path):
     assert got == {1: 1.0, 2: 0.1, 3: None}  # left join keeps unmatched
 
 
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Clicks attribute to impressions with the same user within 10
-    minutes; a later click stays unmatched (state stays bounded by the
-    interval + watermark, checked implicitly by the join completing)."""
-    from mbta_etl_spark.streaming.ingest import interval_join_streams
-
-    imp_dir = tmp_path / "impressions"
-    clk_dir = tmp_path / "clicks"
-    imp_dir.mkdir()
-    clk_dir.mkdir()
-    with open(imp_dir / "i.jsonl", "w") as f:
-        f.write(json.dumps({"imp_id": 1, "imp_user": 7,
-                            "imp_ts": "2024-01-15T10:00:00"}) + "\n")
-        f.write(json.dumps({"imp_id": 2, "imp_user": 8,
-                            "imp_ts": "2024-01-15T10:00:00"}) + "\n")
-    with open(clk_dir / "c.jsonl", "w") as f:
-        # in-window click for user 7; out-of-window click for user 8
-        f.write(json.dumps({"click_id": 10, "click_user": 7,
-                            "click_ts": "2024-01-15T10:05:00"}) + "\n")
-        f.write(json.dumps({"click_id": 11, "click_user": 8,
-                            "click_ts": "2024-01-15T10:30:00"}) + "\n")
-    imp_schema = StructType(
-        [
-            StructField("imp_id", LongType()),
-            StructField("imp_user", LongType()),
-            StructField("imp_ts", TimestampType()),
-        ]
-    )
-    clk_schema = StructType(
-        [
-            StructField("click_id", LongType()),
-            StructField("click_user", LongType()),
-            StructField("click_ts", TimestampType()),
-        ]
-    )
-    imps = spark.readStream.schema(imp_schema).json(str(imp_dir))
-    clks = spark.readStream.schema(clk_schema).json(str(clk_dir))
-    joined = interval_join_streams(
-        imps, clks, "imp_user", "click_user", "imp_ts", "click_ts"
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attrib_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_query(q)
-    rows = spark.sql("SELECT imp_id, click_id FROM attrib_sink").collect()
-    assert {(r["imp_id"], r["click_id"]) for r in rows} == {(1, 10)}
-
-
 def test_streaming_dedup_state_survives_restart(spark, tmp_path):
     """Stateful recovery: the dedup state store is rebuilt from the
     checkpoint across a FULL query restart — a key first seen before
@@ -286,45 +234,6 @@ def test_streaming_dedup_state_survives_restart(spark, tmp_path):
         for r in spark.read.parquet(sink).collect()
     }
     assert got == {1: 1.0, 2: 2.0, 3: 3.0}  # key 1's redelivery dropped
-
-
-def test_constant_utc_offset_guard():
-    """The watermarked replay entries assume the session zone's
-    NTZ->LTZ cast is a UNIFORM shift over the data span; a zone with a
-    DST transition inside the span must raise loudly instead of
-    letting the streamed result silently diverge from the NTZ oracle.
-    Transition-free spans and fixed-offset names pass."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from mbta_etl_spark.streaming.replay import assert_constant_utc_offset
-
-    mn = dt.datetime(2024, 1, 1, 0, 0, 7)
-    mx = dt.datetime(2024, 1, 30, 23, 57, 12)
-    # no January transition in these
-    assert_constant_utc_offset("UTC", mn, mx)
-    assert_constant_utc_offset("America/New_York", mn, mx)
-    assert_constant_utc_offset("+05:30", mn, mx)
-    assert_constant_utc_offset("GMT+8", mn, mx)
-    # a spring-forward span is caught (NY jumps -05:00 -> -04:00 on
-    # 2024-03-10), as is a southern-hemisphere DST end (Santiago
-    # leaves -03:00 on 2024-04-07)
-    with _pytest.raises(ValueError, match="changes UTC offset"):
-        assert_constant_utc_offset(
-            "America/New_York",
-            dt.datetime(2024, 3, 1), dt.datetime(2024, 3, 31),
-        )
-    with _pytest.raises(ValueError, match="changes UTC offset"):
-        assert_constant_utc_offset(
-            "America/Santiago",
-            dt.datetime(2024, 4, 1), dt.datetime(2024, 4, 30),
-        )
-    # a malformed (empty) zone name must fail loudly, not slip through
-    # the fixed-offset fast path ('' is a substring of "+-", so the old
-    # `name[:1] in "+-"` test was vacuously True for it)
-    with _pytest.raises(Exception):
-        assert_constant_utc_offset("", mn, mx)
 
 
 def test_session_window_late_batch_fragments_and_drops(spark, tmp_path):
@@ -746,7 +655,7 @@ def test_stream_sessions_wall_time_across_dst(spark, tmp_path):
              dt.datetime(2024, 3, 10, 3, 50), 2, 12.0),
         }
 
-        keyed = time_quantile_key(ev, "ts", 2, require_uniform_shift=False)
+        keyed = time_quantile_key(ev, "ts", 2)
         sentinel = spark.range(1).select(
             F.lit(-1).cast("long").alias("user_id"),
             F.lit("2099-01-01 00:00:00").cast("timestamp_ntz").alias("ts"),
@@ -952,7 +861,6 @@ def test_dir_bytes_reads_uri_paths(spark, tmp_path, monkeypatch):
     assert replay._dir_bytes(spark, str(tmp_path / "a"), uri + "/b") == 1300
     assert replay._dir_bytes(spark, uri + "/missing") == 0
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PIN", raising=False)
     monkeypatch.setattr(replay, "_PIN_ADVISORY_BYTES", 100)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "64")
