@@ -16,7 +16,6 @@ from mbta_etl_spark.functions.vector import (
     dot,
     norm,
     norm_pandas_udf,
-    unit,
 )
 
 __all__ = [
@@ -27,5 +26,4 @@ __all__ = [
     "norm_pandas_udf",
     "regex_tokens",
     "token_count_bpe",
-    "unit",
 ]

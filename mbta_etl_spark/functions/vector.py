@@ -2,7 +2,7 @@
 
 Two tiers, matching the engine's two execution paths:
 
-- Column builders (``dot``/``norm``/``cosine``/``unit``): pure JVM
+- Column builders (``dot``/``norm``/``cosine``): pure JVM
   higher-order functions — right for one-off scores inside a larger
   codegen'd projection, and for oracle parity (ordered left-to-right
   fold, same as the DuckDB ``list_sum(list_transform(...))`` form).
@@ -40,12 +40,6 @@ def norm(vec: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity (unrounded; round at the query boundary)."""
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def unit(vec: Column) -> Column:
-    """vec / |vec|."""
-    n = norm(vec)
-    return F.transform(_dbl(vec), lambda x: x / n)
 
 
 def median_agg_pandas_udf():

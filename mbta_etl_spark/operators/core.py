@@ -190,6 +190,10 @@ def threshold_split(df: DataFrame, measure: Column, threshold: float) -> DataFra
 # (reference pipeline/queries.go:138-156): element at 0-index ⌊n*k/d⌋ of the
 # ascending sort of the filtered measure.
 # ---------------------------------------------------------------------------
+# (label, num, den): the label's 0-index is (n * num) div den
+PERCENTILE_OFFSETS = (("p50", 1, 2), ("p90", 9, 10), ("p95", 95, 100))
+
+
 def discrete_percentiles(df: DataFrame, measure: Column) -> DataFrame:
     """Exact discrete percentiles with the reference's integer-division
     offsets (p50 → OFFSET n/2, p90 → n*9/10, p95 → n*95/100).
@@ -206,8 +210,6 @@ def discrete_percentiles(df: DataFrame, measure: Column) -> DataFrame:
     path. Empty input → empty result (reference emits nothing when
     movingVehicles == 0, queries.go:152-156).
     """
-    from pyspark.sql import Window
-
     vals = df.select(measure.alias("value"))
     ranked = vals.select(
         "value",
@@ -218,7 +220,7 @@ def discrete_percentiles(df: DataFrame, measure: Column) -> DataFrame:
         F.when(
             F.col("_rn") == F.expr(f"(_n * {num}) div {den} + 1"), F.lit(label)
         )
-        for label, num, den in (("p50", 1, 2), ("p90", 9, 10), ("p95", 95, 100))
+        for label, num, den in PERCENTILE_OFFSETS
     ]
     return (
         ranked.select(F.array_compact(F.array(*arms)).alias("_m"), "value")
@@ -261,8 +263,8 @@ def between_filter(df: DataFrame, col: Column, target: float, delta: float) -> D
 # Q11 — 8-bucket cardinal-direction histogram with zero-filled buckets
 # (reference pipeline/queries.go:224-276). The reference fetches the whole
 # bearing column and buckets in a Go loop; we push the bucketing into the
-# engine (when-chain + groupBy) and materialize empty buckets by
-# right-joining a literal 8-row bucket table.
+# engine as one conditional count per bucket, so an empty bucket is a 0
+# count rather than a missing group.
 # ---------------------------------------------------------------------------
 CARDINAL_DIRS = ("North", "Northeast", "East", "Southeast", "South", "Southwest", "West", "Northwest")
 
@@ -284,38 +286,33 @@ def cardinal_direction(bearing: Column) -> Column:
 
 
 def cardinal_histogram(df: DataFrame, bearing: Column) -> DataFrame:
-    """groupBy-count over the derived direction, then outer-join the
-    literal 8-row direction table so zero-count buckets still appear
-    (reference pre-initializes all buckets to 0, queries.go:240-242).
+    """One ``(direction, cnt)`` row per bucket of :func:`cardinal_direction`,
+    ordered by direction, zero-count buckets included (the reference
+    pre-initializes all buckets to 0, queries.go:240-242).
 
-    Join direction matters: for a LEFT outer join Spark can only broadcast
-    the RIGHT side, so we put the literal table on the left and broadcast
-    the aggregated counts (≤8 rows after the scan-side agg) — the scan
-    stays fully distributed, the join is a hash probe over 8 rows."""
-    spark = df.sparkSession
-    counted = (
-        df.select(cardinal_direction(bearing).alias("direction"))
-        .groupBy("direction")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    One global aggregate of 8 conditional counts, ``stack``ed into rows:
+    the scan-side partial aggregate shuffles one 8-count row per
+    partition, and an empty bucket counts 0 without a join to a literal
+    bucket table. The aggregate's output is one partition, so ordering
+    its 8 rows plans no exchange either."""
+    counts = df.select(cardinal_direction(bearing).alias("_d")).agg(
+        *[F.count(F.when(F.col("_d") == d, 1)).alias(d) for d in CARDINAL_DIRS]
     )
-    # Literal table built JVM-side (explode of an array literal):
-    # createDataFrame(py_list) would become a Python-RDD scan and pay
-    # Python-worker startup on every execution.
-    dirs = spark.range(1).select(
-        F.explode(F.array(*[F.lit(d) for d in CARDINAL_DIRS])).alias("direction")
-    )
-    return (
-        dirs.join(F.broadcast(counted), "direction", "left")
-        .select("direction", F.coalesce("cnt", F.lit(0)).alias("cnt"))
-        .orderBy("direction")
-    )
+    pairs = [c for d in CARDINAL_DIRS for c in (F.lit(d), F.col(d))]
+    return counts.select(
+        F.stack(F.lit(len(CARDINAL_DIRS)), *pairs).alias("direction", "cnt")
+    ).orderBy("direction")
 
 
 # ---------------------------------------------------------------------------
 # Q12 — COUNT(*) (reference pipeline/queries.go:281-285)
 # ---------------------------------------------------------------------------
 def count_rows(df: DataFrame) -> DataFrame:
-    """Parquet footer row-count metadata makes this a metadata-only scan."""
+    """Not a metadata-only count: the plan is a scan with an empty read
+    schema (``ReadSchema: struct<>``), so each task opens its files and
+    decodes no column, a partial count per task, and one exchange of
+    those counts to the final one (none when the input is one
+    partition)."""
     return df.agg(F.count(F.lit(1)).alias("n"))
 
 

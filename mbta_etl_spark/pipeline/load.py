@@ -194,15 +194,29 @@ def claim_batch(
     return True
 
 
-def _fits_one_partition(spark: SparkSession, batch: DataFrame, rows: int) -> bool:
-    """Whether the merge input is small enough for one task: no larger
-    than the session's broadcast threshold (``autoBroadcastJoinThreshold``,
-    -1 turns this off). Estimated without a job in Spark's in-memory row
-    size: the stored ``rows`` times the row width, plus the batch plan's
-    size statistic (a source with no size reports Long.MaxValue)."""
+def fits_one_task(spark: SparkSession, size: int) -> bool:
+    """Whether an input estimated at ``size`` bytes of Spark's in-memory
+    rows is small enough to run in one task: no larger than the
+    session's broadcast threshold (``autoBroadcastJoinThreshold``, -1
+    turns this off). The merge and the CLI queries share this rule."""
     limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    budget = limit - batch._jdf.queryExecution().analyzed().stats().sizeInBytes()
-    return rows * batch._jdf.schema().defaultSize() <= budget
+    return size <= limit
+
+
+def plan_size(df: DataFrame) -> int:
+    """The size statistic of ``df``'s analyzed plan, computed without a
+    job: a file scan reports its files' bytes, a source with no size
+    Long.MaxValue."""
+    return df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+
+
+def _fits_one_partition(spark: SparkSession, batch: DataFrame, rows: int) -> bool:
+    """Whether the merge input fits one task (:func:`fits_one_task`):
+    the stored ``rows`` times the row width, plus the batch plan's size
+    statistic."""
+    return fits_one_task(
+        spark, rows * batch._jdf.schema().defaultSize() + plan_size(batch)
+    )
 
 
 def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:

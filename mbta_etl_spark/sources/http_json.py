@@ -68,6 +68,7 @@ import time
 from typing import Any, Callable, Iterator, Sequence, Tuple
 from urllib.request import urlopen
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.json as pa_json
@@ -253,10 +254,10 @@ def _arrow_envelope(body: str) -> pa.Table | None:
     documents), and a non-finite double (an integer literal past the
     double range reads as inf). Arrow itself refuses integral floats in
     int columns, duplicate keys and ``1E400``."""
-    if body.startswith("\ufeff") or "NaN" in body or "Inf" in body:
-        return None
     try:
         raw = body.encode()
+        if body.startswith("\ufeff") or _has_nonfinite_token(raw):
+            return None
         doc = pa_json.read_json(
             pa.BufferReader(raw),
             read_options=pa_json.ReadOptions(use_threads=False, block_size=len(raw) + 1),
@@ -270,6 +271,25 @@ def _arrow_envelope(body: str) -> pa.Table | None:
     items = data.combine_chunks().flatten()  # the data[] structs
     table = pa.Table.from_arrays(items.flatten(), schema=_RAW_ARROW_SCHEMA)
     return table if _finite(table.columns) else None
+
+
+# "Na" and "In", the first two bytes of the NaN and Inf tokens, as words
+_NA, _IN = np.frombuffer(b"NaIn", "<u2")
+
+
+def _has_nonfinite_token(raw: bytes) -> bool:
+    """Whether the UTF-8 ``raw`` holds ``NaN`` or ``Inf`` (``Infinity``
+    included) anywhere. Most bodies hold neither token's first two
+    bytes, which two vectorized passes over ``raw`` as 16-bit words (at
+    even and at odd offsets) rule out; only a body that has them pays
+    the exact substring scans."""
+    if len(raw) < 3:
+        return False
+    for start in (0, 1):
+        words = np.frombuffer(raw, "<u2", count=(len(raw) - start) // 2, offset=start)
+        if ((words == _NA) | (words == _IN)).any():
+            return b"NaN" in raw or b"Inf" in raw
+    return False
 
 
 def _finite(columns) -> bool:

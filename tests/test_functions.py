@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
 from mbta_etl_spark.functions import (
@@ -13,7 +11,6 @@ from mbta_etl_spark.functions import (
     norm,
     norm_pandas_udf,
     token_count_bpe,
-    unit,
 )
 
 
@@ -39,12 +36,6 @@ def test_dot_norm_cosine(spark):
     assert rows[1]["d"] == 24.0 and rows[1]["n"] == 5.0
     assert abs(rows[1]["c"] - 24.0 / 25.0) < 1e-12
     assert rows[2]["d"] == 0.0 and rows[2]["c"] == 0.0
-
-
-def test_unit_normalizes(spark):
-    r = _vec_df(spark).select(unit(F.col("a")).alias("u")).collect()
-    for row in r:
-        assert abs(math.fsum(x * x for x in row["u"]) - 1.0) < 1e-12
 
 
 def test_norm_pandas_udf_matches_jvm(spark):

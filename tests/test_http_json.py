@@ -645,6 +645,24 @@ def test_parse_payload_falls_back_where_arrow_differs(body):
     _assert_same_decision(body)
 
 
+def test_nonfinite_token_detector_matches_substring_scans():
+    """Hypothesis: the vectorized detector answers as the two substring
+    scans it replaces, over text dense in the tokens' letters, at every
+    length and byte offset, multi-byte characters included."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from mbta_etl_spark.sources.http_json import _has_nonfinite_token
+
+    @settings(max_examples=500, deadline=None)
+    @given(st.text(alphabet="NaIinf é\"", max_size=24))
+    def run(text):
+        want = "NaN" in text or "Inf" in text
+        assert _has_nonfinite_token(text.encode()) == want
+
+    run()
+
+
 def test_parse_payload_reads_clean_bodies_with_arrow():
     """A pretty-printed body with unknown and nested keys, a null element,
     missing attributes and non-ASCII text is decoded by Arrow, to the

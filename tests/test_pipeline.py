@@ -447,19 +447,24 @@ def test_run_keeps_last_in_batch_duplicate(spark, tmp_path, n):
         assert [r["speed"] for r in rows] == [3.0]
 
 
-def _run_jobs(spark, group, path, body):
-    """(records loaded, Spark jobs run) for one ``etl.run`` pass."""
-    from mbta_etl_spark.pipeline import etl
-
+def _jobs(spark, group, thunk):
+    """(what ``thunk()`` returns, Spark jobs it ran)."""
     sc = spark.sparkContext
-    sc.setJobGroup(group, "one etl.run pass")
+    sc.setJobGroup(group, group)
     try:
-        n = etl.run(spark, path, body=body)
+        out = thunk()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return n, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _run_jobs(spark, group, path, body):
+    """(records loaded, Spark jobs run) for one ``etl.run`` pass."""
+    from mbta_etl_spark.pipeline import etl
+
+    return _jobs(spark, group, lambda: etl.run(spark, path, body=body))
 
 
 def test_run_over_stored_table_runs_one_job(spark, tmp_path):
@@ -540,6 +545,53 @@ def test_ingest_arrow_rows_match_row_conversion(spark, body, expect):
 
 
 # --- vehicle queries ------------------------------------------------------
+
+_QUERIES = {
+    "top10": vq.top10_fastest,
+    "routes": vq.route_breakdown,
+    "stats": vq.summary_stats,
+    "bearing": lambda v: vq.vehicles_by_bearing(v, 180.0, 45.0),
+    "bearing_summary": vq.bearing_summary,
+    "count": vq.count_vehicles,
+    "speed": lambda v: vq.vehicle_speed(v, "R-7"),
+}
+
+
+def test_vehicle_queries_run_one_job_over_a_small_table(spark, tmp_path):
+    """Over a small published table each CLI query is one Spark job: its
+    input fits one task, so it is coalesced into one partition and no
+    exchange, broadcast or range-partition sample runs. With the size
+    rule off (a broadcast threshold of -1) the plan keeps its exchange,
+    and every query answers the same, rows and order, either way."""
+    from mbta_etl_spark.pipeline.load import read_published
+
+    path = str(tmp_path / "vehicles")
+    rows = [
+        _vehicle(i, speed=(i * 3) % 11, bearing=(i * 37) % 361,
+                 vid=f"{'ROGBy'[i % 5]}-{i}", direction=i % 2)
+        for i in range(40)
+    ]
+    upsert_parquet(spark, _vehicles_df(spark, rows), path)
+    vehicles = read_published(spark, path).df
+    one_task = {}
+    for name, query in _QUERIES.items():
+        one_task[name], jobs = _jobs(
+            spark, f"{name}-{tmp_path.name}", lambda q=query: q(vehicles).collect()
+        )
+        assert jobs == 1, name
+    assert one_task["count"][0]["n"] == 40
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = vq.route_breakdown(vehicles)._jdf.queryExecution().executedPlan()
+        assert "Exchange" in plan.toString()
+        for name, query in _QUERIES.items():
+            assert query(vehicles).collect() == one_task[name], name
+    finally:
+        spark.conf.set(key, saved)
+
 
 def test_top10_fastest(spark):
     """15 rows speeds 0..70 step 5 → 10 results sorted desc, max 70
@@ -627,7 +679,9 @@ def test_bearing_summary_buckets(spark):
     (queries.go:224-276, FIXTURES bearing set)."""
     bearings = [0, 5, 22, 23, 337, 338, 355, 359, 360, 90, 180]
     rows = [_vehicle(i, bearing=b, vid=f"c{i}") for i, b in enumerate(bearings)]
-    out = {r["direction"]: r["cnt"] for r in vq.bearing_summary(_vehicles_df(spark, rows)).collect()}
+    got = vq.bearing_summary(_vehicles_df(spark, rows)).collect()
+    assert [r["direction"] for r in got] == sorted(core.CARDINAL_DIRS)
+    out = {r["direction"]: r["cnt"] for r in got}
     assert len(out) == 8  # all buckets materialized
     # North: 0,5,22,338,355,359,360 (>=337.5 or <22.5, plus 360 fallback)
     assert out["North"] == 7

@@ -5,6 +5,7 @@ strengthened)."""
 
 from __future__ import annotations
 
+import datetime
 import math
 
 from hypothesis import HealthCheck, given, settings
@@ -13,6 +14,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mbta_etl_spark.operators import core
+from mbta_etl_spark.pipeline import vehicle_queries as vq
+from mbta_etl_spark.pipeline.schema import VEHICLE_SCHEMA
 
 _settings = settings(
     max_examples=12,  # each example runs Spark jobs — keep the budget sane
@@ -60,6 +63,22 @@ def test_discrete_percentiles_match_offset_arithmetic(spark, values):
     assert out["p50"] == s[n // 2]
     assert out["p90"] == s[(n * 9) // 10]
     assert out["p95"] == s[(n * 95) // 100]
+
+
+@given(st.lists(st.one_of(st.just(0.0), st.floats(0.01, 1e3)), min_size=1, max_size=60))
+@_settings
+def test_summary_stats_percentiles_match_offset_arithmetic(spark, speeds):
+    """summary_stats' p-columns are the moving speeds' discrete
+    percentiles: stationary vehicles take no rank."""
+    now = datetime.datetime(2024, 1, 15, 12, 0, 0)
+    rows = [
+        (f"v{i}", "l", 42.0, -71.0, s, 0, "STOPPED_AT", "UNKNOWN", 0, now, now)
+        for i, s in enumerate(speeds)
+    ]
+    row = vq.summary_stats(spark.createDataFrame(rows, VEHICLE_SCHEMA)).first()
+    s = sorted(v for v in speeds if v > 0)
+    for label, num, den in core.PERCENTILE_OFFSETS:
+        assert row[label] == (s[len(s) * num // den] if s else None), label
 
 
 @given(

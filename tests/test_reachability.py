@@ -7,13 +7,17 @@ the registry (``queries()`` / ``oracle_sql()``, whose oracle tables name
 every entry), ``bench.py``, ``__spark_entry__.py``, ``scripts/`` and
 ``perfbench/`` (its tests aside). A definition is reached when its name
 appears as an identifier in the code of a root or of a reached
-definition: a name, an attribute, an imported name or its alias, or a
-string constant that is an identifier (the registry's ``_ORACLES`` keys
-name their builders). Docstrings and comments are not code and reach
-nothing. Module-level statements that define nothing (imports, the
-registry's ``_ORACLES[...] = ...`` rows) are root code of their module.
-``__init__`` re-exports and ``tests/`` are not callers. The walk is
-name-level, so two definitions sharing a name reach each other.
+definition: a name, an attribute, an imported name or its alias, or,
+within the definition's own module, a string constant that is an
+identifier (the registry's ``_ORACLES`` keys name their builders, which
+``queries()`` looks up in its module). The walk is scope-aware: inside a
+function, lambda or comprehension, a name it binds itself (a parameter,
+a nested ``def``, an assignment) is not the top-level definition of that
+name. Docstrings and comments are not code and reach nothing.
+Module-level statements that define nothing (imports, the registry's
+``_ORACLES[...] = ...`` rows) are root code of their module.
+``__init__`` re-exports and ``tests/`` are not callers. Otherwise the
+walk is name-level, so two definitions sharing a name reach each other.
 
 Parameters: every optional parameter of a top-level package function
 must be passed, by keyword or position, by some call in the package,
@@ -36,6 +40,7 @@ REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "mbta_etl_spark"
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+COMPS = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
 
 ROOT_MODULES = {"cli.py", "pipeline/etl.py"}
 ROOT_NAMES = {"queries", "oracle_sql"}
@@ -67,17 +72,76 @@ def _root_scripts() -> list[Path]:
     return scripts
 
 
-def _identifiers(node: ast.AST) -> set[str]:
-    """The identifiers ``node``'s code uses. A string statement (a
-    docstring) is not code, so its text reaches nothing."""
+def _local_names(scope: ast.AST) -> set[str]:
+    """The names a function, lambda or comprehension binds in its own
+    scope: parameters, assignment and loop targets, ``as`` names, nested
+    ``def``/``class`` names and imports, less ``global``/``nonlocal``
+    declarations. Nested scopes' own bindings are not its bindings."""
+    if isinstance(scope, COMPS):
+        return {n.id for g in scope.generators for n in ast.walk(g.target)
+                if isinstance(n, ast.Name)}
+    a = scope.args
+    names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+    names |= {p.arg for p in (a.vararg, a.kwarg) if p is not None}
+    declared: set[str] = set()
+    todo = [scope.body] if isinstance(scope, ast.Lambda) else list(scope.body)
+    while todo:
+        n = todo.pop()
+        if isinstance(n, (ast.Global, ast.Nonlocal)):
+            declared.update(n.names)
+        elif isinstance(n, DEFS):
+            names.add(n.name)
+            continue
+        elif isinstance(n, (ast.Lambda, *COMPS)):
+            continue
+        elif isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load):
+            names.add(n.id)
+        elif isinstance(n, ast.ExceptHandler) and n.name:
+            names.add(n.name)
+        elif isinstance(n, ast.alias):
+            names.add(n.asname or n.name.split(".")[0])
+        todo.extend(ast.iter_child_nodes(n))
+    return names - declared
+
+
+def _identifiers(node: ast.AST, module: str | None) -> set[str]:
+    """The identifiers ``node``'s code uses. A string constant that is an
+    identifier names a definition of ``module`` (as ``globals()[name]``
+    does) and comes out qualified, ``module.name``; outside the package
+    (``module`` None) it names nothing. A string statement (a docstring)
+    is not code, so its text reaches nothing. A name that a function,
+    lambda or comprehension binds for itself is not a use of the
+    top-level definition of that name inside that scope; class bodies
+    bind nothing here."""
     docstrings = {
         id(n.value) for n in ast.walk(node)
         if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
     }
     out: set[str] = set()
-    for n in ast.walk(node):
+    todo: list[tuple[ast.AST, frozenset[str]]] = [(node, frozenset())]
+    while todo:
+        n, bound = todo.pop()
+        if isinstance(n, (*FUNCS, ast.Lambda, *COMPS)):
+            inner = bound | _local_names(n)
+            if isinstance(n, COMPS):
+                outer = [n.generators[0].iter]
+            else:
+                a = n.args
+                outer = [*a.defaults, *(d for d in a.kw_defaults if d is not None)]
+                if not isinstance(n, ast.Lambda):
+                    outer += [*n.decorator_list, n.returns] + [
+                        p.annotation
+                        for p in a.posonlyargs + a.args + a.kwonlyargs
+                        + [a.vararg, a.kwarg] if p is not None
+                    ]
+            todo += [(c, bound) for c in outer if c is not None]
+            skip = {id(c) for c in outer}
+            todo += [(c, inner) for c in ast.iter_child_nodes(n)
+                     if id(c) not in skip]
+            continue
         if isinstance(n, ast.Name):
-            out.add(n.id)
+            if n.id not in bound:
+                out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
@@ -85,8 +149,10 @@ def _identifiers(node: ast.AST) -> set[str]:
             if n.asname:
                 out.add(n.asname)
         elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
-              and n.value.isidentifier() and id(n) not in docstrings):
-            out.add(n.value)
+              and n.value.isidentifier() and id(n) not in docstrings
+              and module is not None):
+            out.add(f"{module}.{n.value}")
+        todo += [(c, bound) for c in ast.iter_child_nodes(n)]
     return out
 
 
@@ -107,16 +173,16 @@ def unreachable_definitions() -> list[str]:
     roots = set(ROOT_NAMES)
     for rel, module, tree in _package_modules():
         for node in tree.body:
-            idents = _identifiers(node)
+            idents = _identifiers(node, module)
             names = _defined_names(node)
             if not names or rel in ROOT_MODULES:
                 roots |= idents
             for name in names:
-                defs.setdefault(name, []).append(
-                    (f"{module}.{name}", isinstance(node, DEFS), idents)
-                )
+                entry = (f"{module}.{name}", isinstance(node, DEFS), idents)
+                defs.setdefault(name, []).append(entry)
+                defs[entry[0]] = [entry]
     for path in _root_scripts():
-        roots |= _identifiers(ast.parse(path.read_text()))
+        roots |= _identifiers(ast.parse(path.read_text()), None)
 
     reached: set[str] = set()
     todo = [n for n in roots if n in defs]
@@ -125,13 +191,14 @@ def unreachable_definitions() -> list[str]:
         if name in reached:
             continue
         reached.add(name)
-        for _, _, idents in defs[name]:
+        for qualname, _, idents in defs[name]:
+            reached.add(qualname)
             todo.extend(n for n in idents if n in defs and n not in reached)
-    return sorted(
+    return sorted({
         qualname
-        for name, entries in defs.items() if name not in reached
-        for qualname, is_def, _ in entries if is_def
-    )
+        for entries in defs.values()
+        for qualname, is_def, _ in entries if is_def and qualname not in reached
+    })
 
 
 def unpassed_parameters() -> list[str]:
@@ -185,6 +252,19 @@ def unpassed_parameters() -> list[str]:
         for qualname, _, names in entries
         for p in names if p not in passed.get(name, set())
     )
+
+
+def test_names_bound_in_a_scope_reach_no_top_level_definition():
+    tree = ast.parse(
+        "def f(a, b=helper):\n"
+        "    def unit(c):\n"
+        "        return c\n"
+        "    d = [e for e in a]\n"
+        "    return [unit(a), d, e, lambda g: g + other, 'row_name']\n"
+    )
+    want = {"helper", "e", "other"}
+    assert _identifiers(tree.body[0], "m") == want | {"m.row_name"}
+    assert _identifiers(tree.body[0], None) == want
 
 
 def test_every_package_definition_is_reachable_from_a_product_root():
