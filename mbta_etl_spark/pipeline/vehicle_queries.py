@@ -85,9 +85,15 @@ def summary_stats(vehicles: DataFrame) -> DataFrame:
     relational equivalent). An unpartitioned window sorts every row in
     one task, so on a large table the whole report, not only the moving
     speeds, goes through that one sort; ``core.approx_percentiles`` is
-    the scale path."""
+    the scale path. On an empty table the shares are null doubles, as
+    SQLite, the reference's engine, returns NULL for a division by zero
+    (ANSI Spark would raise ``DIVIDE_BY_ZERO``)."""
     total = F.count(F.lit(1))
     moving = F.count(F.when(F.col("speed") > 0, 1))
+
+    def percent(n):
+        return F.round(F.try_divide(n * 100.0, total), 6)
+
     moving_speed = F.when(F.col("speed") > 0, F.col("speed"))
     w = Window.orderBy(moving_speed.asc_nulls_last())
     ranked = _one_task(vehicles).withColumns({
@@ -108,19 +114,15 @@ def summary_stats(vehicles: DataFrame) -> DataFrame:
             for s in STATUSES
         ],
         *[
-            F.round(
-                F.sum(F.when(F.col("occupancy_status") == o, 1).otherwise(0))
-                * 100.0
-                / total,
-                6,
-            ).alias(f"occupancy_{o.lower()}_pct")
+            percent(F.sum(F.when(F.col("occupancy_status") == o, 1).otherwise(0)))
+            .alias(f"occupancy_{o.lower()}_pct")
             for o in OCCUPANCIES
         ],
         F.count(F.when(F.col("direction_id") == 0, 1)).alias("outbound_vehicles"),
         F.count(F.when(F.col("direction_id") == 1, 1)).alias("inbound_vehicles"),
         moving.alias("moving_vehicles"),
         F.count(F.when(F.col("speed") == 0, 1)).alias("stationary_vehicles"),
-        F.round(moving * 100.0 / total, 6).alias("percent_moving"),
+        percent(moving).alias("percent_moving"),
         *[
             F.max(
                 F.when(F.expr(f"_rn = (_n * {num}) div {den} + 1"), moving_speed)

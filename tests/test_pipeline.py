@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from mbta_etl_spark.operators import core
 from mbta_etl_spark.pipeline import vehicle_queries as vq
-from mbta_etl_spark.pipeline.load import upsert_parquet
+from mbta_etl_spark.pipeline.load import atomic_publish, read_published, upsert_parquet
 from mbta_etl_spark.pipeline.schema import VEHICLE_SCHEMA
 from mbta_etl_spark.sources import http_json
 
@@ -646,6 +646,19 @@ def test_summary_stats_no_moving(spark):
     assert row["p50"] is None and row["p90"] is None and row["p95"] is None
     types = dict(stats.dtypes)
     assert [types[c] for c in ("p50", "p90", "p95")] == ["double"] * 3
+
+
+def test_summary_stats_over_an_empty_published_table(spark, tmp_path):
+    """An empty table reports zero vehicles and null shares, as SQLite's
+    NULL for a division by zero; ANSI Spark would raise DIVIDE_BY_ZERO."""
+    path = str(tmp_path / "vehicles")
+    atomic_publish(_vehicles_df(spark, []), path, None)
+    stats = vq.summary_stats(read_published(spark, path).df)
+    (row,) = stats.collect()
+    shares = ["percent_moving", *(c for c in stats.columns if c.endswith("_pct"))]
+    assert row["total_vehicles"] == 0 and len(shares) == 4
+    assert all(row[c] is None for c in shares)
+    assert {dict(stats.dtypes)[c] for c in shares} == {"double"}
 
 
 def test_route_breakdown_dead_arm(spark):
