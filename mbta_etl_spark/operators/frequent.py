@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mbta_etl_spark.pipeline.load import Published
+
 
 def _mg_partial(capacity: int, key: str):
     """mapInPandas summarizer: one Misra–Gries counter map per partition.
@@ -140,3 +142,22 @@ def mg_merge(
         .agg(F.sum("cnt").alias("cnt"))
     )
     return mg_trim(merged, key, capacity)
+
+
+def mg_step(key: str, capacity: int):
+    """The ``pipeline.load.merge`` step of a standing MG summary table,
+    the streaming twin of the batch operator: each micro-batch's
+    summary merged into the stored one. State lives in the table (the
+    summary is mergeable, Agarwal et al. PODS'12), so it survives
+    restarts and stays O(capacity) rows however long the stream; a
+    batch costs one batch-sized groupBy plus a merge over <= 2*capacity
+    rows. Counts are lower bounds with error at most N/capacity. The
+    merge skips a redelivered batch, which this bound needs: merged
+    twice, a batch inflates N past the trim bound and can trim a true
+    heavy hitter out of the candidates an exact recount (st03) reads."""
+
+    def step(batch: DataFrame, current: Published | None) -> DataFrame:
+        inc = mg_summarize(batch, key, capacity)
+        return inc if current is None else mg_merge(current.df, inc, key, capacity)
+
+    return step

@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mbta_etl_spark.pipeline.load import Published
+
 # (name, aggregate over raw events, merge over partials)
 _MEASURES = (
     ("cnt", lambda v: F.count(F.lit(1)), lambda c: F.sum(c)),
@@ -60,13 +62,30 @@ def rollup_merge(existing: DataFrame, increment: DataFrame) -> DataFrame:
     with each measure's merge function. Input and output schemas are
     identical, so merging is associative and idempotent-by-construction
     to re-aggregation (NOT to replaying the same batch twice — dedup
-    upstream, e.g. load.upsert_parquet on a batch id, owns that)."""
+    upstream, e.g. load.merge on a batch id, owns that)."""
     group_cols = [c for c in existing.columns if c not in {n for n, _, _ in _MEASURES}]
     merged = existing.unionByName(increment)
     return merged.groupBy(*group_cols).agg(
         *[merge(F.col(name)).alias(name) for name, _, merge in _MEASURES]
     )
 
+
+
+def rollup_step(keys: Sequence[str]):
+    """The ``pipeline.load.merge`` step of a standing hourly rollup of
+    (ts, value) events per ``keys``: each micro-batch's partials merged
+    into the stored ones. State lives in the table, not the stream
+    engine, so the aggregate survives restarts; a batch costs one
+    partial aggregation of its own events plus a merge over partial
+    rows, never the accumulated events. Late data merges into whichever
+    old bucket it belongs to (no watermark cutoff). A batch merged twice
+    would double-count cnt and sum; the merge skips a redelivered one."""
+
+    def step(batch: DataFrame, current: Published | None) -> DataFrame:
+        inc = rollup_increment(batch, F.col("ts"), F.col("value"), keys)
+        return inc if current is None else rollup_merge(current.df, inc)
+
+    return step
 
 def rollup_read(rollup: DataFrame) -> DataFrame:
     """Read-time derived measures: avg from (sum, cnt) — the measure you

@@ -42,7 +42,7 @@ def run(
 
     obs = Observation()
     records = records.observe(obs, F.count(F.lit(1)).alias("n"))
-    upsert_parquet(spark, records, table_path)
+    upsert_parquet(records, table_path)
     n = int(obs.get["n"])
     log.info("ETL complete: %d records loaded", n)
     return n

@@ -23,6 +23,12 @@ and sweeps the older ones. A crash at any point leaves the current
 version intact; stale version dirs and temp links from crashed writers
 are swept on the next successful publish.
 
+:func:`merge` is the one writer: the vehicles upsert here and the
+streaming rollup, Misra–Gries and profile tables differ only in the
+step that builds the next version from the batch and the current one.
+A micro-batch's id commits with its data, which makes foreachBatch
+redelivery a no-op (Structured Streaming's idempotent-sink contract).
+
 Scale shape: the merge is a keyed window on ``id``. A poll pass merges
 a ~10k-row batch into a ~12k-row table, where fixed costs outweigh the
 data work, so the merge is shaped for that:
@@ -60,10 +66,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from mbta_etl_spark.operators.core import latest_by_key
@@ -120,9 +128,8 @@ def atomic_publish(df: DataFrame, path: str, batch_id: int | None) -> None:
     half-written table. The row count is observed on the write itself,
     so the manifest adds no job. ``batch_id`` is the streaming
     micro-batch being merged (None outside a stream): recorded with the
-    data, it commits in the same swap, which is what lets
-    :func:`claim_batch` make at-least-once foreachBatch redelivery
-    exactly-once.
+    data, it commits in the same swap, which is what lets :func:`merge`
+    make at-least-once foreachBatch redelivery exactly-once.
 
     After the swap every other version is swept — older versions, and
     the dirs and temp links of crashed writers — except the one the swap
@@ -164,36 +171,6 @@ def atomic_publish(df: DataFrame, path: str, batch_id: int | None) -> None:
             os.remove(full)
 
 
-def claim_batch(
-    table_path: str, current: Published | None, batch_id: int
-) -> bool:
-    """Shared idempotence guard for at-least-once foreachBatch merges,
-    given the table's ``current`` version (:func:`read_published`):
-
-    - returns True when the batch should merge (id advances the table);
-    - returns False for a REDELIVERY of the exactly-one batch the
-      checkpoint can replay (the committed id itself) — skip silently;
-    - raises for an id REGRESSION (batch_id < published id), which
-      at-least-once delivery cannot produce: it means the checkpoint
-      was wiped or a fresh stream was pointed at an existing table.
-      Treating that as redelivery would silently DROP new data batch
-      after batch; failing loudly forces the operator to reset the
-      table or the checkpoint together."""
-    committed = None if current is None else current.batch_id
-    if committed is None:
-        return True
-    if batch_id == committed:
-        return False
-    if batch_id < committed:
-        raise RuntimeError(
-            f"streaming merge lineage break at {table_path}: batch id "
-            f"{batch_id} is behind the published id {committed} — the "
-            f"checkpoint no longer matches the table (wiped checkpoint "
-            f"or fresh stream over an old table). Reset both together."
-        )
-    return True
-
-
 def fits_one_task(spark: SparkSession, size: int) -> bool:
     """Whether an input estimated at ``size`` bytes of Spark's in-memory
     rows is small enough to run in one task: no larger than the
@@ -219,28 +196,89 @@ def _fits_one_partition(spark: SparkSession, batch: DataFrame, rows: int) -> boo
     )
 
 
-def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:
-    """Last-write-wins merge of ``batch`` into the parquet table at
-    ``path``, keyed on ``id``: the newest ``ingested_at`` wins. Ties on
-    it prefer the incoming batch (the reference's REPLACE always wins,
-    load.go:14), and among batch rows the later one in the batch's
-    partition order. For one ordered payload (``etl.run``) that is the
-    reference's ordered ``INSERT OR REPLACE`` loop, load.go:23-32, which
-    leaves the last occurrence of an id; a batch read from several files
-    has no such order between them.
-    Publishing goes through :func:`atomic_publish`, so readers never
-    observe a missing table.
+def merge(
+    batch: DataFrame,
+    path: str,
+    batch_id: int | None,
+    step: Callable[[DataFrame, Published | None], DataFrame],
+) -> None:
+    """Publish ``step(batch, current)`` as the next version of the table
+    at ``path``, where ``current`` is its published version
+    (:func:`read_published`, None before the first write). Every writer
+    of a published table goes through here, so the protocol is written
+    once: read the current version, build the next from it, publish it
+    with the batch id in one swap (:func:`atomic_publish`).
 
-    The stored version is read through :func:`read_published`, so no
-    footer job runs. Its recorded column names and types must equal the
+    ``batch_id`` is the streaming micro-batch being merged (None outside
+    a stream). foreachBatch is at-least-once: a crash between the
+    publish and the checkpoint commit redelivers the committed batch on
+    restart. The id is recorded with the data, so:
+
+    - an id equal to the published one is that redelivery, and is
+      skipped without building anything;
+    - an id behind the published one cannot come from redelivery: the
+      checkpoint was wiped, or a fresh stream points at an old table.
+      Skipping it would silently drop data batch after batch, so it
+      raises ``RuntimeError``; reset the table and the checkpoint
+      together.
+
+    A step that reads the batch more than once may ``persist()`` it; it
+    is released here once the version is published."""
+    base = path.rstrip("/")
+    current = read_published(batch.sparkSession, base)
+    committed = None if current is None else current.batch_id
+    if batch_id is not None and committed is not None:
+        if batch_id == committed:
+            return  # redelivered batch: already merged and published
+        if batch_id < committed:
+            raise RuntimeError(
+                f"streaming merge lineage break at {base}: batch id "
+                f"{batch_id} is behind the published id {committed} — the "
+                f"checkpoint no longer matches the table (wiped checkpoint "
+                f"or fresh stream over an old table). Reset both together."
+            )
+    cached = batch.is_cached
+    try:
+        atomic_publish(step(batch, current), base, batch_id)
+    finally:
+        if batch.is_cached and not cached:
+            batch.unpersist()
+
+
+def merge_stream(
+    stream: DataFrame,
+    path: str,
+    checkpoint: str,
+    step: Callable[[DataFrame, Published | None], DataFrame],
+) -> DataStreamWriter:
+    """A writer that merges each micro-batch of ``stream`` into the
+    table at ``path`` through :func:`merge`, under its micro-batch id.
+    The caller picks the trigger and starts the query."""
+    return (
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: merge(batch, path, batch_id, step)
+        )
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+
+
+def upsert_step(batch: DataFrame, current: Published | None) -> DataFrame:
+    """The vehicles table's :func:`merge` step: last write wins, keyed
+    on ``id``. The newest ``ingested_at`` wins. Ties on it prefer the
+    incoming batch (the reference's REPLACE always wins, load.go:14),
+    and among batch rows the later one in the batch's partition order.
+    For one ordered payload (``etl.run``) that is the reference's
+    ordered ``INSERT OR REPLACE`` loop, load.go:23-32, which leaves the
+    last occurrence of an id; a batch read from several files has no
+    such order between them.
+
+    The stored version's recorded column names and types must equal the
     batch's; a mismatch raises ``ValueError`` before anything is
     written. A merge estimated to be no larger than
     ``autoBroadcastJoinThreshold``, the first pass's included, is
     coalesced into one partition and runs with no shuffle; a larger one
     shuffles on ``id`` as the session's defaults decide."""
-    base = path.rstrip("/")
-    current = read_published(spark, base)
-
     # batch order, so the last in-batch occurrence of a key wins
     new = batch.withColumns(
         {"_src": F.lit(1), "_ord": F.monotonically_increasing_id()}
@@ -252,15 +290,21 @@ def upsert_parquet(spark: SparkSession, batch: DataFrame, path: str) -> None:
         want = {f.name: f.dataType.simpleString() for f in batch.schema}
         if have != want:
             raise ValueError(
-                f"stored table {base} has columns {sorted(have.items())}, "
+                f"the stored table has columns {sorted(have.items())}, "
                 f"the batch has {sorted(want.items())}"
             )
         old = current.df.withColumns({"_src": F.lit(0), "_ord": F.lit(0)})
         merged = new.unionByName(old)
-    if _fits_one_partition(spark, batch, 0 if current is None else current.rows):
+    rows = 0 if current is None else current.rows
+    if _fits_one_partition(batch.sparkSession, batch, rows):
         # one partition already clusters every key: no exchange is planned
         merged = merged.coalesce(1)
-    winner = latest_by_key(
+    return latest_by_key(
         merged, ["id"], [F.desc("ingested_at"), F.desc("_src"), F.desc("_ord")]
     ).drop("_src", "_ord")
-    atomic_publish(winner, base, None)
+
+
+def upsert_parquet(batch: DataFrame, path: str) -> None:
+    """Upsert ``batch`` into the vehicles table at ``path``
+    (:func:`upsert_step`), outside any stream."""
+    merge(batch, path, None, upsert_step)

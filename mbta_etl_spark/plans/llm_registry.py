@@ -5796,8 +5796,8 @@ def st03_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming heavy hitters made EXACT — the third streaming face
     beside st01 (engine StateStore) and st02 (mergeable table state):
     SKETCH state in the table. Document tokens replayed as 4
-    micro-batches through streaming/frequent_stream.start_heavy_hitter_
-    stream (foreachBatch Misra-Gries summarize + merge into a standing
+    micro-batches through load.merge_stream with operators/frequent.
+    mg_step (foreachBatch Misra-Gries summarize + merge into a standing
     O(capacity) summary), then ONE exact recount of the final candidate
     set over the corpus. The MG merge guarantee — any token with true
     frequency > N/capacity survives the merged summary (Agarwal et al.
@@ -5810,10 +5810,9 @@ def st03_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
+    from mbta_etl_spark.operators.frequent import mg_step
+    from mbta_etl_spark.pipeline.load import merge_stream, read_published
     from mbta_etl_spark.sources.formats import scratch_dir
-    from mbta_etl_spark.streaming.frequent_stream import (
-        start_heavy_hitter_stream,
-    )
     from mbta_etl_spark.streaming.replay import (
         land_replay_log,
         open_replay_stream,
@@ -5837,12 +5836,13 @@ def st03_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf0.1 under the pin; the exact recount below runs OUTSIDE the
     # pin at full parallelism (it is a batch scan, not state machinery)
     with pinned_stream_parallelism(spark, n=4, input_dirs=[in_dir]):
-        query = start_heavy_hitter_stream(
-            toks_stream, tbl, ckpt, key="tok", capacity=capacity,
-            available_now=True,
+        query = (
+            merge_stream(toks_stream, tbl, ckpt, mg_step("tok", capacity))
+            .trigger(availableNow=True)
+            .start()
         )
         query.awaitTermination()
-    candidates = spark.read.parquet(tbl).select("tok").distinct()
+    candidates = read_published(spark, tbl).df.select("tok").distinct()
     toks = (
         _docs(spark, sf_dir)
         .select(F.explode(F.split(F.col("text"), " ")).alias("tok"))

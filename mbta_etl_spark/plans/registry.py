@@ -1439,10 +1439,10 @@ def q49_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st02_stream_rollup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming continuous-aggregate equivalence (the second face of
     VERDICT r4 item 7, beside st01's stateful-engine dedup): events
-    replayed as 4 micro-batches through
-    streaming/rollup.start_rollup_stream — file source, foreachBatch
+    replayed as 4 micro-batches through load.merge_stream with
+    operators/rollup.rollup_step — file source, foreachBatch
     partial-aggregate + rollup_merge into a standing parquet table via
-    atomic_publish (state in the TABLE, not the engine) — then
+    the one publish (state in the TABLE, not the engine) — then
     rollup_read derives the read-time measures. Because the rollup
     algebra is associative-commutative (r01's driver-proven property),
     the final table equals the one-shot aggregation over ALL events no
@@ -1453,13 +1453,13 @@ def st02_stream_rollup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from mbta_etl_spark.operators.rollup import rollup_read
+    from mbta_etl_spark.operators.rollup import rollup_read, rollup_step
+    from mbta_etl_spark.pipeline.load import merge_stream, read_published
     from mbta_etl_spark.sources.formats import scratch_dir
     from mbta_etl_spark.streaming.replay import (
         land_replay_log,
         open_replay_stream,
     )
-    from mbta_etl_spark.streaming.rollup import start_rollup_stream
 
     ev = _events(spark, sf_dir).select(
         "event_id", "ts", "event_type", "value"
@@ -1474,9 +1474,13 @@ def st02_stream_rollup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mbta_etl_spark.streaming.replay import pinned_stream_parallelism
 
     with pinned_stream_parallelism(spark, n=4, input_dirs=[in_dir]):
-        query = start_rollup_stream(stream, tbl, ckpt)
+        query = (
+            merge_stream(stream, tbl, ckpt, rollup_step(["event_type"]))
+            .trigger(availableNow=True)
+            .start()
+        )
         query.awaitTermination()
-    out = rollup_read(spark.read.parquet(tbl))
+    out = rollup_read(read_published(spark, tbl).df)
     return out.select(
         "bucket",
         "event_type",
@@ -1815,8 +1819,9 @@ def _run_replay_sink(
     at-least-once redelivery rewrites its own batch_id partition
     instead of appending duplicates, making the bounded replay
     idempotent without a marker protocol (the standing-table merges —
-    st02/st07 — use claim_batch + atomic_publish instead, because they
-    rewrite one shared table rather than per-batch partitions).
+    st02/st03/st07/st10 — go through load.merge's batch-id rule
+    instead, because they rewrite one shared table rather than
+    per-batch partitions).
 
     ``drain`` selects the bounded-run strategy: None (default) uses
     availableNow + awaitTermination — the file-source replays; a
@@ -2000,9 +2005,10 @@ def st07_stateful_profile_equiv(
     which is exactly what lets a plain batch GROUP BY oracle
     hash-verify the streamed execution. Update-mode emissions carry
     the key's full cumulative profile, merged into a standing table by
-    an idempotent last-write-wins upsert (claim_batch +
-    atomic_publish, st02's exactly-once discipline). Floats follow
-    r01: raw sums in state and in the table, ONE 6dp round at read.
+    an idempotent last-write-wins upsert (load.merge with
+    stateful.replace_profiles, st02's exactly-once discipline). Floats
+    follow r01: raw sums in state and in the table, ONE 6dp round at
+    read.
 
     Note the deliberate API choice: ``applyInPandasWithState`` rather
     than ``transformWithStateInPandas`` — the latter's state client
@@ -2017,12 +2023,16 @@ def st07_stateful_profile_equiv(
     import os
     import shutil
 
+    from mbta_etl_spark.pipeline.load import merge_stream, read_published
     from mbta_etl_spark.sources.formats import scratch_dir
     from mbta_etl_spark.streaming.replay import (
         land_replay_log,
         open_replay_stream,
     )
-    from mbta_etl_spark.streaming.stateful import start_profile_stream
+    from mbta_etl_spark.streaming.stateful import (
+        replace_profiles,
+        user_profile_stream,
+    )
 
     ev = _events(spark, sf_dir).select(
         "event_id", "user_id", "ts", "value"
@@ -2052,11 +2062,15 @@ def st07_stateful_profile_equiv(
     from mbta_etl_spark.streaming.replay import pinned_stream_parallelism
 
     with pinned_stream_parallelism(spark, input_dirs=[in_dir]):
-        query = start_profile_stream(
-            stream, table, ckpt, available_now=True
+        query = (
+            merge_stream(
+                user_profile_stream(stream), table, ckpt, replace_profiles
+            )
+            .trigger(availableNow=True)
+            .start()
         )
         query.awaitTermination()
-    return spark.read.parquet(table).select(
+    return read_published(spark, table).df.select(
         "user_id",
         "n_events",
         F.round("sum_value", 6).alias("sum_value"),
@@ -2224,11 +2238,12 @@ def st10_transform_with_state_equiv(
     (pmod(event_id, 4) — users span batches, the cross-batch
     ValueState fold is the verified path), update-mode emissions carry
     the key's full cumulative (count, max) so the last-write-wins
-    merge (claim_batch + atomic_publish) leaves the one-shot batch
-    aggregate, which the trivial GROUP BY oracle replays. Count and
-    MAX are exact (no float-association hazard — deliberately chosen
-    so the protobuf/Arrow state plumbing, the version-fragile surface
-    under test, is the only thing that can break the hash). RocksDB
+    merge (load.merge with stateful.replace_profiles) leaves the
+    one-shot batch aggregate, which the trivial GROUP BY oracle
+    replays. Count and MAX are exact (no float-association hazard —
+    deliberately chosen so the protobuf/Arrow state plumbing, the
+    version-fragile surface under test, is the only thing that can
+    break the hash). RocksDB
     provider is required by the API and pinned around the replay.
 
     Shuffle partitions are pinned to 8 for the replay (round-8
@@ -2243,6 +2258,7 @@ def st10_transform_with_state_equiv(
     import os
     import shutil
 
+    from mbta_etl_spark.pipeline.load import merge_stream, read_published
     from mbta_etl_spark.sources.formats import scratch_dir
     from mbta_etl_spark.streaming.replay import (
         land_replay_log,
@@ -2250,7 +2266,7 @@ def st10_transform_with_state_equiv(
     )
     from mbta_etl_spark.streaming.stateful import (
         ensure_protobuf_runtime,
-        merge_profile_batch,
+        replace_profiles,
         running_extrema_stream,
     )
 
@@ -2305,11 +2321,8 @@ def st10_transform_with_state_equiv(
     )
     try:
         query = (
-            running_extrema_stream(stream)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda b, bid: merge_profile_batch(b, bid, table)
+            merge_stream(
+                running_extrema_stream(stream), table, ckpt, replace_profiles
             )
             .trigger(availableNow=True)
             .start()
@@ -2336,7 +2349,7 @@ def st10_transform_with_state_equiv(
                 "spark.sql.streaming.stateStore.rocksdb."
                 "changelogCheckpointing.enabled"
             )
-    return spark.read.parquet(table).select(
+    return read_published(spark, table).df.select(
         "user_id", "n_events", "max_value"
     )
 
@@ -12260,7 +12273,12 @@ _ORACLES["v20_freshness_lag"] = """
 # driver re-verifies them. Add a name when its plan changes; drop it once
 # its driver row is green again, then rerun scripts/sync_green_shapes.py.
 # tests/test_registry_order.py checks both directions.
-_DRIVER_HOLDOUTS: tuple[str, ...] = ()
+_DRIVER_HOLDOUTS: tuple[str, ...] = (
+    "st02_stream_rollup_equiv",
+    "st03_stream_heavy_hitters",
+    "st07_stateful_profile_equiv",
+    "st10_transform_with_state_equiv",
+)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -32,7 +32,8 @@ def stream_exact_dedup_equiv(
     cardinality any exact-dedup shuffle carries); the complete-mode
     snapshot rewrite is the bench-scale simplification — a production
     pipeline flips outputMode to update and merges the delta into the
-    table (same algebra, incremental IO), per streaming/rollup.py.
+    table (same algebra, incremental IO), as operators/rollup.rollup_step
+    does through load.merge.
     """
     import os
     import shutil

@@ -9,8 +9,9 @@ run continuously:
   the stream picks them up).
 - **transform**: the exact batch ``transform()`` — Structured Streaming
   reuses unmodified batch expressions.
-- **sink**: ``foreachBatch`` → the same upsert merge, giving the
-  reference's last-write-wins semantics per micro-batch; or a
+- **sink**: ``foreachBatch`` → the same upsert merge (``load.merge``),
+  giving the reference's last-write-wins semantics per micro-batch,
+  exactly once per batch id; or a
   watermarked ``dropDuplicates`` for at-most-once per key within the
   lateness horizon.
 """
@@ -19,9 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 
-from mbta_etl_spark.pipeline.load import upsert_parquet
+from mbta_etl_spark.pipeline.load import merge_stream, upsert_step
 from mbta_etl_spark.pipeline.schema import RAW_VEHICLE_SCHEMA
 from mbta_etl_spark.pipeline.transform import transform
 
@@ -37,31 +38,20 @@ def run_upsert_stream(
     snapshot_dir: str,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Continuous ETL: stream snapshots → batch transform → per-micro-batch
-    upsert merge. ``available_now=True`` drains what's there and stops
-    (used by tests and backfills)."""
+) -> DataStreamWriter:
+    """Continuous ETL: stream snapshots → batch transform → each
+    micro-batch upserted under its id (``load.merge`` with
+    ``load.upsert_step``), so a redelivered micro-batch is skipped, not
+    merged again. Returns the writer; the caller picks the trigger
+    (``availableNow`` drains what is there and stops) and starts it.
+
+    Within one micro-batch several snapshots may carry the same id; the
+    merge keeps the newest ``ingested_at`` (one value per micro-batch),
+    then the later row in partition order. Spark packs file splits
+    largest-first, so between two snapshot files of one micro-batch that
+    order is not their arrival order."""
     records = transform(stream_vehicle_snapshots(spark, snapshot_dir))
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # within one micro-batch multiple snapshots may carry the same id;
-        # the merge keeps one row per key: the newest ingested_at (one
-        # value per micro-batch), then the later row in partition order.
-        # Spark packs file splits largest-first, so between two snapshot
-        # files of one micro-batch that order is not their arrival order
-        upsert_parquet(batch_df.sparkSession, batch_df, table_path)
-
-    writer = (
-        records.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return merge_stream(records, table_path, checkpoint_dir, upsert_step)
 
 
 def dedup_stream_by_key(

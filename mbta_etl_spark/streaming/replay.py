@@ -182,7 +182,7 @@ def pinned_stream_parallelism(spark, n: int = 8, input_dirs=None):
     per-row work, so partitions x batches is the bill. st09 (no state
     store) is flat, as the model predicts. st07 had been measured
     ~40% SLOWER pinned in round 7 — that reversed when round 8's
-    persist() fix in merge_profile_batch stopped the
+    persist() fix in the profile merge stopped the
     applyInPandasWithState subtree from executing twice per batch;
     with the kernel running once, the handshake dominates again.
 

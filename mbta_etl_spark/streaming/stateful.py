@@ -1,8 +1,9 @@
 """Custom stateful streaming operators, one per Python state tier.
 
-- ``user_profile_stream`` / ``start_profile_stream``: a per-user running
-  profile (event count, value sum, last-seen timestamp) maintained across
-  micro-batches with applyInPandasWithState's explicit GroupState.
+- ``user_profile_stream``: a per-user running profile (event count,
+  value sum, last-seen timestamp) maintained across micro-batches with
+  applyInPandasWithState's explicit GroupState; ``replace_profiles``
+  merges its emissions into a standing table.
 - ``running_extrema_stream``: a per-user running (count, max) held in a
   named ValueState by transformWithStateInPandas, Spark 4's typed-state
   successor; ``ensure_protobuf_runtime`` makes it runnable in a vanilla
@@ -31,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampNTZType,
 )
+
+from mbta_etl_spark.pipeline.load import Published
 
 PROFILE_SCHEMA = StructType(
     [
@@ -92,74 +95,28 @@ def user_profile_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def merge_profile_batch(
-    batch_df: DataFrame, batch_id: int, table_path: str
-) -> None:
-    """One idempotent foreachBatch merge of update-mode profile
-    emissions into a standing per-user parquet table. Each emission is
-    the key's FULL cumulative profile (the kernel folds state before
-    emitting), so the merge is pure last-write-wins: replace the key's
-    row, keep rows for keys absent from the batch. foreachBatch is
-    at-least-once, so the merge follows st02's exactly-once
-    discipline — the shared ``claim_batch`` guard skips the one batch
-    a recovered checkpoint can redeliver (and fails loudly on an id
-    regression), and ``atomic_publish`` commits data + batch id (the
-    version manifest) in one symlink swap. Scale shape: the merge
-    shuffles profile ROWS (one per key seen in the batch + one per
-    standing key), never raw events — the same table-state economics
-    as the rollup merge."""
-    from mbta_etl_spark.pipeline.load import (
-        atomic_publish,
-        claim_batch,
-        read_published,
-    )
+def replace_profiles(batch: DataFrame, current: Published | None) -> DataFrame:
+    """The ``pipeline.load.merge`` step of a standing per-user table of
+    update-mode emissions (``user_profile_stream``,
+    ``running_extrema_stream``). Each emission is the key's FULL
+    cumulative row (the kernel folds state before emitting), so the
+    merge is pure last-write-wins: the batch replaces its keys' rows
+    and keys absent from it keep theirs. It shuffles one row per key
+    seen in the batch plus one per standing key, never raw events.
 
-    current = read_published(batch_df.sparkSession, table_path)
-    if not claim_batch(table_path, current, batch_id):
-        return  # redelivered batch: already merged and published
-    # batch_df appears TWICE in the merged plan (anti-join probe +
-    # union arm); an unpersisted micro-batch DataFrame may be
-    # recomputed per appearance, re-executing the upstream
-    # applyInPandasWithState subtree — and a state-store-backed
-    # subtree must execute exactly once per batch. Pin it first
-    # (ADVICE r7 item 1; Spark's foreachBatch docs make the same
-    # persist-a-reused-batchDF recommendation).
-    batch_df.persist()
-    try:
-        if current is None:
-            merged = batch_df
-        else:
-            merged = current.df.join(
-                batch_df.select("user_id"), "user_id", "left_anti"
-            ).unionByName(batch_df)
-        atomic_publish(merged, table_path, batch_id)
-    finally:
-        batch_df.unpersist()
-
-
-def start_profile_stream(
-    events: DataFrame,
-    table_path: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """events stream (user_id, ts, value) → continuously-merged
-    per-user profile table at ``table_path`` (update-mode
-    applyInPandasWithState + idempotent last-write-wins merge).
-    Returns the StreamingQuery. ``available_now=True`` drains what's
-    there and stops (bounded replays/tests; continuous is the
-    production default — the st03 lesson)."""
-    writer = (
-        user_profile_stream(events)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, bid: merge_profile_batch(b, bid, table_path)
-        )
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    Over a stored table the batch appears twice in the plan (anti-join
+    probe and union arm), and a micro-batch DataFrame may be recomputed
+    per appearance, re-executing the upstream stateful subtree, which
+    must run exactly once per batch. So it is persisted here and
+    released by the merge after the publish (ADVICE r7 item 1; Spark's
+    foreachBatch docs make the same persist-a-reused-batchDF
+    recommendation)."""
+    if current is None:
+        return batch
+    batch.persist()
+    return current.df.join(
+        batch.select("user_id"), "user_id", "left_anti"
+    ).unionByName(batch)
 
 
 COUNTER_OUTPUT_SCHEMA = StructType(

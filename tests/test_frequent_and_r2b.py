@@ -473,9 +473,8 @@ def test_mg_trim_noop_under_capacity(spark):
 def test_streaming_heavy_hitters_converge(spark, tmp_path):
     import time
 
-    from mbta_etl_spark.streaming.frequent_stream import (
-        start_heavy_hitter_stream,
-    )
+    from mbta_etl_spark.operators.frequent import mg_step
+    from mbta_etl_spark.pipeline.load import merge_stream
 
     src_dir = str(tmp_path / "src")
     table = str(tmp_path / "hh_table")
@@ -487,7 +486,7 @@ def test_streaming_heavy_hitters_converge(spark, tmp_path):
     stream = (
         spark.readStream.schema("k string").parquet(src_dir)
     )
-    q = start_heavy_hitter_stream(stream, table, ckpt, key="k", capacity=8)
+    q = merge_stream(stream, table, ckpt, mg_step("k", 8)).start()
     try:
         q.processAllAvailable()
         spark.createDataFrame(
@@ -1563,30 +1562,3 @@ def test_q95_grid_shape_and_ranks(spark):
         rs.sort(key=lambda r: r.brand_rank)
         revs = [r.revenue for r in rs]
         assert revs == sorted(revs, reverse=True)  # brands ranked desc
-
-
-def test_merge_mg_batch_redelivery_is_exactly_once(spark, tmp_path):
-    """A redelivered micro-batch must not re-merge into the standing MG
-    summary: double-merging inflates effective N past the trim bound,
-    which could trim a true heavy hitter out of the candidate set."""
-    from pyspark.sql import functions as F
-
-    from mbta_etl_spark.streaming.frequent_stream import merge_mg_batch
-
-    table = str(tmp_path / "mg")
-    b0 = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "k string")
-    b1 = spark.createDataFrame([("a",)] * 3 + [("c",)] * 4, "k string")
-
-    def counts():
-        return {
-            r.k: r.cnt for r in spark.read.parquet(table).collect()
-        }
-
-    merge_mg_batch(b0, 0, table, "k", 10)
-    assert counts() == {"a": 5, "b": 2}
-    merge_mg_batch(b0, 0, table, "k", 10)  # redelivery: no-op
-    assert counts() == {"a": 5, "b": 2}
-    merge_mg_batch(b1, 1, table, "k", 10)
-    assert counts() == {"a": 8, "b": 2, "c": 4}
-    merge_mg_batch(b1, 1, table, "k", 10)  # redelivery: no-op
-    assert counts() == {"a": 8, "b": 2, "c": 4}

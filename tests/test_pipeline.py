@@ -69,7 +69,7 @@ def test_extract_missing_data_array(spark):
 def test_load_success(spark, tmp_path):
     """Row persisted, count==1 (main_test.go:250-296)."""
     path = str(tmp_path / "vehicles")
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(1, speed=25.5)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(1, speed=25.5)]), path)
     assert spark.read.parquet(path).count() == 1
 
 
@@ -77,11 +77,8 @@ def test_load_handles_duplicates(spark, tmp_path):
     """Same id re-loaded → 1 row, newest speed wins (main_test.go:299-359)."""
     path = str(tmp_path / "vehicles")
     later = NOW + datetime.timedelta(minutes=5)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(1, vid="dup", speed=25.5)]), path)
     upsert_parquet(
-        spark, _vehicles_df(spark, [_vehicle(1, vid="dup", speed=25.5)]), path
-    )
-    upsert_parquet(
-        spark,
         _vehicles_df(spark, [_vehicle(1, vid="dup", speed=30.0, ingested=later)]),
         path,
     )
@@ -98,17 +95,17 @@ def test_load_atomic_publish_layout(spark, tmp_path):
     import os
 
     path = str(tmp_path / "vehicles")
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(1, speed=1.0)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(1, speed=1.0)]), path)
     assert os.path.islink(path)
     v1 = os.path.realpath(path)
     assert spark.read.parquet(path).count() == 1
 
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(2, speed=2.0)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(2, speed=2.0)]), path)
     v2 = os.path.realpath(path)
     assert v2 != v1
     assert os.path.isdir(v1)  # the replaced version is kept for its readers
     assert spark.read.parquet(path).count() == 2
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(3, speed=3.0)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(3, speed=3.0)]), path)
     assert not os.path.exists(v1)  # ...and swept by the next publish
     assert os.path.isdir(v2)
     assert sorted(os.listdir(tmp_path)) == sorted(
@@ -127,12 +124,12 @@ def test_reader_spans_a_publish(spark, tmp_path):
     from mbta_etl_spark.pipeline.load import read_published
 
     path = str(tmp_path / "vehicles")
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(1)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(1)]), path)
     first = os.path.realpath(path)
     reader = read_published(spark, path).df
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(2)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(2)]), path)
     assert reader.count() == 1
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(3)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(3)]), path)
     assert not os.path.exists(first)
     assert read_published(spark, path).df.count() == 3
 
@@ -171,33 +168,79 @@ def test_run_records_manifest(spark, tmp_path):
     assert [f.name for f in published.df.schema] == VEHICLE_SCHEMA.names
 
 
-def test_streaming_merges_record_batch_id(spark, tmp_path):
-    """The rollup, Misra-Gries and profile merges record the id of the
-    batch they merged in the version's manifest."""
-    from mbta_etl_spark.streaming.frequent_stream import merge_mg_batch
-    from mbta_etl_spark.streaming.rollup import merge_rollup_batch
-    from mbta_etl_spark.streaming.stateful import merge_profile_batch
+def _step_batches(spark, name):
+    """A build step for load.merge and three batches, each of which
+    changes the table it merges into."""
+    from mbta_etl_spark.operators.frequent import mg_step
+    from mbta_etl_spark.operators.rollup import rollup_step
+    from mbta_etl_spark.pipeline.load import upsert_step
+    from mbta_etl_spark.streaming.stateful import replace_profiles
 
-    events = spark.createDataFrame(
-        [("a", NOW, 1.0), ("b", NOW, 2.0)],
-        "event_type string, ts timestamp, value double",
-    )
-    keys = spark.createDataFrame([("a",), ("b",), ("a",)], "k string")
-    profiles = spark.createDataFrame(
-        [(1, 2, 3.0, NOW)],
-        "user_id long, n_events long, sum_value double, last_ts timestamp_ntz",
-    )
-    merges = {
-        "rollup": lambda bid, p: merge_rollup_batch(events, bid, p, ["event_type"]),
-        "mg": lambda bid, p: merge_mg_batch(keys, bid, p, "k", 10),
-        "profile": lambda bid, p: merge_profile_batch(profiles, bid, p),
-    }
-    for name, merge in merges.items():
-        path = str(tmp_path / name)
-        for bid in (4, 7):
-            merge(bid, path)
-            assert _manifest(path)["batch_id"] == bid, name
-        assert _manifest(path)["rows"] == spark.read.parquet(path).count(), name
+    later = NOW + datetime.timedelta(minutes=5)
+    if name == "rollup":
+        return rollup_step(["event_type"]), [
+            spark.createDataFrame(
+                [("a", NOW, v)], "event_type string, ts timestamp, value double"
+            )
+            for v in (1.0, 2.0, 3.0)
+        ]
+    if name == "mg":
+        return mg_step("k", 10), [
+            spark.createDataFrame(rows, "k string")
+            for rows in ([("a",), ("b",), ("a",)], [("a",)], [("c",)])
+        ]
+    if name == "profile":
+        return replace_profiles, [
+            spark.createDataFrame(
+                [(user, n, n * 1.5, NOW)],
+                "user_id long, n_events long, sum_value double, "
+                "last_ts timestamp_ntz",
+            )
+            for user, n in ((1, 2), (1, 5), (2, 1))
+        ]
+    return upsert_step, [
+        _vehicles_df(spark, [_vehicle(1, speed=1.0)]),
+        _vehicles_df(spark, [_vehicle(1, speed=2.0, ingested=later)]),
+        _vehicles_df(spark, [_vehicle(2, ingested=later)]),
+    ]
+
+
+@pytest.mark.parametrize("name", ["rollup", "mg", "profile", "upsert"])
+def test_merge_is_exactly_once_per_batch_id(spark, tmp_path, name):
+    """Every build step gets one batch-id rule from load.merge: the
+    id lands in the version's manifest with the data, a redelivered id
+    is a no-op (the version and its rows stay as they were, even for a
+    batch that would change them), and an id behind the published one
+    raises. No batch is left cached: the profile step's persist is
+    released after the publish, and the other steps cache nothing."""
+    import os
+
+    from mbta_etl_spark.pipeline.load import merge
+
+    from pyspark import StorageLevel
+
+    step, (b0, b1, b2) = _step_batches(spark, name)
+    path = str(tmp_path / name)
+
+    def state():
+        return os.path.realpath(path), sorted(
+            tuple(r) for r in read_published(spark, path).df.collect()
+        )
+
+    merge(b0, path, 4, step)
+    assert _manifest(path)["batch_id"] == 4
+    assert _manifest(path)["rows"] == spark.read.parquet(path).count()
+    first = state()
+    merge(b1, path, 4, step)  # redelivery of the committed id
+    assert state() == first
+    merge(b1, path, 7, step)
+    assert _manifest(path)["batch_id"] == 7
+    second = state()
+    assert second[1] != first[1]
+    with pytest.raises(RuntimeError, match="lineage break"):
+        merge(b2, path, 5, step)  # behind the published id
+    assert state() == second
+    assert all(b.storageLevel == StorageLevel.NONE for b in (b0, b1, b2))
 
 
 @pytest.mark.parametrize("layout", ["real_dir", "no_manifest"])
@@ -211,12 +254,12 @@ def test_load_rejects_unpublished_table(spark, tmp_path, layout):
     if layout == "real_dir":
         _vehicles_df(spark, [_vehicle(1)]).write.parquet(path)
     else:
-        upsert_parquet(spark, _vehicles_df(spark, [_vehicle(1)]), path)
+        upsert_parquet(_vehicles_df(spark, [_vehicle(1)]), path)
         os.remove(os.path.join(os.path.realpath(path), "_version.json"))
     before = sorted(os.listdir(tmp_path))
     target = os.readlink(path) if os.path.islink(path) else None
     with pytest.raises(ValueError, match="vehicles is not a published table"):
-        upsert_parquet(spark, _vehicles_df(spark, [_vehicle(2)]), path)
+        upsert_parquet(_vehicles_df(spark, [_vehicle(2)]), path)
     assert sorted(os.listdir(tmp_path)) == before
     assert (os.readlink(path) if os.path.islink(path) else None) == target
     assert spark.read.parquet(path).count() == 1
@@ -226,8 +269,8 @@ def test_load_tie_prefers_incoming_batch(spark, tmp_path):
     """Equal ingested_at → REPLACE semantics: the new batch wins
     (reference load.go:14 always replaces)."""
     path = str(tmp_path / "vehicles")
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(1, vid="t", speed=1.0)]), path)
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(1, vid="t", speed=2.0)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(1, vid="t", speed=1.0)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(1, vid="t", speed=2.0)]), path)
     out = spark.read.parquet(path).collect()
     assert len(out) == 1 and out[0]["speed"] == 2.0
 
@@ -250,10 +293,10 @@ def test_load_stored_column_mismatch_raises_before_write(spark, tmp_path, drift)
         "missing": lambda df: df.drop("bearing"),
         "retyped": lambda df: df.withColumn("bearing", F.col("bearing").cast("bigint")),
     }[drift](stored)
-    upsert_parquet(spark, stored, path)
+    upsert_parquet(stored, path)
     published = os.path.realpath(path)
     with pytest.raises(ValueError, match="columns"):
-        upsert_parquet(spark, _vehicles_df(spark, [_vehicle(2)]), path)
+        upsert_parquet(_vehicles_df(spark, [_vehicle(2)]), path)
     assert os.path.realpath(path) == published
     assert sorted(os.listdir(tmp_path)) == ["vehicles", os.path.basename(published)]
     assert [r["id"] for r in spark.read.parquet(path).collect()] == ["veh-1"]
@@ -269,7 +312,7 @@ def test_load_one_partition_only_for_small_merges(spark, tmp_path, monkeypatch):
     from mbta_etl_spark.pipeline.load import _fits_one_partition, read_published
 
     path = str(tmp_path / "vehicles")
-    upsert_parquet(spark, _vehicles_df(spark, [_vehicle(i) for i in range(100)]), path)
+    upsert_parquet(_vehicles_df(spark, [_vehicle(i) for i in range(100)]), path)
     rows = read_published(spark, path).rows
     assert rows == 100
     unsized = _vehicles_df(spark, [_vehicle(1)])  # a Python-list RDD
@@ -285,14 +328,14 @@ def test_load_one_partition_only_for_small_merges(spark, tmp_path, monkeypatch):
         publish(df, dest, batch_id)
 
     monkeypatch.setattr(load, "atomic_publish", keep_plan)
-    upsert_parquet(spark, small, path)
+    upsert_parquet(small, path)
     assert "Exchange" not in published[-1]
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
         assert not _fits_one_partition(spark, small, rows)
-        upsert_parquet(spark, small, path)
+        upsert_parquet(small, path)
         assert "Exchange hashpartitioning(id" in published[-1]
     finally:
         spark.conf.set(key, saved)
@@ -571,7 +614,7 @@ def test_vehicle_queries_run_one_job_over_a_small_table(spark, tmp_path):
                  vid=f"{'ROGBy'[i % 5]}-{i}", direction=i % 2)
         for i in range(40)
     ]
-    upsert_parquet(spark, _vehicles_df(spark, rows), path)
+    upsert_parquet(_vehicles_df(spark, rows), path)
     vehicles = read_published(spark, path).df
     one_task = {}
     for name, query in _QUERIES.items():

@@ -27,7 +27,11 @@ as the walk does (``f(...)`` and ``mod.f(...)``), ``from m import f as
 g`` aliases resolve to ``f``, and a call with ``*args`` or ``**kwargs``
 counts as passing every parameter.
 
-Both guards parse source only and start no Spark session.
+Publish protocol: reading a table's current version, the batch-id rule
+and ``atomic_publish`` live in one function, ``pipeline/load.merge``;
+every other writer passes it a build step.
+
+All three guards parse source only and start no Spark session.
 """
 
 from __future__ import annotations
@@ -284,3 +288,73 @@ def test_every_optional_parameter_is_passed_by_some_call():
         "optional parameters no call passes (fold the default into the "
         f"body, or give the parameter a caller): {unpassed}"
     )
+
+
+PROTOCOL_MODULE = "pipeline/load.py"
+PROTOCOL_FUNCTION = "merge"
+
+
+def protocol_uses(tree: ast.Module) -> list[tuple[str | None, str]]:
+    """(enclosing top-level function or None, what) for each use of the
+    publish protocol in ``tree``: a name, attribute or import of
+    ``atomic_publish`` or ``claim_batch``, and each read of a
+    ``.batch_id`` attribute."""
+    uses: list[tuple[str | None, str]] = []
+    for top in tree.body:
+        owner = top.name if isinstance(top, FUNCS) else None
+        for n in ast.walk(top):
+            if isinstance(n, ast.Name):
+                name = n.id
+            elif isinstance(n, ast.Attribute):
+                name = n.attr
+            elif isinstance(n, ast.alias):
+                name = n.name.split(".")[-1]
+            else:
+                continue
+            if name in ("atomic_publish", "claim_batch") or (
+                name == "batch_id" and isinstance(n, ast.Attribute)
+            ):
+                uses.append((owner, name))
+    return uses
+
+
+def protocol_outside_merge() -> list[str]:
+    """Uses of the publish protocol anywhere but the body of
+    ``load.merge`` (defining ``atomic_publish`` is not a use)."""
+    out = []
+    for rel, _, tree in _package_modules():
+        for owner, name in protocol_uses(tree):
+            if rel != PROTOCOL_MODULE or owner != PROTOCOL_FUNCTION:
+                out.append(f"{rel}:{owner}:{name}")
+    return out
+
+
+def test_protocol_uses_reads_code():
+    tree = ast.parse(
+        "from m import atomic_publish as ap\n"
+        "def merge(b, cur):\n"
+        "    '''atomic_publish claim_batch batch_id'''\n"
+        "    if cur.batch_id == b:\n"
+        "        return\n"
+        "    atomic_publish(b)\n"
+        "def step(batch_id):\n"
+        "    return load.claim_batch(batch_id)\n"
+    )
+    assert protocol_uses(tree) == [
+        (None, "atomic_publish"), ("merge", "batch_id"),
+        ("merge", "atomic_publish"), ("step", "claim_batch"),
+    ]
+
+
+def test_publish_protocol_lives_in_load_merge():
+    """No package module but ``pipeline/load.py`` names ``atomic_publish``
+    or reads a published batch id, and within it only ``merge`` does:
+    it reads the current version and publishes the next exactly once."""
+    assert protocol_outside_merge() == []
+    tree = ast.parse((PKG / PROTOCOL_MODULE).read_text())
+    (merge,) = [n for n in tree.body
+                if isinstance(n, FUNCS) and n.name == PROTOCOL_FUNCTION]
+    calls = [c.func.id for c in ast.walk(merge)
+             if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)]
+    assert calls.count("read_published") == 1
+    assert calls.count("atomic_publish") == 1

@@ -73,7 +73,7 @@ def test_streaming_rollup_converges_to_full_recompute(spark, tmp_path):
         TimestampNTZType,
     )
 
-    from mbta_etl_spark.streaming.rollup import start_rollup_stream
+    from mbta_etl_spark.pipeline.load import merge_stream
 
     schema = StructType([
         StructField("event_id", LongType()),
@@ -94,7 +94,11 @@ def test_streaming_rollup_converges_to_full_recompute(spark, tmp_path):
 
     def drain():
         stream = spark.readStream.schema(schema).json(str(src))
-        q = start_rollup_stream(stream, table, ckpt)
+        q = (
+            merge_stream(stream, table, ckpt, ru.rollup_step(["event_type"]))
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination(120)
 
     write_batch("b1.jsonl", ROWS[:3])
@@ -188,22 +192,23 @@ def test_cms_rollup_one_sided_error_and_merge_algebra(spark):
 
 def test_merge_rollup_batch_redelivery_is_exactly_once(spark, tmp_path):
     """foreachBatch is at-least-once: a crash between table publish and
-    checkpoint commit redelivers the same batch id. The batch-id marker
+    checkpoint commit redelivers the same batch id. The batch id
     published atomically with the data must make the redelivered merge
-    a no-op — without it, cnt/sum double-count."""
-    from mbta_etl_spark.streaming.rollup import merge_rollup_batch
+    of the rollup step a no-op — without it, cnt/sum double-count."""
+    from mbta_etl_spark.pipeline.load import merge
 
     table = str(tmp_path / "rollup")
+    step = ru.rollup_step(["event_type"])
     b0 = _events_df(spark, ROWS[:3])
     b1 = _events_df(spark, ROWS[3:])
-    merge_rollup_batch(b0, 0, table, ["event_type"])
+    merge(b0, table, 0, step)
     once = _canon(spark.read.parquet(table))
-    merge_rollup_batch(b0, 0, table, ["event_type"])  # redelivery
+    merge(b0, table, 0, step)  # redelivery
     assert _canon(spark.read.parquet(table)) == once
-    merge_rollup_batch(b1, 1, table, ["event_type"])  # next batch merges
+    merge(b1, table, 1, step)  # next batch merges
     after = _canon(spark.read.parquet(table))
     assert after != once
-    merge_rollup_batch(b1, 1, table, ["event_type"])  # redelivery again
+    merge(b1, table, 1, step)  # redelivery again
     assert _canon(spark.read.parquet(table)) == after
 
 
@@ -211,15 +216,16 @@ def test_claim_batch_raises_on_id_regression(spark, tmp_path):
     """A batch id BEHIND the published one cannot be a redelivery (only
     the single committed id replays) — it means the checkpoint was
     wiped or a fresh stream was pointed at an old table. Treating it as
-    redelivery would silently drop new data; the guard must fail loudly
-    instead."""
+    redelivery would silently drop new data; the rollup merge must fail
+    loudly instead, and leave the published rollup as it was."""
     import pytest
 
-    from mbta_etl_spark.streaming.rollup import merge_rollup_batch
+    from mbta_etl_spark.pipeline.load import merge
 
     table = str(tmp_path / "rollup")
-    merge_rollup_batch(_events_df(spark, ROWS[:3]), 5, table, ["event_type"])
+    step = ru.rollup_step(["event_type"])
+    merge(_events_df(spark, ROWS[:3]), table, 5, step)
+    before = _canon(spark.read.parquet(table))
     with pytest.raises(RuntimeError, match="lineage break"):
-        merge_rollup_batch(
-            _events_df(spark, ROWS[3:]), 2, table, ["event_type"]
-        )
+        merge(_events_df(spark, ROWS[3:]), table, 2, step)
+    assert _canon(spark.read.parquet(table)) == before

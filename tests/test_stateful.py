@@ -84,25 +84,24 @@ def test_stateful_profile_accumulates_across_batches(spark, tmp_path):
     assert latest[3]["sum_value"] == 9.0
 
 
-def test_profile_stream_split_invariant_and_idempotent(spark, tmp_path):
+def test_profile_stream_split_invariant(spark, tmp_path):
     """st07's harness: the standing table produced by
-    start_profile_stream (GroupState fold + last-write-wins merge)
-    equals the one-shot batch aggregate REGARDLESS of how the replay
-    splits — including keys spanning micro-batches, the cross-batch
-    state path — and a redelivered batch id is skipped by the shared
-    claim_batch guard instead of double-merging."""
+    user_profile_stream merged through load.merge_stream with
+    replace_profiles (GroupState fold + last-write-wins merge) equals
+    the one-shot batch aggregate REGARDLESS of how the replay splits —
+    including keys spanning micro-batches, the cross-batch state path.
+    (Redelivery: tests/test_pipeline.py::
+    test_merge_is_exactly_once_per_batch_id.)"""
     import datetime as dt
 
     from pyspark.sql import functions as F
 
+    from mbta_etl_spark.pipeline.load import merge_stream
     from mbta_etl_spark.streaming.replay import (
         land_replay_log,
         open_replay_stream,
     )
-    from mbta_etl_spark.streaming.stateful import (
-        merge_profile_batch,
-        start_profile_stream,
-    )
+    from mbta_etl_spark.streaming.stateful import replace_profiles
 
     rows = [
         # user 1 spans all batches at n=4 (event_ids 0..3)
@@ -130,15 +129,19 @@ def test_profile_stream_split_invariant_and_idempotent(spark, tmp_path):
         stream = open_replay_stream(spark, in_dir, src.schema).select(
             "user_id", "ts", "value"
         )
-        q = start_profile_stream(stream, table, ckpt, available_now=True)
+        q = (
+            merge_stream(user_profile_stream(stream), table, ckpt, replace_profiles)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination()
-        return table, {
+        return {
             r.user_id: (r.n_events, r.sum_value, r.last_ts)
             for r in spark.read.parquet(table).collect()
         }
 
-    table4, split4 = _run(4, "n4")
-    _, split1 = _run(1, "n1")
+    split4 = _run(4, "n4")
+    split1 = _run(1, "n1")
     expected = {
         1: (4, 17.5, dt.datetime(2024, 1, 1, 11, 0)),
         2: (2, 5.0, dt.datetime(2024, 1, 2, 9, 0)),
@@ -146,17 +149,6 @@ def test_profile_stream_split_invariant_and_idempotent(spark, tmp_path):
     }
     assert split4 == expected
     assert split1 == expected
-
-    # redelivery of the committed batch id must be a silent no-op
-    bogus = spark.createDataFrame(
-        [(1, 999, 999.0, dt.datetime(2030, 1, 1))],
-        "user_id long, n_events long, sum_value double, last_ts timestamp_ntz",
-    )
-    merge_profile_batch(bogus, 3, table4)  # last committed id at n=4
-    assert {
-        r.user_id: (r.n_events, r.sum_value, r.last_ts)
-        for r in spark.read.parquet(table4).collect()
-    } == expected
 
 
 def test_stateful_profile_rocksdb_state_store(spark, tmp_path):

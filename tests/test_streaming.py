@@ -39,6 +39,16 @@ def _snapshot(vid, speed, updated_at="2024-01-15T10:30:00-05:00"):
     }
 
 
+def _drain_upsert_stream(spark, snap_dir, table, ckpt):
+    q = (
+        run_upsert_stream(spark, str(snap_dir), table, ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    drain_query(q)
+    return q
+
+
 def test_streaming_upsert_end_to_end(spark, tmp_path):
     snap_dir = tmp_path / "snapshots"
     snap_dir.mkdir()
@@ -49,8 +59,7 @@ def test_streaming_upsert_end_to_end(spark, tmp_path):
         f.write(json.dumps(_snapshot("veh-A", 10.0)) + "\n")
         f.write(json.dumps(_snapshot("veh-B", 20.0)) + "\n")
 
-    q = run_upsert_stream(spark, str(snap_dir), table, ckpt, available_now=True)
-    drain_query(q)
+    q = _drain_upsert_stream(spark, snap_dir, table, ckpt)
     out = {r["id"]: r["speed"] for r in spark.read.parquet(table).collect()}
     assert out == {"veh-A": 10.0, "veh-B": 20.0}
 
@@ -60,11 +69,39 @@ def test_streaming_upsert_end_to_end(spark, tmp_path):
         f.write(json.dumps(_snapshot("veh-A", 55.0)) + "\n")
         f.write(json.dumps(_snapshot("veh-C", 30.0)) + "\n")
 
-    q = run_upsert_stream(spark, str(snap_dir), table, ckpt, available_now=True)
-    drain_query(q)
+    q = _drain_upsert_stream(spark, snap_dir, table, ckpt)
     out = {r["id"]: r["speed"] for r in spark.read.parquet(table).collect()}
     assert out == {"veh-A": 55.0, "veh-B": 20.0, "veh-C": 30.0}
 
+
+
+def test_upsert_stream_is_exactly_once_in_one_job_per_batch(spark, tmp_path):
+    """A micro-batch of the upsert stream is one Spark job, the upsert's
+    write (no emptiness check ahead of it), and the version it publishes
+    records the micro-batch id, so a redelivery of that id is skipped:
+    merged again, its rows would replace the stored ones."""
+    import os
+
+    from mbta_etl_spark.pipeline.load import merge, read_published, upsert_step
+
+    snap_dir = tmp_path / "snapshots"
+    snap_dir.mkdir()
+    table = str(tmp_path / "vehicles")
+    with open(snap_dir / "s1.jsonl", "w") as f:
+        f.write(json.dumps(_snapshot("veh-A", 10.0)) + "\n")
+
+    q = _drain_upsert_stream(spark, snap_dir, table, str(tmp_path / "ckpt"))
+    tracker = spark.sparkContext.statusTracker()
+    assert len(tracker.getJobIdsForGroup(str(q.runId))) == 1
+    published = read_published(spark, table)
+    assert published.batch_id == 0
+
+    version = os.path.realpath(table)
+    rows = [tuple(r) for r in published.df.collect()]
+    redelivered = published.df.withColumn("speed", F.lit(99.0))
+    merge(redelivered, table, 0, upsert_step)
+    assert os.path.realpath(table) == version
+    assert [tuple(r) for r in read_published(spark, table).df.collect()] == rows
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     """First arrival of each event_id is emitted; a later re-delivery in a
